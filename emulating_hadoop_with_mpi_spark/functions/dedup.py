@@ -42,8 +42,9 @@ Splitting it — JVM groupBy does only collect_set, then one Arrow batch
 pass computes all 128 mins with ``np.minimum.reduceat`` over the flat
 values buffer — produces bit-identical signatures (same xxhash64 input,
 same (a·x+b) mod p in int64) and measured 1.6-2.0× on the stage and on
-q73 end-to-end at sf0.1/sf1/sf10 (tools/ab_minhash.py, EQUAL at every
-SF; guide §4.2's batch-native-library pattern).
+q73 end-to-end at sf0.1/sf1/sf10 (EQUAL at every SF; OPTIMIZATION_r17.md
+§2, A/B script removed after 221c068; guide §4.2's batch-native-library
+pattern).
 """
 
 from __future__ import annotations
@@ -724,14 +725,11 @@ def _perm_constants(num_perm: int) -> list[tuple[int, int]]:
     return consts
 
 
-def _sig_batches_fn(num_perm: int, shift: bool, carry_set: bool):
-    """Arrow-batch MinHash kernel: (doc_id, <set column>) batches →
-    (doc_id[, shset], h0..h{num_perm-1}).
-
-    ``shift``: the set holds full 64-bit shingle hashes (sh) and the
-    permutation input is their top 32 bits; False means the set already
-    holds the 32-bit-shifted values.  ``carry_set``: pass the set column
-    through (minhash_combined's shset contract).
+def _sig_batches_fn(num_perm: int):
+    """Arrow-batch MinHash kernel: (doc_id, shset) batches →
+    (doc_id, shset, h0..h{num_perm-1}).  ``shset`` holds full 64-bit
+    shingle hashes; the permutation input is their top 32 bits, and the
+    set is passed through (minhash_combined's verify frame).
 
     Values are bit-identical to the JVM formulation: same int64
     (a·x + b) mod MERSENNE_31 (a·x + b < 2⁶³ — no overflow, module
@@ -759,13 +757,9 @@ def _sig_batches_fn(num_perm: int, shift: bool, carry_set: bool):
             # reduceat's final segment ends at the last row's end.
             vals = la.values.to_numpy(zero_copy_only=False)[: offs[-1]]
             starts = offs[:-1]
-            h = (
-                (vals.astype(np.uint64) >> np.uint64(32)).astype(np.int64)
-                if shift
-                else vals
-            )
-            cols = [ids, la] if carry_set else [ids]
-            names = ["doc_id", "shset"] if carry_set else ["doc_id"]
+            h = (vals.astype(np.uint64) >> np.uint64(32)).astype(np.int64)
+            cols = [ids, la]
+            names = ["doc_id", "shset"]
             for i in range(num_perm):
                 y = (h * a_c[i] + b_c[i]) % MERSENNE_31
                 cols.append(pa.array(np.minimum.reduceat(y, starts), type=pa.int64()))
@@ -786,9 +780,9 @@ def minhash_signatures(ds: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
 
     Round 18 (VERDICT r17 item 2 closed with data): r17 briefly switched
     this standalone entry to the collect_set + Arrow-kernel form shared
-    with minhash_combined; measured A/B (tools/ab_sigs.py) showed the
-    set shuffle is a REGRESSION for the standalone builder — 7.9 vs
-    35.8 s at sf10 (500 k docs; the per-doc set crosses the shuffle AND
+    with minhash_combined; a measured A/B (OPTIMIZATION_r18.md §3)
+    showed the set shuffle is a REGRESSION for the standalone builder —
+    7.9 vs 35.8 s at sf10 (500 k docs; the per-doc set crosses the shuffle AND
     the Python boundary for nothing a signature-only caller uses) and
     1.00 vs 1.62 s on a 4000-distinct-shingle/doc long-doc corpus
     (partial state grows O(distinct shingles/doc) through the shuffle)
@@ -798,9 +792,8 @@ def minhash_signatures(ds: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
     incremental dedup); minhash_combined keeps the kernel — its groupBy
     must collect the set anyway for the verify frame, so the kernel mins
     there are strictly cheaper than the former 129-aggregate
-    ObjectHashAggregate.  The kernel twin is retained as
-    _minhash_signatures_kernel (equality pinned at three SFs + the
-    synthetic long-doc corpus)."""
+    ObjectHashAggregate.  The kernel form of this entry was removed
+    after 221c068."""
     consts = _perm_constants(num_perm)
     hashed = ds.select(
         "doc_id", F.shiftrightunsigned(F.xxhash64("shingle"), 32).alias("h")
@@ -812,20 +805,6 @@ def minhash_signatures(ds: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
             ).alias(f"h{i}")
             for i, (a, b) in enumerate(consts)
         ]
-    )
-
-
-def _minhash_signatures_kernel(ds: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """The r17 collect_set + Arrow-kernel formulation of
-    :func:`minhash_signatures`, retained as its equality twin and for
-    corpora whose signature stage is CPU- rather than shuffle-bound."""
-    hashed = ds.select(
-        "doc_id", F.shiftrightunsigned(F.xxhash64("shingle"), 32).alias("h")
-    )
-    sets = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("hset"))
-    schema = "doc_id bigint, " + ", ".join(f"h{i} bigint" for i in range(num_perm))
-    return sets.mapInArrow(
-        _sig_batches_fn(num_perm, shift=False, carry_set=False), schema
     )
 
 
@@ -882,9 +861,7 @@ def minhash_combined(docs: DataFrame) -> DataFrame:
     schema = "doc_id bigint, shset array<bigint>, " + ", ".join(
         f"h{i} bigint" for i in range(NUM_PERM)
     )
-    return sets.mapInArrow(
-        _sig_batches_fn(NUM_PERM, shift=True, carry_set=True), schema
-    ).cache()
+    return sets.mapInArrow(_sig_batches_fn(NUM_PERM), schema).cache()
 
 
 def minhash_verified_pairs(

@@ -260,150 +260,14 @@ def q80_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats(canary).unionByName(stats(docs.orderBy("doc_id")))
 
 
-def _tstats_batches_fn(extra_names: list[str]):
-    """Arrow-batch token-stats kernel (round 18, guide §4.2): batches of
-    (doc_id, lang, text, <extras>) → the same rows with n_tokens /
-    n_uniq_tokens / n_chars / n_bpe_tokens computed vectorized and the
-    extras passed through untouched (q80's PII counts are JVM regex
-    columns computed in the projection FEEDING the kernel).  The former
-    Catalyst form paid an interpreted filter lambda per token plus an
-    array_distinct and a full Java-regex scan for the BPE count; here
-    tokens come from one Python split, distinct counts from dictionary
-    codes, and the BPE count from byte-class run arithmetic — the regex
-    ``[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]`` counts letter runs + digit runs
-    + every other non-whitespace CHARACTER, which over UTF-8 bytes is
-    (letter-run starts) + (digit-run starts) + (non-continuation bytes
-    outside all three classes).  Bit-identical to the retained
-    _token_stats_jvm twin (tests/test_tstats_kernel.py).  Self-contained
-    closure — no module-function references (workers need not import
-    this package)."""
-    ws_re = _JAVA_WS_RE
-
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            names = batch.schema.names
-            text_arr = batch.column(names.index("text"))
-            if text_arr.null_count:
-                raise ValueError(
-                    "token-stats kernel: null text (upstream contract is non-null)"
-                )
-            bufs = text_arr.buffers()
-            off_dtype = (
-                np.int64 if pa.types.is_large_string(text_arr.type) else np.int32
-            )
-            offs = np.frombuffer(bufs[1], dtype=off_dtype)[
-                text_arr.offset : text_arr.offset + n + 1
-            ].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8)[offs[0] : offs[-1]]
-            ends = offs - offs[0]
-
-            def seg_sums(mask):
-                cs = np.zeros(mask.size + 1, dtype=np.int64)
-                np.cumsum(mask, out=cs[1:])
-                return cs[ends[1:]] - cs[ends[:-1]]
-
-            n_chars = seg_sums((data & 0xC0) != 0x80)
-            m_letter = ((data >= 65) & (data <= 90)) | ((data >= 97) & (data <= 122))
-            m_digit = (data >= 48) & (data <= 57)
-            # Java \s = [ \t\n\x0b\f\r]
-            m_ws = (
-                (data == 32) | (data == 9) | (data == 10)
-                | (data == 11) | (data == 12) | (data == 13)
-            )
-            m_cont = (data & 0xC0) == 0x80
-            m_other = ~(m_letter | m_digit | m_ws | m_cont)
-            # run starts: class set AND previous byte not in the class,
-            # with every row's first byte counting as a fresh start
-            def run_starts(mask):
-                prev = np.concatenate(([False], mask[:-1]))
-                prev[ends[:-1][ends[:-1] < prev.size]] = False
-                return mask & ~prev
-
-            n_bpe = (
-                seg_sums(run_starts(m_letter))
-                + seg_sums(run_starts(m_digit))
-                + seg_sums(m_other)
-            )
-
-            texts = text_arr.to_pylist()
-            flat: list = []
-            counts = np.empty(n, dtype=np.int64)
-            for i, t in enumerate(texts):
-                tk = [w for w in ws_re.split(t.lower()) if w]
-                counts[i] = len(tk)
-                flat.extend(tk)
-            tok_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(counts, out=tok_off[1:])
-            if flat:
-                enc = pa.array(flat, type=pa.string()).dictionary_encode()
-                codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-                k = max(len(enc.dictionary), 1)
-                if counts.size * k >= (1 << 62):
-                    raise ValueError(
-                        "token-stats kernel: batch too large for int64 keys"
-                    )
-                row_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
-                uniq_keys = np.unique(row_ids * k + codes)
-                n_uniq = np.bincount((uniq_keys // k).astype(np.int64), minlength=n)
-            else:
-                n_uniq = np.zeros(n, dtype=np.int64)
-
-            cols = [
-                batch.column(names.index("doc_id")),
-                batch.column(names.index("lang")),
-                pa.array(counts, type=pa.int32()),
-                pa.array(n_uniq.astype(np.int64), type=pa.int32()),
-                pa.array(n_chars, type=pa.int32()),
-                pa.array(n_bpe, type=pa.int32()),
-            ] + [batch.column(names.index(e)) for e in extra_names]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                names=["doc_id", "lang", "n_tokens", "n_uniq_tokens", "n_chars",
-                       "n_bpe_tokens"] + list(extra_names),
-            )
-
-    return gen
-
-
-def _token_stats_kernel(
-    docs: DataFrame,
-    extra_cols: list | tuple = (),
-) -> DataFrame:
-    """Arrow-kernel formulation of :func:`token_stats` — MEASURED
-    NEGATIVE as the public path (round 18): at the q80 body level the
-    two forms tie (interleaved min-of-3 at sf0.1: 0.61 vs 0.66 s with
-    the PII extras, 0.39 vs 0.32 s without — the counts are cheap
-    built-ins plus one Java-regex scan, no interpreted per-element
-    aggregate for the kernel to remove), and q80's 1-row canary branch
-    pays a Python stage spin-up the JVM projection does not (q80
-    end-to-end 1.29 vs 0.79 s).  Retained with its equality pin
-    (tests/test_tstats_kernel.py) as the documented negative and for
-    corpora whose extras-free token pass dominates."""
-    staged = docs.select("doc_id", "lang", "text", *extra_cols)
-    extra_names = [c for c in staged.columns if c not in ("doc_id", "lang", "text")]
-    extra_ddl = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in staged.schema.fields
-        if f.name in extra_names
-    )
-    return staged.mapInArrow(
-        _tstats_batches_fn(extra_names),
-        "doc_id bigint, lang string, n_tokens int, n_uniq_tokens int, "
-        "n_chars int, n_bpe_tokens int" + extra_ddl,
-    )
-
-
 def token_stats(
     docs: DataFrame,
     extra_cols: list | tuple = (),
 ) -> DataFrame:
     """q80's body over any (doc_id, lang, text) frame; ``extra_cols``
     are appended to the same single projection (q80's PII section).
-    Stays all-Catalyst on purpose — see _token_stats_kernel for the
-    measured negative."""
+    Stays all-Catalyst on purpose: an Arrow-kernel form measured no
+    faster (OPTIMIZATION_r18.md §7, removed after 221c068)."""
     # materialize the token array once (tokens_col() per expression would
     # re-split the text; see shingles_df note in dedup.py)
     staged = docs.select(
@@ -577,10 +441,10 @@ def q81_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JAVA_WS_RE = _re.compile("[ \t\n\x0b\f\r]+")
 
 
-def _qfeat_batches_fn(full: bool, keep_text: bool):
+def _qfeat_batches_fn(keep_text: bool):
     """mapInArrow generator over (doc_id, text) batches → per-doc count
-    columns (n_chars, n_tokens, n_alpha, n_digit, n_stop and — ``full``
-    — max_word, top2, n2, n3, d3), all bigint.  Bit-identical to the
+    columns (n_chars, n_tokens, n_alpha, n_digit, n_stop, max_word, top2,
+    n2, n3, d3), all bigint.  Bit-identical to the
     former Catalyst formulation: same Java-\\s tokenization of
     lower(text) with empties dropped, ASCII [a-zA-Z]/[0-9] class counts,
     length() = codepoint count (UTF-8 non-continuation bytes), exact
@@ -669,6 +533,47 @@ def _qfeat_batches_fn(full: bool, keep_text: bool):
                 stop_flag[codes] if codes.size else np.zeros(0, dtype=bool), tok_off
             )
 
+            # int64 composite keys: guard the (rows × dict) products
+            # loudly (a 10k-row batch over any real vocabulary is
+            # orders of magnitude below this)
+            lim = 1 << 62
+            if codes.size >= (1 << 31) or n * k >= lim or k * k >= lim:
+                raise ValueError("quality kernel: batch too large for int64 keys")
+            row_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
+            max_word = seg_mode(row_ids, codes, k, n)
+            pos = np.arange(codes.size, dtype=np.int64)
+            has_next = (
+                (pos + 1) < tok_off[row_ids + 1]
+                if codes.size
+                else np.zeros(0, dtype=bool)
+            )
+            b_idx = np.flatnonzero(has_next)
+            # bigram code = dense rank of (code, next code) pairs
+            pk = codes[b_idx] * k + codes[b_idx + 1]
+            up, pinv = np.unique(pk, return_inverse=True)
+            kp = max(len(up), 1)
+            if n * kp >= lim or kp * k >= lim:
+                raise ValueError("quality kernel: batch too large for int64 keys")
+            top2 = seg_mode(row_ids[b_idx], pinv, kp, n)
+            # trigram distincts: (bigram rank at i, code at i+2)
+            has_next2 = (
+                (pos + 2) < tok_off[row_ids + 1]
+                if codes.size
+                else np.zeros(0, dtype=bool)
+            )
+            t_idx = np.flatnonzero(has_next2)
+            pinv_at = np.full(codes.size, -1, dtype=np.int64)
+            pinv_at[b_idx] = pinv
+            tk_key = pinv_at[t_idx] * k + codes[t_idx + 2]
+            ut = np.unique(tk_key)
+            tinv = np.searchsorted(ut, tk_key)
+            kt = max(len(ut), 1)
+            if n * kt >= lim:
+                raise ValueError("quality kernel: batch too large for int64 keys")
+            trikey = row_ids[t_idx] * kt + tinv
+            utk = np.unique(trikey)
+            d3 = np.bincount((utk // kt).astype(np.int64), minlength=n)
+
             cols = [ids] + ([batch.column(names.index("text"))] if keep_text else [])
             out_names = ["doc_id"] + (["text"] if keep_text else [])
             by_name = {
@@ -677,80 +582,46 @@ def _qfeat_batches_fn(full: bool, keep_text: bool):
                 "n_alpha": n_alpha,
                 "n_digit": n_digit,
                 "n_stop": n_stop,
+                "max_word": max_word,
+                "top2": top2,
+                "n2": np.maximum(counts - 1, 0),
+                "n3": np.maximum(counts - 2, 0),
+                "d3": d3.astype(np.int64),
             }
-            if full:
-                # int64 composite keys: guard the (rows × dict) products
-                # loudly (a 10k-row batch over any real vocabulary is
-                # orders of magnitude below this)
-                lim = 1 << 62
-                if codes.size >= (1 << 31) or n * k >= lim or k * k >= lim:
-                    raise ValueError("quality kernel: batch too large for int64 keys")
-                row_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
-                max_word = seg_mode(row_ids, codes, k, n)
-                pos = np.arange(codes.size, dtype=np.int64)
-                has_next = (
-                    (pos + 1) < tok_off[row_ids + 1]
-                    if codes.size
-                    else np.zeros(0, dtype=bool)
-                )
-                b_idx = np.flatnonzero(has_next)
-                # bigram code = dense rank of (code, next code) pairs
-                pk = codes[b_idx] * k + codes[b_idx + 1]
-                up, pinv = np.unique(pk, return_inverse=True)
-                kp = max(len(up), 1)
-                if n * kp >= lim or kp * k >= lim:
-                    raise ValueError("quality kernel: batch too large for int64 keys")
-                top2 = seg_mode(row_ids[b_idx], pinv, kp, n)
-                # trigram distincts: (bigram rank at i, code at i+2)
-                has_next2 = (
-                    (pos + 2) < tok_off[row_ids + 1]
-                    if codes.size
-                    else np.zeros(0, dtype=bool)
-                )
-                t_idx = np.flatnonzero(has_next2)
-                pinv_at = np.full(codes.size, -1, dtype=np.int64)
-                pinv_at[b_idx] = pinv
-                tk_key = pinv_at[t_idx] * k + codes[t_idx + 2]
-                ut = np.unique(tk_key)
-                tinv = np.searchsorted(ut, tk_key)
-                kt = max(len(ut), 1)
-                if n * kt >= lim:
-                    raise ValueError("quality kernel: batch too large for int64 keys")
-                trikey = row_ids[t_idx] * kt + tinv
-                utk = np.unique(trikey)
-                d3 = np.bincount((utk // kt).astype(np.int64), minlength=n)
-                by_name.update(
-                    {
-                        "max_word": max_word,
-                        "top2": top2,
-                        "n2": np.maximum(counts - 1, 0),
-                        "n3": np.maximum(counts - 2, 0),
-                        "d3": d3.astype(np.int64),
-                    }
-                )
-                order = [
-                    "n_chars", "n_tokens", "n_alpha", "n_digit", "n_stop",
-                    "max_word", "top2", "n2", "n3", "d3",
-                ]
-            else:
-                order = ["n_chars", "n_tokens", "n_alpha", "n_stop"]
-            for name in order:
-                cols.append(pa.array(by_name[name], type=pa.int64()))
+            for name, values in by_name.items():
+                cols.append(pa.array(values, type=pa.int64()))
                 out_names.append(name)
             yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
     return gen
 
 
-def _qfeat_schema(full: bool, keep_text: bool) -> str:
-    counts = (
-        ["n_chars", "n_tokens", "n_alpha", "n_digit", "n_stop",
-         "max_word", "top2", "n2", "n3", "d3"]
-        if full
-        else ["n_chars", "n_tokens", "n_alpha", "n_stop"]
-    )
+def _qfeat_schema(keep_text: bool) -> str:
+    counts = ["n_chars", "n_tokens", "n_alpha", "n_digit", "n_stop",
+              "max_word", "top2", "n2", "n3", "d3"]
     cols = ["doc_id bigint"] + (["text string"] if keep_text else [])
     return ", ".join(cols + [f"{c} bigint" for c in counts])
+
+
+def _with_quality(feats: DataFrame) -> DataFrame:
+    """``feats`` plus the integer-exact ``quality`` column (see the
+    oracle comment): scaled weights and integer division (`div`), immune
+    to cross-engine float-rounding midpoints.  Reads n_alpha, n_stop,
+    n_chars and n_tokens."""
+    staged = feats.withColumn(
+        "q_num",
+        500000 * F.col("n_alpha") * F.col("n_tokens")
+        + 300000 * F.col("n_stop") * F.col("n_chars")
+        + F.when(
+            F.col("n_tokens") >= 20, 200000 * F.col("n_chars") * F.col("n_tokens")
+        ).otherwise(F.lit(0)),
+    ).withColumn("q_den", F.col("n_chars") * F.col("n_tokens"))
+    return staged.withColumn(
+        "quality",
+        F.when(F.col("q_den") == 0, F.lit(0.0)).otherwise(
+            F.expr("CAST(q_num div q_den AS DOUBLE)") / 1000000
+        ),
+    )
 
 
 def _quality_ratio_projection(feats: DataFrame, keep_text: bool) -> DataFrame:
@@ -763,20 +634,7 @@ def _quality_ratio_projection(feats: DataFrame, keep_text: bool) -> DataFrame:
     max_word_r = _ratio(F.col("max_word"), F.col("n_tokens"))
     top2_r = _ratio(F.col("top2"), F.col("n2"))
     dup3_r = _ratio(F.col("n3") - F.col("d3"), F.col("n3"))
-    # Integer-exact quality (see oracle comment): scaled weights, integer
-    # division (`div`) — immune to cross-engine float-rounding midpoints.
-    staged = feats.withColumn(
-        "q_num",
-        500000 * F.col("n_alpha") * F.col("n_tokens")
-        + 300000 * F.col("n_stop") * F.col("n_chars")
-        + F.when(
-            F.col("n_tokens") >= 20, 200000 * F.col("n_chars") * F.col("n_tokens")
-        ).otherwise(F.lit(0)),
-    ).withColumn("q_den", F.col("n_chars") * F.col("n_tokens"))
-    quality = F.when(F.col("q_den") == 0, F.lit(0.0)).otherwise(
-        F.expr("CAST(q_num div q_den AS DOUBLE)") / 1000000
-    )
-    return staged.select(
+    return _with_quality(feats).select(
         "doc_id",
         *(["text"] if keep_text else []),
         "n_chars",
@@ -787,29 +645,7 @@ def _quality_ratio_projection(feats: DataFrame, keep_text: bool) -> DataFrame:
         max_word_r.alias("max_word_frac"),
         top2_r.alias("top_bigram_frac"),
         dup3_r.alias("dup_trigram_frac"),
-        quality.alias("quality"),
-    )
-
-
-def _quality_gate_projection(feats: DataFrame, keep_text: bool) -> DataFrame:
-    """The (n_tokens, quality) projection over a gate count frame —
-    shared by the kernel path and the retained JVM twin."""
-    staged = feats.withColumn(
-        "q_num",
-        500000 * F.col("n_alpha") * F.col("n_tokens")
-        + 300000 * F.col("n_stop") * F.col("n_chars")
-        + F.when(
-            F.col("n_tokens") >= 20, 200000 * F.col("n_chars") * F.col("n_tokens")
-        ).otherwise(F.lit(0)),
-    ).withColumn("q_den", F.col("n_chars") * F.col("n_tokens"))
-    quality = F.when(F.col("q_den") == 0, F.lit(0.0)).otherwise(
-        F.expr("CAST(q_num div q_den AS DOUBLE)") / 1000000
-    )
-    return staged.select(
-        "doc_id",
-        *(["text"] if keep_text else []),
-        "n_tokens",
-        quality.alias("quality"),
+        "quality",
     )
 
 
@@ -828,8 +664,7 @@ def quality_scores(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     formulation (pinned in tests/test_quality_kernel.py against the
     retained _quality_scores_jvm twin)."""
     feats = docs.select("doc_id", "text").mapInArrow(
-        _qfeat_batches_fn(full=True, keep_text=keep_text),
-        _qfeat_schema(full=True, keep_text=keep_text),
+        _qfeat_batches_fn(keep_text), _qfeat_schema(keep_text)
     )
     return _quality_ratio_projection(feats, keep_text)
 
@@ -888,23 +723,6 @@ def _quality_scores_jvm(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     return _quality_ratio_projection(feats, keep_text)
 
 
-def _quality_gate_scores_kernel(docs: DataFrame, keep_text: bool = False) -> DataFrame:
-    """Arrow-kernel formulation of :func:`quality_gate_scores` —
-    MEASURED NEGATIVE as the public path (round 18): the gate subset has
-    none of the repetition features whose interpreted HOF lambdas the
-    kernel removes, so the Python boundary costs more than it saves
-    (interleaved min-of-reps: 0.295 vs 0.433 s at sf0.1, 0.678 vs
-    1.024 s at sf1 — the JVM form wins ~1.5× at both SFs and scales the
-    same).  Retained (with its equality pin in
-    tests/test_quality_kernel.py) as the documented negative result and
-    for re-evaluation on corpora whose stopword filter dominates."""
-    feats = docs.select("doc_id", "text").mapInArrow(
-        _qfeat_batches_fn(full=False, keep_text=keep_text),
-        _qfeat_schema(full=False, keep_text=keep_text),
-    )
-    return _quality_gate_projection(feats, keep_text)
-
-
 def quality_gate_scores(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     """(doc_id[, text], n_tokens, quality): the gate/budget SUBSET of
     :func:`quality_scores` — bit-identical integer-exact ``quality`` and
@@ -915,8 +733,9 @@ def quality_gate_scores(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     columns; Catalyst prunes the unused feature columns at optimization
     anyway, but the full forest still costs py4j construction and
     analysis per build (~1 s/call).  ``keep_text`` as in
-    quality_scores.  Stays all-Catalyst on purpose — see
-    _quality_gate_scores_kernel for the measured negative."""
+    quality_scores.  Stays all-Catalyst on purpose: the Arrow-kernel form
+    of this subset measured ~1.5× slower (OPTIMIZATION_r18.md §1,
+    "Negative half"; removed after 221c068)."""
     staged0 = docs.select(
         "doc_id",
         "text",
@@ -932,7 +751,9 @@ def quality_gate_scores(docs: DataFrame, keep_text: bool = False) -> DataFrame:
         F.length(F.regexp_replace("text", "[^a-zA-Z]", "")).cast("bigint").alias("n_alpha"),
         F.size(F.filter("toks", lambda x: x.isin(*ALL_STOPWORDS))).cast("bigint").alias("n_stop"),
     )
-    return _quality_gate_projection(feats, keep_text)
+    return _with_quality(feats).select(
+        "doc_id", *(["text"] if keep_text else []), "n_tokens", "quality"
+    )
 
 
 def _lang_score_sql(lang: str) -> str:

@@ -6,7 +6,7 @@ across all i, keyed by output coordinate "(i,k)" with tagged values
 "(A,j,v)" / "(B,j,v)" (``program.c:184-222``); the reducer walks each key's
 value list pairwise accumulating ``sum += a*b`` (``program.c:415-445``).
 
-Three formulations here:
+Five formulations here:
 
 - ``matmul_coo`` (idiomatic, DEFAULT): the (i,k)-keyed tagged emit is a
   hand-rolled equi-join of A and B on the shared dimension j.  Expressed
@@ -27,7 +27,12 @@ Three formulations here:
   reference's pairwise walk (``program.c:427-436``) relies on an emission
   order Spark's shuffle does not preserve (SURVEY §2 note 1).
 
-All three aggregate into int64 — the reference's ``int sum``
+- ``matmul_block``: B×B tiles joined on the block dimension and
+  multiplied as dense NumPy GEMMs inside one ``mapInArrow`` stage.
+
+- ``matmul_auto``: picks block, broadcast (either side) or COO by size.
+
+All of them aggregate into int64 — the reference's ``int sum``
 (``program.c:425``) overflows at scale.
 """
 
@@ -37,8 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def matmul_coo(a: DataFrame, b: DataFrame) -> DataFrame:
-    """C = A×B over COO DataFrames a(i,j,v), b(i,j,v) → (i, k, v:long).
+def _join_matmul(a: DataFrame, b: DataFrame, broadcast: str | None) -> DataFrame:
+    """A ⋈_j B → groupBy(i,k) → sum(va·vb), with a broadcast hint on the
+    ``"a"`` or ``"b"`` side, or on neither (``None``).
 
     b's coordinates are renamed (row=j, col=k) so the join key is the
     shared inner dimension, exactly the pairing the reference's reducer
@@ -46,6 +52,10 @@ def matmul_coo(a: DataFrame, b: DataFrame) -> DataFrame:
     """
     lhs = a.select(F.col("i"), F.col("j"), F.col("v").alias("va"))
     rhs = b.select(F.col("i").alias("j"), F.col("j").alias("k"), F.col("v").alias("vb"))
+    if broadcast == "a":
+        lhs = F.broadcast(lhs)
+    elif broadcast == "b":
+        rhs = F.broadcast(rhs)
     return (
         lhs.join(rhs, "j")
         .groupBy("i", "k")
@@ -53,17 +63,17 @@ def matmul_coo(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
+def matmul_coo(a: DataFrame, b: DataFrame) -> DataFrame:
+    """C = A×B over COO DataFrames a(i,j,v), b(i,j,v) → (i, k, v:long);
+    Catalyst picks the physical join."""
+    return _join_matmul(a, b, None)
+
+
 def matmul_broadcast(a: DataFrame, b: DataFrame) -> DataFrame:
     """Same plan with a broadcast hint on B — use when B fits in executor
     memory (the reference unconditionally replicates BOTH matrices to all
     ranks, ``program.c:97-98``; we replicate only the small side)."""
-    rhs = b.select(F.col("i").alias("j"), F.col("j").alias("k"), F.col("v").alias("vb"))
-    lhs = a.select("i", "j", F.col("v").alias("va"))
-    return (
-        lhs.join(F.broadcast(rhs), "j")
-        .groupBy("i", "k")
-        .agg(F.sum(F.col("va").cast("long") * F.col("vb").cast("long")).alias("v"))
-    )
+    return _join_matmul(a, b, "b")
 
 
 def matmul_mapreduce(
@@ -347,7 +357,7 @@ def matmul_auto(
     which case the broadcast-vs-shuffle choice is deferred to the injected
     optimizer rule, which reads Catalyst's own size statistics at plan
     time: zero driver-side jobs.  (The blocked-GEMM arm still requires
-    known dims — its stage is an Arrow ``mapInPandas`` the JVM planner
+    known dims — its stage is an Arrow ``mapInArrow`` the JVM planner
     can't construct.)
     """
     if dims is None:
@@ -381,14 +391,7 @@ def matmul_auto(
         return matmul_broadcast(a, b)
     if a_cells <= broadcast_threshold_cells:
         # symmetric: broadcast A instead
-        lhs = a.select(F.col("i"), F.col("j"), F.col("v").alias("va"))
-        rhs = b.select(F.col("i").alias("j"), F.col("j").alias("k"), F.col("v").alias("vb"))
-        return (
-            F.broadcast(lhs)
-            .join(rhs, "j")
-            .groupBy("i", "k")
-            .agg(F.sum(F.col("va").cast("long") * F.col("vb").cast("long")).alias("v"))
-        )
+        return _join_matmul(a, b, "a")
     return matmul_coo(a, b)
 
 

@@ -288,7 +288,8 @@ def q27_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg keyed by the 3 return flags and the distinct agg is the
     cheap declarative expand rewrite.  Measured at sf0.1 (min-of-3,
     noop sink, interleaved): mixed 24.7 s → split 2.4 s, identical
-    output (tools/ab_q27.py: EQUAL True).
+    output (EQUAL True; OPTIMIZATION_r17.md §1, A/B script removed
+    after 221c068).
 
     Plan-shape note (ADVICE r17): the split means ``cents`` is scanned
     twice — once per aggregate — an implicit cost the 10× win already

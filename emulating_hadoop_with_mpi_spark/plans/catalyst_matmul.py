@@ -7,7 +7,7 @@ broadcast side FROM CATALYST'S OWN SIZE STATISTICS vs
 ``spark.sql.autoBroadcastJoinThreshold`` — no driver-side counts, no
 Python dispatcher (VERDICT r2 item 6 / SURVEY §4 "optional later").
 The blocked-GEMM variant remains Python-dispatched in ``matmul_auto``
-(its physical stage is an Arrow ``mapInPandas``, which the JVM planner
+(its physical stage is an Arrow ``mapInArrow``, which the JVM planner
 cannot construct).
 
 Requires a session started with::

@@ -106,7 +106,18 @@ def test_matmul_auto_strategy_dispatch(spark):
     # small side → broadcast join
     c1 = matmul_auto(da, db, dims=(12, 10, 8))
     assert "BroadcastHashJoin" in executed_plan(c1)
+    assert "BuildRight" in executed_plan(c1)
     np.testing.assert_array_equal(_dense(c1, 12, 8), expect)
+
+    # only A fits → A is the broadcast (build) side
+    a5 = generate_matrix_numpy(8, 10, seed=33)
+    b5 = generate_matrix_numpy(10, 12, seed=34)
+    c5 = matmul_auto(
+        matrix_coo_from_numpy(spark, a5), matrix_coo_from_numpy(spark, b5),
+        dims=(8, 10, 12), broadcast_threshold_cells=100,
+    )
+    assert "BuildLeft" in executed_plan(c5)
+    np.testing.assert_array_equal(_dense(c5, 8, 12), a5.astype(np.int64) @ b5)
 
     # force the block path via thresholds
     c2 = matmul_auto(

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from emulating_hadoop_with_mpi_spark.functions.dedup import (
     MERSENNE_31,
     NUM_PERM,
-    _minhash_signatures_kernel,
     _perm_constants,
     minhash_combined,
     minhash_signatures,
@@ -60,34 +59,45 @@ def test_kernel_generator_on_sliced_batch():
     """Direct unit test of _sig_batches_fn on a manually sliced
     RecordBatch (ADVICE r17): Spark builds each Arrow batch fresh with
     offsets starting at 0, so only a hand-sliced batch exercises the
-    offset-rebase/clamp branch.  Also pins the loud empty-segment guard
-    (reduceat would otherwise silently return the NEXT segment's first
-    element)."""
+    offset-rebase/clamp branch.  Also pins the per-segment minima of
+    (a·(x>>32)+b) mod p over full 64-bit hashes (unsigned shift: negative
+    int64 hashes included), the shset pass-through, and the loud
+    empty-segment guard (reduceat would otherwise silently return the
+    NEXT segment's first element)."""
     import numpy as np
     import pyarrow as pa
     import pytest
 
     from emulating_hadoop_with_mpi_spark.functions.dedup import _sig_batches_fn
 
-    sets = [[11, 5, 9], [42], [7, 3], [100, 2, 64, 8]]
+    sets = [
+        [11 << 32 | 7, 5 << 32, 9 << 32 | 0xFFFF],
+        [42 << 32 | 1],
+        [-1, 3 << 32, -(1 << 63)],
+        [100 << 32, 2 << 32 | 5, 64 << 32, 8 << 32 | 3],
+    ]
     batch = pa.RecordBatch.from_arrays(
         [
             pa.array(list(range(len(sets))), type=pa.int64()),
             pa.array(sets, type=pa.list_(pa.int64())),
         ],
-        names=["doc_id", "hset"],
+        names=["doc_id", "shset"],
     )
-    gen = _sig_batches_fn(8, shift=False, carry_set=False)
+    gen = _sig_batches_fn(8)
     full = list(gen([batch]))[0]
     sliced = list(gen([batch.slice(1)]))[0]
     for name in full.schema.names:
         if name == "doc_id":
             continue
         assert full.column(name).to_pylist()[1:] == sliced.column(name).to_pylist(), name
-    # mins really are per-segment minima of the permuted values
+    assert full.column("shset").to_pylist() == sets
+    # mins really are per-segment minima of the permuted top-32-bit values
     consts = _perm_constants(8)
     for i, (a, b) in enumerate(consts):
-        exp = [min((a * x + b) % MERSENNE_31 for x in s) for s in sets]
+        exp = [
+            min((a * ((x % (1 << 64)) >> 32) + b) % MERSENNE_31 for x in s)
+            for s in sets
+        ]
         assert full.column(f"h{i}").to_pylist() == exp
     # empty segment → loud failure, never a silently wrong signature
     bad = pa.RecordBatch.from_arrays(
@@ -95,7 +105,7 @@ def test_kernel_generator_on_sliced_batch():
             pa.array([0, 1], type=pa.int64()),
             pa.array([[5, 7], []], type=pa.list_(pa.int64())),
         ],
-        names=["doc_id", "hset"],
+        names=["doc_id", "shset"],
     )
     with pytest.raises(ValueError, match="empty shingle set"):
         list(gen([bad]))
@@ -109,9 +119,8 @@ def test_arrow_kernel_equals_jvm_reference(spark):
     try:
         ds = shingles_df(docs)
         sig_cols = [f"h{i}" for i in range(NUM_PERM)]
-        # the r18 public standalone entry is the declarative form again
-        # (tools/ab_sigs.py measured the set shuffle as a long-doc
-        # regression); the retained kernel twin stays pinned to it
+        # the standalone entry is the declarative form (the set shuffle
+        # measured as a long-doc regression, OPTIMIZATION_r18.md §3)
         got = sorted(
             tuple(r) for r in minhash_signatures(ds).select("doc_id", *sig_cols).collect()
         )
@@ -119,13 +128,6 @@ def test_arrow_kernel_equals_jvm_reference(spark):
             tuple(r) for r in _jvm_reference_sigs(ds).select("doc_id", *sig_cols).collect()
         )
         assert got == exp
-        got_k = sorted(
-            tuple(r)
-            for r in _minhash_signatures_kernel(ds)
-            .select("doc_id", *sig_cols)
-            .collect()
-        )
-        assert got_k == exp
         # exact twins carry identical signatures
         by_id = {t[0]: t[1:] for t in got}
         assert by_id[5] == by_id[6]

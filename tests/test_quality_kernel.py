@@ -3,13 +3,13 @@ exactly the values the former all-Catalyst formulation did.
 
 The kernel (functions/text._qfeat_batches_fn) replaced the interpreted
 higher-order-function lambdas (transform/zip_with/aggregate/filter)
-behind quality_scores / quality_gate_scores; its contract is
-BIT-IDENTICAL output — same Java-\\s tokenization of lower(text), same
-ASCII class counts, exact per-doc mode counts, and an unchanged JVM
-ratio/quality projection.  The former formulations are retained as
-_quality_scores_jvm / _quality_gate_scores_jvm and compared row-for-row,
-column-for-column here on a corpus constructed to hit the kernel's edge
-cases.
+behind quality_scores; its contract is BIT-IDENTICAL output — same
+Java-\\s tokenization of lower(text), same ASCII class counts, exact
+per-doc mode counts, and an unchanged JVM ratio/quality projection.  The
+former formulation is retained as _quality_scores_jvm and compared
+row-for-row, column-for-column here on a corpus constructed to hit the
+kernel's edge cases; the all-Catalyst quality_gate_scores subset is
+pinned to quality_scores on the same corpus.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import pytest
 
 from emulating_hadoop_with_mpi_spark.functions.text import (
     _qfeat_batches_fn,
-    _quality_gate_scores_kernel,
     _quality_scores_jvm,
     quality_gate_scores,
     quality_scores,
@@ -69,11 +68,10 @@ def test_quality_kernel_equals_jvm_reference(spark, keep_text):
         got = _rows(quality_scores(docs, keep_text=keep_text), cols)
         exp = _rows(_quality_scores_jvm(docs, keep_text=keep_text), cols)
         assert got == exp
-        # gate: the KERNEL is the retained measured-negative twin here —
-        # the public gate path stays all-Catalyst (see its docstring)
+        # the gate subset carries the same token count and quality
         gate_cols = (["text"] if keep_text else []) + ["n_tokens", "quality"]
-        got_g = _rows(_quality_gate_scores_kernel(docs, keep_text=keep_text), gate_cols)
-        exp_g = _rows(quality_gate_scores(docs, keep_text=keep_text), gate_cols)
+        got_g = _rows(quality_gate_scores(docs, keep_text=keep_text), gate_cols)
+        exp_g = _rows(quality_scores(docs, keep_text=keep_text), gate_cols)
         assert got_g == exp_g
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -91,7 +89,7 @@ def test_kernel_generator_on_sliced_batch():
         ],
         names=["doc_id", "text"],
     )
-    gen = _qfeat_batches_fn(full=True, keep_text=False)
+    gen = _qfeat_batches_fn(keep_text=False)
     full = list(gen([batch]))[0]
     sliced = list(gen([batch.slice(2)]))[0]
     for name in full.schema.names:
@@ -109,7 +107,7 @@ def test_kernel_rejects_null_text():
         [pa.array([1], type=pa.int64()), pa.array([None], type=pa.string())],
         names=["doc_id", "text"],
     )
-    gen = _qfeat_batches_fn(full=False, keep_text=False)
+    gen = _qfeat_batches_fn(keep_text=False)
     with pytest.raises(ValueError, match="null text"):
         list(gen([batch]))
 
@@ -128,7 +126,7 @@ def test_kernel_matches_numpy_free_reference():
         ],
         names=["doc_id", "text"],
     )
-    out = list(_qfeat_batches_fn(full=True, keep_text=False)([batch]))[0]
+    out = list(_qfeat_batches_fn(keep_text=False)([batch]))[0]
     for i, (_, t) in enumerate(_DOCS):
         toks = [w for w in ws.split(t.lower()) if w]
         g2 = list(zip(toks, toks[1:]))
@@ -170,7 +168,7 @@ def test_quality_kernel_fuzz_seeded():
         names=["doc_id", "text"],
     )
     ws = re.compile("[ \t\n\x0b\f\r]+")
-    outs = list(_qfeat_batches_fn(full=True, keep_text=False)([batch]))
+    outs = list(_qfeat_batches_fn(keep_text=False)([batch]))
     got = {k: sum((o.column(k).to_pylist() for o in outs), []) for k in
            ("n_chars", "n_tokens", "n_alpha", "n_digit", "n_stop",
             "max_word", "top2", "n2", "n3", "d3")}

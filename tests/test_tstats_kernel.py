@@ -1,29 +1,26 @@
-"""Round-18 pin: the mapInArrow token-stats kernel computes exactly the
-values the former all-Catalyst formulation did — including the BPE-ish
-regex count ([A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]) reproduced as byte-class
-run arithmetic — and passes extra JVM columns (q80's PII counts)
-through untouched.
+"""Pins for q80's token_stats against independent pure-Python references:
+the BPE-ish regex count ([A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]) against
+Python ``re`` over the same pattern, and every computed column against
+``re``/set references on a seeded 300-string fuzz corpus.
 """
 
 from __future__ import annotations
 
+import random
+import re
+
 import pytest
 
-from emulating_hadoop_with_mpi_spark.functions.pipeline import (
-    PII_PATTERNS_RE2,
-    pii_count_cols,
-)
 from emulating_hadoop_with_mpi_spark.functions.text import (
     PII_CANARY_DOC_ID,
     PII_CANARY_TEXT,
-    _token_stats_kernel,
     token_stats,
 )
 
-# letter/digit/punct runs (the BPE regex's three branches), runs broken
-# by row boundaries, UTF-8 multibyte (é is one [^A-Za-z0-9\s] char, two
-# bytes), every Java-\s char, repeated tokens (uniq < total), empty and
-# whitespace-only text, the PII canary (non-vacuous extras)
+# letter/digit/punct runs (the BPE regex's three branches), UTF-8
+# multibyte (é is one [^A-Za-z0-9\s] char, two bytes), every Java-\s
+# char, repeated tokens (uniq < total), empty and whitespace-only text,
+# the PII canary
 _DOCS = [
     (1, "en", "abc123!? x9 ,,"),
     (2, "en", "a b a b a b c"),
@@ -36,93 +33,44 @@ _DOCS = [
     (PII_CANARY_DOC_ID, "xx", PII_CANARY_TEXT),
 ]
 
+# seeded fuzz: letters, digits, punctuation, every Java-\s char and
+# multibyte codepoints (2-, 3- and 4-byte UTF-8)
+_rng = random.Random(0xC0FFEE)
+_ALPHABET = "ab z A Z 0 9 .,!?-_ \t\n\x0b\f\r éß漢🎉"
+_FUZZ = [
+    (1000 + n, "xx", "".join(_rng.choice(_ALPHABET) for _ in range(_rng.randrange(0, 80))))
+    for n in range(300)
+]
 
-@pytest.mark.parametrize("with_extras", [False, True])
-def test_tstats_kernel_equals_jvm_reference(spark, with_extras):
-    docs = spark.createDataFrame(_DOCS, "doc_id long, lang string, text string")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
-        extras = (
-            pii_count_cols(patterns=PII_PATTERNS_RE2) if with_extras else ()
-        )
-        new = _token_stats_kernel(docs, extra_cols=extras)
-        old = token_stats(docs, extra_cols=extras)
-        assert [(f.name, f.dataType) for f in new.schema.fields] == [
-            (f.name, f.dataType) for f in old.schema.fields
-        ]
-        got = sorted(tuple(r) for r in new.collect())
-        exp = sorted(tuple(r) for r in old.collect())
-        assert got == exp
-        if with_extras:
-            # the canary's extras are non-zero (pass-through is real)
-            canary = [t for t in got if t[0] == PII_CANARY_DOC_ID][0]
-            assert canary[-3:] == (1, 1, 1)  # n_email, n_card, n_ssn
-    finally:
-        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+_WS = re.compile("[ \t\n\x0b\f\r]+")
+_BPE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
 
 
-def test_tstats_kernel_matches_python_regex_reference():
-    """Independent reference for the byte-class BPE count: python re
-    over the same pattern (RE2-free constructs only)."""
-    import re
-
-    import pyarrow as pa
-
-    from emulating_hadoop_with_mpi_spark.functions.text import _tstats_batches_fn
-
-    bpe = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
-    texts = [t for _, _, t in _DOCS]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(range(len(texts))), type=pa.int64()),
-            pa.array(["xx"] * len(texts), type=pa.string()),
-            pa.array(texts, type=pa.string()),
-        ],
-        names=["doc_id", "lang", "text"],
-    )
-    gen = _tstats_batches_fn([])
-    for b in (batch, batch.slice(2)):
-        out = list(gen([b]))[0]
-        for i, t in enumerate(b.column(2).to_pylist()):
-            assert out.column("n_bpe_tokens").to_pylist()[i] == len(bpe.findall(t)), t
-            assert out.column("n_chars").to_pylist()[i] == len(t), t
+@pytest.fixture(scope="module")
+def stats(spark):
+    """{doc_id: (text, token_stats row)} over the edge docs + fuzz corpus."""
+    rows = _DOCS + _FUZZ
+    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    got = {r["doc_id"]: r for r in token_stats(docs).collect()}
+    assert len(got) == len(rows)
+    return {d: (t, got[d]) for d, _, t in rows}
 
 
-def test_tstats_kernel_fuzz_seeded():
-    """Seeded fuzz: 300 random strings over a charset mixing letters,
-    digits, punctuation, every Java-\\s char and multibyte codepoints —
-    kernel vs pure-python references for every computed column."""
-    import random
-    import re
+def test_tstats_kernel_matches_python_regex_reference(stats):
+    """Independent reference for the JVM BPE count: python re over the
+    same pattern (RE2-free constructs only)."""
+    for doc_id, _, _ in _DOCS:
+        t, r = stats[doc_id]
+        assert r["n_bpe_tokens"] == len(_BPE.findall(t)), t
+        assert r["n_chars"] == len(t), t
 
-    import pyarrow as pa
 
-    from emulating_hadoop_with_mpi_spark.functions.text import _tstats_batches_fn
-
-    rng = random.Random(0xC0FFEE)
-    alphabet = "ab z A Z 0 9 .,!?-_ \t\n\x0b\f\r éß漢🎉"
-    texts = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 80)))
-        for _ in range(300)
-    ]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(range(len(texts))), type=pa.int64()),
-            pa.array(["xx"] * len(texts), type=pa.string()),
-            pa.array(texts, type=pa.string()),
-        ],
-        names=["doc_id", "lang", "text"],
-    )
-    ws = re.compile("[ \t\n\x0b\f\r]+")
-    bpe = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
-    outs = list(_tstats_batches_fn([])([batch]))
-    got = {k: sum((o.column(k).to_pylist() for o in outs), []) for k in
-           ("n_tokens", "n_uniq_tokens", "n_chars", "n_bpe_tokens")}
-    i = 0
-    for t in texts:
-        toks = [w for w in ws.split(t.lower()) if w]
-        assert got["n_tokens"][i] == len(toks), t
-        assert got["n_uniq_tokens"][i] == len(set(toks)), t
-        assert got["n_chars"][i] == len(t), t
-        assert got["n_bpe_tokens"][i] == len(bpe.findall(t)), t
-        i += 1
+def test_tstats_kernel_fuzz_seeded(stats):
+    """Seeded fuzz: every computed column vs pure-python references."""
+    for doc_id, _, _ in _FUZZ:
+        t, r = stats[doc_id]
+        toks = [w for w in _WS.split(t.lower()) if w]
+        assert r["n_tokens"] == len(toks), t
+        assert r["n_uniq_tokens"] == len(set(toks)), t
+        assert r["n_chars"] == len(t), t
+        assert r["n_bpe_tokens"] == len(_BPE.findall(t)), t
