@@ -6,7 +6,7 @@ across all i, keyed by output coordinate "(i,k)" with tagged values
 "(A,j,v)" / "(B,j,v)" (``program.c:184-222``); the reducer walks each key's
 value list pairwise accumulating ``sum += a*b`` (``program.c:415-445``).
 
-Five formulations here:
+Six formulations here:
 
 - ``matmul_coo`` (idiomatic, DEFAULT): the (i,k)-keyed tagged emit is a
   hand-rolled equi-join of A and B on the shared dimension j.  Expressed
@@ -28,18 +28,88 @@ Five formulations here:
   order Spark's shuffle does not preserve (SURVEY §2 note 1).
 
 - ``matmul_block``: B×B tiles joined on the block dimension and
-  multiplied as dense NumPy GEMMs inside one ``mapInArrow`` stage.
+  multiplied as dense NumPy GEMMs inside one ``mapInArrow`` stage — the
+  block arm for COO DataFrame inputs.
+
+- ``_dense_dat_gemm`` (via ``multiply_dat_files``): the dense ``.dat``
+  arm.  The reference gives every rank both whole matrices
+  (``program.c:97-98``) and each rank computes its own part of C; here
+  each task owns output tiles and reads its A row bands and B column
+  bands straight from the files — no decode, no shuffle.
 
 - ``matmul_auto``: picks block, broadcast (either side) or COO by size.
 
 All of them aggregate into int64 — the reference's ``int sum``
-(``program.c:425``) overflows at scale.
+(``program.c:425``) overflows at scale.  On the join and GEMM arms a
+result outside int64 raises
+instead of wrapping: Spark's ANSI arithmetic on the joins,
+``_exact_gemm`` on the GEMM arms.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# L·M·N products above which a multiply leaves the joins for a GEMM arm
+# (matmul_auto's block arm, multiply_dat_files' dense arm).
+_BLOCK_PRODUCTS = 1_000_000_000
+
+
+def _make_exact_gemm():
+    """Build the exactness-gated GEMM as a LOCAL function, so cloudpickle
+    ships it by value inside the Arrow UDFs that call it — Python workers
+    need not import this package (the driver may run from any cwd)."""
+
+    def exact_gemm(A, B, acc=None):
+        """``acc + A @ B`` over dense integer-valued tiles (any int or
+        float dtype holding integers), exact, as int64 — or
+        ``ArithmeticError`` if a result cell falls outside int64.
+
+        EXACTNESS-GATED BLAS dispatch (round 11), on the bound
+        ``max|acc| + max|A|·max|B|·len`` computed in Python ints (no
+        wrap, no rounding):
+
+        - below 2^52: float64 ``A @ B`` runs dgemm — vectorized, measured
+          ~an order of magnitude faster than NumPy's single-threaded int64
+          matmul loop — and is EXACT, since every intermediate stays under
+          the 53-bit mantissa (2^52 keeps a 2× margin);
+        - below 2^63: the exact int64 matmul;
+        - otherwise the guarded path: Python-int (object) arithmetic, then
+          a range check.  int64 matmul would wrap silently there.
+
+        Correctness never depends on the data being small, only speed
+        does.  ``acc`` carries a running sum across k-chunks; a partial sum
+        outside int64 raises, as Spark's ANSI ``sum`` does.
+        """
+        import numpy as np
+
+        def absmax(x):
+            return max(int(x.max()), -int(x.min())) if x.size else 0
+
+        bound = absmax(A) * absmax(B) * A.shape[1]
+        if acc is not None:
+            bound += absmax(acc)
+        if bound < 1 << 52:
+            C = (A.astype(np.float64) @ B.astype(np.float64)).astype(np.int64)
+        elif bound < 1 << 63:
+            C = A.astype(np.int64) @ B.astype(np.int64)
+        else:
+            C = A.astype(np.int64).astype(object) @ B.astype(np.int64).astype(object)
+            if acc is not None:
+                C = C + acc.astype(object)
+            if C.size and (C.max() >= 1 << 63 or C.min() < -(1 << 63)):
+                raise ArithmeticError(
+                    "matmul: a result cell overflows int64 (bound "
+                    f"{bound} ≥ 2^63, max {C.max()}, min {C.min()})"
+                )
+            return C.astype(np.int64)
+        return C if acc is None else C + acc
+
+    return exact_gemm
+
+
+_exact_gemm = _make_exact_gemm()
 
 
 def _join_matmul(a: DataFrame, b: DataFrame, broadcast: str | None) -> DataFrame:
@@ -244,38 +314,21 @@ def matmul_block(
                 bj = _sl("bj_", r) % blk
                 av = _sl("av", r).astype(np.int64)
                 bv = _sl("bv", r).astype(np.int64)
-                # EXACTNESS-GATED BLAS dispatch (round 11): float64
-                # `A @ B` runs dgemm — vectorized, measured ~an order
-                # of magnitude faster than NumPy's single-threaded
-                # int64 matmul loop — and is EXACT while every
-                # intermediate stays under the 53-bit mantissa:
-                # (1) tile build via bincount scatter-add is exact if
-                #     Σ|values| per input < 2^53 (bounds every partial
-                #     sum, cancellation included);
-                # (2) the GEMM is exact if maxA·maxB·blk < 2^53,
-                #     checked against the BUILT tiles so
-                #     duplicate-summed cells are covered.
-                # Either gate failing falls back to the exact int64
-                # path (add.at + integer matmul) — correctness never
-                # depends on the data being small, only speed does.
-                #
-                # Gate arithmetic (ADVICE r11): the |·| sums are taken
-                # in FLOAT64 — an int64 np.abs().sum() can wrap on
-                # overflow (and |INT64_MIN| stays negative), letting a
-                # pathological block falsely pass.  The float64 sums
-                # and the maxA·maxB·blk product carry their own ulp
-                # rounding, so the threshold is shaved to 2^52: a
-                # 2× safety margin costs nothing (inputs between 2^52
-                # and 2^53 just take the exact int64 path) and absorbs
-                # every boundary-rounding case.
+                # Densify the COO lists.  A bincount scatter-add in
+                # float64 sums duplicate coordinates (as matmul_coo /
+                # matmul_mapreduce do) and is exact if Σ|values| per
+                # input < 2^52 — that bounds every partial sum,
+                # cancellation included.  The |·| sums are taken in
+                # FLOAT64 (ADVICE r11): an int64 np.abs().sum() can wrap
+                # (and |INT64_MIN| stays negative), letting a
+                # pathological block falsely pass; the 2^52 threshold
+                # leaves a 2× margin for the sums' own rounding.
+                # Otherwise the exact int64 add.at scatter.
                 lim = float(1 << 52)
                 if (
                     np.abs(av.astype(np.float64)).sum() < lim
                     and np.abs(bv.astype(np.float64)).sum() < lim
                 ):
-                    # bincount over flattened indices == scatter-add
-                    # with duplicate COO coordinates SUMMED (as
-                    # matmul_coo/matmul_mapreduce do)
                     A = np.bincount(
                         ai * blk + aj, weights=av.astype(np.float64),
                         minlength=blk * blk,
@@ -284,22 +337,14 @@ def matmul_block(
                         bi * blk + bj, weights=bv.astype(np.float64),
                         minlength=blk * blk,
                     ).reshape(blk, blk)
-                    if np.abs(A).max() * np.abs(B).max() * blk < lim:
-                        C = A @ B
-                        ii, kk = np.nonzero(C)
-                        vv = C[ii, kk].astype(np.int64)
-                    else:
-                        C = A.astype(np.int64) @ B.astype(np.int64)
-                        ii, kk = np.nonzero(C)
-                        vv = C[ii, kk]
                 else:
                     A = np.zeros((blk, blk), dtype=np.int64)
                     B = np.zeros((blk, blk), dtype=np.int64)
                     np.add.at(A, (ai, aj), av)
                     np.add.at(B, (bi, bj), bv)
-                    C = A @ B
-                    ii, kk = np.nonzero(C)
-                    vv = C[ii, kk]
+                C = _exact_gemm(A, B)
+                ii, kk = np.nonzero(C)
+                vv = C[ii, kk]
                 if ii.size:
                     outs_i.append(ii.astype(np.int64) + int(tile_bi[r]) * blk)
                     outs_k.append(kk.astype(np.int64) + int(tile_bj[r]) * blk)
@@ -329,7 +374,7 @@ def matmul_auto(
     b: DataFrame,
     dims: tuple[int, int, int] | None = None,
     broadcast_threshold_cells: int = 2_000_000,
-    block_threshold_products: int = 1_000_000_000,
+    block_threshold_products: int = _BLOCK_PRODUCTS,
     block: int = 256,
 ) -> DataFrame:
     """Pick the physical multiply strategy by size — the planner decision
@@ -346,7 +391,10 @@ def matmul_auto(
       vs COO 20.4 s, and at 1280³ block 9.4 s vs COO 12.2 s.  The 1B
       boundary is the measured crossover (block already ties COO at
       1024³ = 1.07B and loses below: 896³ broadcast 3.5 s vs block
-      6.3 s); block=256 beat 128 at 2048³ (12.9 vs 15.2 s).
+      6.3 s); block=256 beat 128 at 2048³ (12.9 vs 15.2 s).  These
+      crossovers were measured for the COO block arm (``matmul_block``);
+      dense ``.dat`` files above the same boundary take
+      ``multiply_dat_files``' dense arm instead, never this dispatcher.
     - else one side fits in executor memory → broadcast-hash join (no
       shuffle of the big side at all);
     - otherwise → plain COO join+agg and let Catalyst/AQE do the rest.
@@ -395,11 +443,99 @@ def matmul_auto(
     return matmul_coo(a, b)
 
 
+def _dense_dat_gemm(
+    spark: SparkSession,
+    path_a: str,
+    path_b: str,
+    dims: tuple[int, int, int],
+    block: int = 256,
+) -> DataFrame:
+    """C = A×B straight from two dense ``.dat`` files → (i int, k int, v long),
+    every cell of C.
+
+    The reference's own decomposition — every rank reads the inputs and
+    owns an output range (``program.c:97-98``) — with the file system in
+    place of ``MPI_Bcast``: one ``spark.range(n_tiles)`` → ``mapInArrow``
+    stage in which each task owns ``block``×``block`` output tiles.  Per
+    k-chunk a task positioned-reads A's row band and B's column band from
+    the files and accumulates the tile with ``_exact_gemm``.  No COO decode,
+    no tile-build shuffle, no partial-sum aggregate: the plan has no
+    Exchange.
+
+    Memory stays bounded for any M: a k-chunk's two bands hold at most
+    ``spark.sql.files.maxPartitionBytes`` as int32, and a whole-row read of
+    B is only made when it fits that budget too.  Tiles are numbered
+    bj-major, so consecutive tiles of a task share B's column band, and a
+    band that is one chunk is read once per task.
+    """
+    from emulating_hadoop_with_mpi_spark.sources.matrix import (
+        _check_dat_size,
+        _dat_filesystem,
+        _split_bytes,
+    )
+
+    l, m, n = dims
+    _check_dat_size(path_a, l, m)
+    _check_dat_size(path_b, m, n)
+    fs_a, file_a = _dat_filesystem(path_a)
+    fs_b, file_b = _dat_filesystem(path_b)
+    budget = _split_bytes(spark)
+    kc = max(1, budget // (8 * block))
+    nbi, nbj = -(-l // block), -(-n // block)
+    n_tiles = nbi * nbj
+    par = max(1, min(n_tiles, spark.sparkContext.defaultParallelism))
+
+    def tiles(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        def band(f, r0, r1, c0, c1, ncols):
+            """Cells [r0, r1) × [c0, c1) of a row-major int32 file: one
+            read of the whole rows when they fit the budget, else one read
+            per row."""
+            if (r1 - r0) * ncols * 4 <= budget:
+                buf = f.read_at((r1 - r0) * ncols * 4, r0 * ncols * 4)
+                return np.frombuffer(buf, dtype="<i4").reshape(r1 - r0, ncols)[:, c0:c1]
+            out = np.empty((r1 - r0, c1 - c0), dtype="<i4")
+            for r in range(r0, r1):
+                buf = f.read_at((c1 - c0) * 4, (r * ncols + c0) * 4)
+                out[r - r0] = np.frombuffer(buf, dtype="<i4")
+            return out
+
+        b_key, b_band = None, None
+        with fs_a.open_input_file(file_a) as fa, fs_b.open_input_file(file_b) as fb:
+            for rb in batches:
+                for t in rb.column(0).to_numpy():
+                    bj, bi = divmod(int(t), nbi)
+                    r0, r1 = bi * block, min(l, (bi + 1) * block)
+                    c0, c1 = bj * block, min(n, (bj + 1) * block)
+                    acc = np.zeros((r1 - r0, c1 - c0), dtype=np.int64)
+                    for k0 in range(0, m, kc):
+                        k1 = min(m, k0 + kc)
+                        if b_key != (bj, k0):
+                            b_key, b_band = (bj, k0), band(fb, k0, k1, c0, c1, n)
+                        acc = _exact_gemm(band(fa, r0, r1, k0, k1, m), b_band, acc)
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(np.repeat(np.arange(r0, r1, dtype=np.int32), c1 - c0)),
+                            pa.array(np.tile(np.arange(c0, c1, dtype=np.int32), r1 - r0)),
+                            pa.array(acc.ravel()),
+                        ],
+                        names=["i", "k", "v"],
+                    )
+
+    return spark.range(n_tiles, numPartitions=par).mapInArrow(
+        tiles, "i int, k int, v long"
+    )
+
+
 def multiply_dat_files(spark: SparkSession, path_a: str, path_b: str) -> DataFrame:
     """End-to-end job entry matching the reference's main
     (``program.c:479-514``): parse dims from both filenames, reject
     incompatible shapes exactly as ``program.c:80-84`` ("dimensions are
-    incompatible to multiply"), then run the idiomatic multiply."""
+    incompatible to multiply"), then run the idiomatic multiply: above
+    ``_BLOCK_PRODUCTS`` the dense arm reads tiles straight from the files,
+    below it ``matmul_auto`` picks a join over the decoded COO inputs."""
     from emulating_hadoop_with_mpi_spark.sources.matrix import (
         matrix_dims_from_name,
         read_matrix_coo,
@@ -411,11 +547,13 @@ def multiply_dat_files(spark: SparkSession, path_a: str, path_b: str) -> DataFra
         raise ValueError(
             f"dimensions are incompatible to multiply: {l}x{m1} × {m2}x{n}"
         )
+    if l * m1 * n > _BLOCK_PRODUCTS:
+        return _dense_dat_gemm(spark, path_a, path_b, (l, m1, n))
     # matmul_auto, not matmul_coo: the binary scan is a MapInPandas whose
     # size Catalyst can't estimate (unknown stats → never auto-broadcast),
     # but the filename gives exact dims — let the dispatcher pick
-    # broadcast/COO/block instead of silently sort-merge-joining a side
-    # that fits in memory (measured 5× on 768² inputs).
+    # broadcast or COO instead of silently sort-merge-joining a side that
+    # fits in memory (measured 5× on 768² inputs).
     return matmul_auto(
         read_matrix_coo(spark, path_a, (l, m1)),
         read_matrix_coo(spark, path_b, (m2, n)),

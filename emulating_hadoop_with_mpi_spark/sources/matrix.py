@@ -10,13 +10,17 @@ Scale design: instead of slurping the whole file on one node (the reference
 reads everything on rank 0, ``program.c:94-96``, then broadcasts it to every
 process, ``program.c:97-98``), the file is split driver-side into
 row-aligned byte ranges — the same contract a parquet FileScan uses
-(`spark.sql.files.maxPartitionBytes`-sized splits) — and each task does one
-positioned read of its range and decodes it with vectorized NumPy into COO
-``(i, j, v)`` triples, which cross into the JVM as Arrow batches via
-``mapInPandas``.  No node ever holds the full matrix, no Python loop ever
-touches an individual cell, and a 100 TB matrix streams through like any
-other columnar datasource.  File access goes through ``pyarrow.fs`` so
-``hdfs://``/``s3://`` URIs work on a real cluster the same as local paths.
+(`spark.sql.files.maxPartitionBytes`-sized splits).  The splits are planned
+by split id: one ``spark.range`` partition per split, whose task derives its
+row range from the id — no driver-side split list and no exchange.  Each
+task does one positioned read of its range and decodes it with vectorized
+NumPy into COO ``(i, j, v)`` triples, which cross into the JVM as Arrow
+batches via ``mapInPandas``.  No node ever holds the full matrix, no Python
+loop ever touches an individual cell, and a 100 TB matrix streams through
+like any other columnar datasource.  File access goes through one
+``pyarrow.fs`` opener (``_dat_filesystem``) so ``hdfs://``/``s3://`` URIs
+work on a real cluster the same as local paths, and a file whose size is
+not ``rows*cols*4`` is refused on the driver before any job runs.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import re
 
 import numpy as np
 import pandas as pd
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -71,6 +76,32 @@ def _read_matrix_coo_jvm(
         return None
 
 
+def _dat_filesystem(path: str):
+    """(pyarrow filesystem, path within it) for a local path or a URI — the
+    one opener the size check, the ``.dat`` decode and the dense GEMM arm
+    share.  Resolved on the driver: a relative local path becomes absolute
+    against the driver's cwd, and the filesystem object pickles into the
+    tasks."""
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), os.path.abspath(path)
+
+
+def _check_dat_size(path: str, rows: int, cols: int) -> None:
+    """Refuse, on the driver, a ``.dat`` file that is not exactly
+    ``rows*cols*4`` bytes — a truncated file would otherwise fail inside an
+    executor, and extra trailing bytes would be ignored."""
+    filesystem, fpath = _dat_filesystem(path)
+    info = filesystem.get_file_info(fpath)
+    if info.type == pafs.FileType.NotFound:
+        raise FileNotFoundError(f"no such matrix file: {path}")
+    if info.size != rows * cols * 4:
+        raise ValueError(
+            f"{path}: {info.size} bytes, but a {rows}x{cols} int32 matrix is "
+            f"{rows}x{cols}x4 = {rows * cols * 4} bytes"
+        )
+
+
 def _split_bytes(spark: SparkSession) -> int:
     """Target bytes per read split — honor the same knob a FileScan uses."""
     raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
@@ -84,8 +115,9 @@ def read_matrix_coo(
     """Read a ``.dat`` matrix into a COO DataFrame ``(i INT, j INT, v INT)``.
 
     Mirrors ``readArraysFromFile`` (``program.c:45-72``) but distributed and
-    vectorized: the driver plans row-aligned byte-range splits (one task
-    each, sized like FileScan splits).  When the extension jar is on the
+    vectorized: the driver checks the file size, then plans row-aligned
+    byte-range splits by split id (one task each, sized like FileScan
+    splits, no exchange).  When the extension jar is on the
     session classpath the decode runs entirely JVM-side
     (``jvm/src/MatrixSource.scala`` — positioned Hadoop FS read +
     little-endian IntBuffer, no Python boundary at all); otherwise each task
@@ -94,6 +126,7 @@ def read_matrix_coo(
     split — no Python-per-cell loop anywhere on either path.
     """
     rows, cols = dims if dims is not None else matrix_dims_from_name(path)
+    _check_dat_size(path, rows, cols)
     record_len = cols * 4
     if rows * cols == 0:
         return spark.createDataFrame([], COO_SCHEMA)
@@ -106,24 +139,17 @@ def read_matrix_coo(
     jvm_df = _read_matrix_coo_jvm(spark, path, rows, cols, rows_per_split)
     if jvm_df is not None:
         return jvm_df
-    starts = list(range(0, rows, rows_per_split))
-    spec = spark.createDataFrame(
-        [(s, min(s + rows_per_split, rows)) for s in starts],
-        "row_start INT, row_end INT",
-    ).repartition(len(starts))
+    n_splits = -(-rows // rows_per_split)
+    filesystem, fpath = _dat_filesystem(path)
 
     def decode(batches):
-        from pyarrow import fs as pafs
-
-        if "://" in path:
-            filesystem, fpath = pafs.FileSystem.from_uri(path)
-        else:
-            filesystem, fpath = pafs.LocalFileSystem(), os.path.abspath(path)
         with filesystem.open_input_file(fpath) as f:
             for pdf in batches:
-                for row_start, row_end in pdf.itertuples(index=False):
-                    n = int(row_end) - int(row_start)
-                    buf = f.read_at(n * record_len, int(row_start) * record_len)
+                for split in pdf["id"]:
+                    row_start = int(split) * rows_per_split
+                    row_end = min(row_start + rows_per_split, rows)
+                    n = row_end - row_start
+                    buf = f.read_at(n * record_len, row_start * record_len)
                     vals = np.frombuffer(buf, dtype="<i4")
                     yield pd.DataFrame(
                         {
@@ -135,7 +161,7 @@ def read_matrix_coo(
                         }
                     )
 
-    return spec.mapInPandas(decode, COO_SCHEMA)
+    return spark.range(n_splits, numPartitions=n_splits).mapInPandas(decode, COO_SCHEMA)
 
 
 def matrix_coo_from_numpy(spark: SparkSession, arr: np.ndarray) -> DataFrame:

@@ -10,6 +10,8 @@ paths agree.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -221,3 +223,149 @@ def test_matmul_auto_sparse_skips_block(spark):
     # and the product is still right: (2·diag)² = 4·diag on the sampled grid
     rows = {(r.i, r.k): r.v for r in c.collect()}
     assert rows[(0, 0)] == 4 and rows[(50, 50)] == 4 and len(rows) == n // 50 + 1
+
+
+def _dat_pair(tmp_path, a, b, tag):
+    return (
+        write_matrix_dat(a, str(tmp_path), file_id=f"{tag}a"),
+        write_matrix_dat(b, str(tmp_path), file_id=f"{tag}b"),
+    )
+
+
+@pytest.mark.parametrize(
+    "shape,block,lo,hi",
+    [
+        ((300, 517, 129), 128, -9, 10),  # the block divides no dimension
+        ((1, 7, 5), 4, -9, 10),  # one-row A
+        ((6, 9, 1), 4, -9, 10),  # one-column B
+        ((6, 1, 3), 4, -9, 10),  # inner dimension 1
+        ((20, 30, 10), 8, -(2**24), 2**24),  # fails the float gate: int64 path
+    ],
+)
+def test_dense_dat_gemm_matches_numpy(spark, tmp_path, shape, block, lo, hi):
+    """The dense .dat arm reads tiles straight from the files and emits
+    every cell of C; its plan is Range → MapInArrow, with no Exchange."""
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import _dense_dat_gemm
+    from emulating_hadoop_with_mpi_spark.plans.inspect import executed_plan
+
+    l, m, n = shape
+    rng = np.random.default_rng(l * m * n)
+    a = rng.integers(lo, hi, size=(l, m)).astype(np.int32)
+    b = rng.integers(lo, hi, size=(m, n)).astype(np.int32)
+    c = _dense_dat_gemm(spark, *_dat_pair(tmp_path, a, b, "d"), (l, m, n), block=block)
+    plan = executed_plan(c)
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
+    assert c.count() == l * n
+    np.testing.assert_array_equal(_dense(c, l, n), a.astype(np.int64) @ b)
+
+
+def test_dense_dat_gemm_k_chunks(spark, tmp_path):
+    """A 4 kB read budget (spark.sql.files.maxPartitionBytes) splits the
+    inner dimension into chunks of 4096 // (8·16) = 32 and forces per-row
+    reads of A; the chunked accumulation is still exact, on the float
+    and on the int64 path."""
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import _dense_dat_gemm
+
+    l, m, n = 70, 300, 50
+    rng = np.random.default_rng(5)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try:
+        for tag, bound in (("f", 10), ("i", 2**24)):
+            a = rng.integers(-bound, bound, size=(l, m)).astype(np.int32)
+            b = rng.integers(-bound, bound, size=(m, n)).astype(np.int32)
+            c = _dense_dat_gemm(spark, *_dat_pair(tmp_path, a, b, tag), (l, m, n), block=16)
+            np.testing.assert_array_equal(_dense(c, l, n), a.astype(np.int64) @ b)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_exact_gemm_gates():
+    """Each gate of the shared exact GEMM: float64, int64, and the guarded
+    Python-int path, which returns in-range results and raises on the
+    rest."""
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import _exact_gemm
+
+    small = np.array([[1, -2], [3, 4]], dtype=np.int32)
+    np.testing.assert_array_equal(_exact_gemm(small, small), small.astype(np.int64) @ small)
+    mid = np.array([[2**31 - 1]], dtype=np.int32)  # bound 2^62 - 2^32 + 1: int64
+    assert _exact_gemm(mid, mid)[0, 0] == (2**31 - 1) ** 2
+    # bound 2·2^31·2^31 = 2^63 takes the guarded path; the cells fit
+    a = np.array([[-(2**31), 2**31 - 1]], dtype=np.int32)
+    b = np.array([[-(2**31)], [2**31 - 1]], dtype=np.int32)
+    assert _exact_gemm(a, b)[0, 0] == 2**62 + (2**31 - 1) ** 2
+    with pytest.raises(ArithmeticError):
+        _exact_gemm(np.full((1, 3), 2**31 - 1, np.int32), np.full((3, 1), 2**31 - 1, np.int32))
+    # the running sum across k-chunks is in the bound too
+    acc = np.array([[2**63 - 1]], dtype=np.int64)
+    with pytest.raises(ArithmeticError):
+        _exact_gemm(small[:1, :1], small[:1, :1], acc)
+
+
+@pytest.mark.parametrize("arm", ["coo", "broadcast", "block", "dense"])
+def test_int64_overflow_raises_on_every_arm(spark, tmp_path, arm):
+    """3×3 matrices of 2^31-1: every cell of C is 3·(2^31-1)^2 > 2^63-1.
+    The join arms raise through Spark's ANSI sum, the GEMM arms through
+    the exact GEMM — none wraps silently."""
+    from emulating_hadoop_with_mpi_spark.mapreduce import matmul_block
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import _dense_dat_gemm
+
+    big = np.full((3, 3), 2**31 - 1, dtype=np.int32)
+    if arm == "dense":
+        c = _dense_dat_gemm(spark, *_dat_pair(tmp_path, big, big, "o"), (3, 3, 3), block=4)
+    else:
+        da, db = matrix_coo_from_numpy(spark, big), matrix_coo_from_numpy(spark, big)
+        c = {
+            "coo": lambda: matmul_coo(da, db),
+            "broadcast": lambda: matmul_broadcast(da, db),
+            "block": lambda: matmul_block(da, db, block=4),
+        }[arm]()
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|ArithmeticError"):
+        c.collect()
+
+
+def test_multiply_dat_files_dispatch(spark, tmp_path):
+    """Above the 1e9-product boundary multiply_dat_files takes the dense
+    arm (no Exchange); at 256³ it still plans the broadcast join."""
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import multiply_dat_files
+    from emulating_hadoop_with_mpi_spark.plans.inspect import executed_plan
+
+    for n, marker in ((1024, "MapInArrow"), (256, "BroadcastHashJoin")):
+        sq = np.zeros((n, n), dtype=np.int32)
+        plan = executed_plan(multiply_dat_files(spark, *_dat_pair(tmp_path, sq, sq, n)))
+        assert marker in plan, plan
+        if n == 1024:
+            assert "Exchange" not in plan, plan
+
+
+def test_dat_scan_plans_no_exchange(spark, tmp_path):
+    """read_matrix_coo's Python decode is planned by split id: a Range
+    feeding MapInPandas, with no Exchange in the plan."""
+    from emulating_hadoop_with_mpi_spark.plans.inspect import executed_plan
+
+    arr = generate_matrix_numpy(37, 5, seed=3)
+    plan = executed_plan(read_matrix_coo(spark, write_matrix_dat(arr, str(tmp_path), 3)))
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+
+
+@pytest.mark.parametrize("delta", [-4, 4])
+def test_bad_dat_size_fails_on_driver(spark, tmp_path, delta):
+    """A truncated or oversized .dat file is refused before any job, with
+    the same ValueError on the decode and on both multiply paths."""
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import (
+        _dense_dat_gemm,
+        multiply_dat_files,
+    )
+
+    arr = generate_matrix_numpy(4, 4, seed=1)
+    good = write_matrix_dat(arr, str(tmp_path), file_id="good")
+    bad = write_matrix_dat(arr, str(tmp_path), file_id="bad")
+    with open(bad, "r+b") as f:
+        f.truncate(64 + delta)
+    msg = rf"{re.escape(bad)}: {64 + delta} bytes.*4x4x4 = 64"
+    for call in (
+        lambda: read_matrix_coo(spark, bad),
+        lambda: multiply_dat_files(spark, good, bad),
+        lambda: _dense_dat_gemm(spark, good, bad, (4, 4, 4)),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            call()
