@@ -206,28 +206,10 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # Load the Catalyst matmul extension when its jar is built
-    # (jvm/build.sh) so the stats-driven matmul_auto dispatch is exercised
-    # under the benched config (VERDICT r6 item 8).  spark.jars /
-    # spark.sql.extensions are start-time confs — they must go through the
-    # session builder, not conf.set.
-    jar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "emulating_hadoop_with_mpi_spark", "jvm", "matmul-extensions.jar",
-    )
-    ext_conf = (
-        {
-            "spark.jars": jar,
-            "spark.sql.extensions": "emulatinghadoop.spark.matmul.MatmulExtensions",
-        }
-        if os.path.exists(jar)
-        else {}
-    )
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
-        extra_conf=ext_conf,
     )
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
@@ -460,25 +442,14 @@ def main() -> None:
         headline_builders[label] = (lambda fn=fn, a=a, b=b: fn(a, b))
         run_entry(label, headline_builders[label], timings, spark_probe=True)
 
-    # matmul_auto with the Catalyst extension active (extras; VERDICT r6
-    # item 8): the injected optimizer rule reads Catalyst's size stats and
-    # picks broadcast-vs-shuffle with zero driver-side jobs.
     extras: dict[str, float] = {}
-    if ext_conf:
-        from emulating_hadoop_with_mpi_spark.mapreduce.matmul import matmul_auto
-        from emulating_hadoop_with_mpi_spark.plans.catalyst_matmul import extension_active
-
-        if extension_active(spark):
-            a = generate_matrix_df(spark, 768, 768, seed=1, num_partitions=int(cpus))
-            b = generate_matrix_df(spark, 768, 768, seed=2, num_partitions=int(cpus))
-            run_extra("matmul_auto_768", lambda: matmul_auto(a, b), extras)
 
     # matmul_auto above the block boundary (VERDICT r8 item 6): both
     # shapes dispatch to blocked GEMM under the measured 1B-product
     # crossover (see matmul_auto's docstring for the full strategy A/B —
     # at 2.1B products on the rectangle, block 4.3 s vs broadcast-A
-    # 33.2 s vs COO 20.4 s).  dims passed explicitly so the Python
-    # dispatch (not the Catalyst extension) is what's exercised.
+    # 33.2 s vs COO 20.4 s).  dims passed explicitly, so no count jobs
+    # run before the multiply.
     from emulating_hadoop_with_mpi_spark.mapreduce.matmul import matmul_auto as _mm_auto
 
     big_a = generate_matrix_df(spark, 2048, 2048, seed=1, num_partitions=int(cpus))

@@ -21,11 +21,12 @@ Six formulations here:
   small-B case — the declarative analogue of the reference's
   ``MPI_Bcast`` of the whole B matrix (``program.c:98``).
 
-- ``matmul_mapreduce`` (faithful): the reference's exact KV dataflow on
-  RDDs — flatMap emit of tagged string pairs, groupByKey, per-key reduce —
-  but with an order-INdependent reduce (dict on j), because the
-  reference's pairwise walk (``program.c:427-436``) relies on an emission
-  order Spark's shuffle does not preserve (SURVEY §2 note 1).
+- ``matmul_mapreduce`` (faithful): the reference's exact KV dataflow,
+  run on the package's own ``map_reduce`` — flatMap emit of tagged string
+  pairs, groupByKey, per-key reduce — but with an order-INdependent
+  reduce (dict on j), because the reference's pairwise walk
+  (``program.c:427-436``) relies on an emission order Spark's shuffle
+  does not preserve (SURVEY §2 note 1).
 
 - ``matmul_block``: B×B tiles joined on the block dimension and
   multiplied as dense NumPy GEMMs inside one ``mapInArrow`` stage — the
@@ -37,7 +38,8 @@ Six formulations here:
   each task owns output tiles and reads its A row bands and B column
   bands straight from the files — no decode, no shuffle.
 
-- ``matmul_auto``: picks block, broadcast (either side) or COO by size.
+- ``matmul_auto``: the one dispatcher — picks block, broadcast (either
+  side) or COO from the sizes alone (``dims``, or its count jobs).
 
 All of them aggregate into int64 — the reference's ``int sum``
 (``program.c:425``) overflows at scale.  On the join and GEMM arms a
@@ -51,9 +53,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from emulating_hadoop_with_mpi_spark.mapreduce.api import map_reduce
+
 # L·M·N products above which a multiply leaves the joins for a GEMM arm
 # (matmul_auto's block arm, multiply_dat_files' dense arm).
 _BLOCK_PRODUCTS = 1_000_000_000
+# Cells of a side small enough for matmul_auto to broadcast it.
+_BROADCAST_CELLS = 2_000_000
+# Tile edge of matmul_auto's block arm.
+_AUTO_BLOCK = 256
 
 
 def _make_exact_gemm():
@@ -164,22 +172,21 @@ def matmul_mapreduce(
     reducer: rebuild {j: a_v} and {j: b_v} per key and sum products —
     order-independent, unlike ``program.c:427-436``.
     """
-    _, _, n = dims
-    l = dims[0]
+    l, _, n = dims
 
-    def map_a(row):
-        i, j, v = row
-        prefix = f"(A,{j},{v})"
-        return [(f"({i},{k})", prefix) for k in range(n)]
+    def mapper(cell):
+        tag, r, c, v = cell
+        if tag == "A":  # A[i=r, j=c]: one pair per output column k
+            val = f"(A,{c},{v})"
+            return [(f"({r},{k})", val) for k in range(n)]
+        val = f"(B,{r},{v})"  # B[j=r, k=c]: one pair per output row i
+        return [(f"({i},{c})", val) for i in range(l)]
 
-    def map_b(row):
-        j, k, v = row
-        val = f"(B,{j},{v})"
-        return [(f"({i},{k})", val) for i in range(l)]
+    # Tagged and unioned JVM-side, so the mapper runs in the same Python
+    # pass that receives the cells.
+    cells = a.select(F.lit("A"), "i", "j", "v").union(b.select(F.lit("B"), "i", "j", "v")).rdd
 
-    pairs = a.rdd.map(tuple).flatMap(map_a).union(b.rdd.map(tuple).flatMap(map_b))
-
-    def reduce_fn(key, values):
+    def reducer(key, values):
         a_vals: dict[int, int] = {}
         b_vals: dict[int, int] = {}
         for s in values:
@@ -192,9 +199,7 @@ def matmul_mapreduce(
         i, k = key[1:-1].split(",")
         yield (int(i), int(k), total)
 
-    out = pairs.groupByKey(numPartitions=num_partitions).flatMap(
-        lambda kv: reduce_fn(kv[0], kv[1])
-    )
+    out = map_reduce(cells, mapper, reducer, num_partitions=num_partitions)
     return spark.createDataFrame(out, "i int, k int, v long")
 
 
@@ -370,12 +375,7 @@ def matmul_block(
 
 
 def matmul_auto(
-    a: DataFrame,
-    b: DataFrame,
-    dims: tuple[int, int, int] | None = None,
-    broadcast_threshold_cells: int = 2_000_000,
-    block_threshold_products: int = _BLOCK_PRODUCTS,
-    block: int = 256,
+    a: DataFrame, b: DataFrame, dims: tuple[int, int, int] | None = None
 ) -> DataFrame:
     """Pick the physical multiply strategy by size — the planner decision
     the reference hardwires (it always replicates everything,
@@ -400,22 +400,9 @@ def matmul_auto(
     - otherwise → plain COO join+agg and let Catalyst/AQE do the rest.
 
     ``dims`` (L, M, N) comes free from the `.dat` filename convention;
-    without it we spend one cheap count/max action per input — UNLESS the
-    Catalyst matmul extension is loaded (plans/catalyst_matmul.py), in
-    which case the broadcast-vs-shuffle choice is deferred to the injected
-    optimizer rule, which reads Catalyst's own size statistics at plan
-    time: zero driver-side jobs.  (The blocked-GEMM arm still requires
-    known dims — its stage is an Arrow ``mapInArrow`` the JVM planner
-    can't construct.)
+    without it we spend one cheap count/max action per input.  Either
+    way the choice depends only on those sizes, never on the session.
     """
-    if dims is None:
-        from emulating_hadoop_with_mpi_spark.plans.catalyst_matmul import (
-            extension_active,
-            matmul_catalyst,
-        )
-
-        if extension_active(a.sparkSession):
-            return matmul_catalyst(a, b)
     if dims is not None:
         l, m, n = dims
         a_cells, b_cells = l * m, m * n
@@ -433,11 +420,11 @@ def matmul_auto(
     # behavior is unchanged — while a sparse pair with huge dims but few
     # nonzeros (near-diagonal A, tiny B) correctly stays on the
     # nnz-proportional joins instead of paying dense block² tile GEMMs.
-    if a_cells * b_cells // max(m, 1) > block_threshold_products:
-        return matmul_block(a, b, block=block)
-    if b_cells <= broadcast_threshold_cells:
+    if a_cells * b_cells // max(m, 1) > _BLOCK_PRODUCTS:
+        return matmul_block(a, b, block=_AUTO_BLOCK)
+    if b_cells <= _BROADCAST_CELLS:
         return matmul_broadcast(a, b)
-    if a_cells <= broadcast_threshold_cells:
+    if a_cells <= _BROADCAST_CELLS:
         # symmetric: broadcast A instead
         return _join_matmul(a, b, "a")
     return matmul_coo(a, b)

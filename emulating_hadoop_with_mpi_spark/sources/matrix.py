@@ -57,25 +57,6 @@ def matrix_dims_from_name(path: str) -> tuple[int, int]:
     return int(m.group(1)), int(m.group(2))
 
 
-def _read_matrix_coo_jvm(
-    spark: SparkSession, path: str, rows: int, cols: int, rows_per_split: int
-) -> DataFrame | None:
-    """JVM-side decode when the extension jar is loaded, else None.
-
-    Local ``file:``-less paths are absolutized first so executor-side Hadoop
-    FS resolution matches the driver's view; URIs pass through untouched.
-    """
-    fpath = path if "://" in path else os.path.abspath(path)
-    try:
-        jdf = spark._jvm.emulatinghadoop.spark.matmul.MatrixSource.readCoo(
-            spark._jsparkSession, fpath, rows, cols, rows_per_split
-        )
-        return DataFrame(jdf, spark)
-    except TypeError:
-        # jar absent: py4j resolves MatrixSource to an uncallable JavaPackage
-        return None
-
-
 def _dat_filesystem(path: str):
     """(pyarrow filesystem, path within it) for a local path or a URI — the
     one opener the size check, the ``.dat`` decode and the dense GEMM arm
@@ -117,13 +98,10 @@ def read_matrix_coo(
     Mirrors ``readArraysFromFile`` (``program.c:45-72``) but distributed and
     vectorized: the driver checks the file size, then plans row-aligned
     byte-range splits by split id (one task each, sized like FileScan
-    splits, no exchange).  When the extension jar is on the
-    session classpath the decode runs entirely JVM-side
-    (``jvm/src/MatrixSource.scala`` — positioned Hadoop FS read +
-    little-endian IntBuffer, no Python boundary at all); otherwise each task
-    positioned-reads its range through ``pyarrow.fs`` and decodes with
-    ``np.frombuffer`` + ``np.repeat``/``np.tile`` into one Arrow batch per
-    split — no Python-per-cell loop anywhere on either path.
+    splits, no exchange).  Each task positioned-reads its range through
+    ``pyarrow.fs`` and decodes with ``np.frombuffer`` +
+    ``np.repeat``/``np.tile`` into one Arrow batch per split — no
+    Python-per-cell loop anywhere.
     """
     rows, cols = dims if dims is not None else matrix_dims_from_name(path)
     _check_dat_size(path, rows, cols)
@@ -135,10 +113,6 @@ def read_matrix_coo(
     # least defaultParallelism splits when the matrix is big enough to care.
     par = max(1, spark.sparkContext.defaultParallelism)
     rows_per_split = max(1, min(_split_bytes(spark) // record_len, -(-rows // par)))
-
-    jvm_df = _read_matrix_coo_jvm(spark, path, rows, cols, rows_per_split)
-    if jvm_df is not None:
-        return jvm_df
     n_splits = -(-rows // rows_per_split)
     filesystem, fpath = _dat_filesystem(path)
 

@@ -96,7 +96,11 @@ def test_matmul_block_tile_injection_equivalence(spark):
 
 def test_matmul_auto_strategy_dispatch(spark):
     """matmul_auto picks broadcast for a small side, block beyond the
-    product threshold, COO between — all producing identical results."""
+    product threshold, COO between — all producing identical results.
+
+    The dispatcher reads only ``dims``; the join and GEMM arms never do,
+    so each arm is driven by the ``dims`` passed for the same small data.
+    """
     from emulating_hadoop_with_mpi_spark.mapreduce.matmul import matmul_auto
     from emulating_hadoop_with_mpi_spark.plans.inspect import executed_plan
 
@@ -111,39 +115,49 @@ def test_matmul_auto_strategy_dispatch(spark):
     assert "BuildRight" in executed_plan(c1)
     np.testing.assert_array_equal(_dense(c1, 12, 8), expect)
 
-    # only A fits → A is the broadcast (build) side
+    # only A fits (B is 10×300k = 3M cells) → A is the broadcast (build) side
     a5 = generate_matrix_numpy(8, 10, seed=33)
     b5 = generate_matrix_numpy(10, 12, seed=34)
     c5 = matmul_auto(
         matrix_coo_from_numpy(spark, a5), matrix_coo_from_numpy(spark, b5),
-        dims=(8, 10, 12), broadcast_threshold_cells=100,
+        dims=(8, 10, 300_000),
     )
     assert "BuildLeft" in executed_plan(c5)
     np.testing.assert_array_equal(_dense(c5, 8, 12), a5.astype(np.int64) @ b5)
 
-    # force the block path via thresholds
-    c2 = matmul_auto(
-        da, db, dims=(12, 10, 8), broadcast_threshold_cells=1, block_threshold_products=1, block=4
-    )
+    # neither side fits and 2000³ = 8e9 products → block path
+    c2 = matmul_auto(da, db, dims=(2000, 2000, 2000))
     # the block path's physical marker is the Arrow-batch UDF (round 16:
     # mapInArrow replaced mapInPandas — zero-copy list access)
     assert "mapinarrow" in executed_plan(c2).lower()
     np.testing.assert_array_equal(_dense(c2, 12, 8), expect)
 
-    # middle ground (no dims hint → derives sizes with one action per side)
-    c3 = matmul_auto(da, db, broadcast_threshold_cells=1, block_threshold_products=10**12)
+    # middle ground: neither side fits (4M cells each), 8e8 products → COO
+    c3 = matmul_auto(da, db, dims=(200, 20_000, 200))
+    assert "SortMergeJoin" in executed_plan(c3)
+    assert "BroadcastHashJoin" not in executed_plan(c3)
     np.testing.assert_array_equal(_dense(c3, 12, 8), expect)
 
-    # the product check outranks broadcastability (round 9): a side small
-    # enough to broadcast must still dispatch to block GEMM when L·M·N
-    # exceeds the threshold — the measured rectangle case where
-    # broadcast-A was 7.7× slower than block (matmul_auto docstring).
-    c4 = matmul_auto(
-        da, db, dims=(12, 10, 8), broadcast_threshold_cells=10**9,
-        block_threshold_products=1, block=4,
-    )
+    # the product check outranks broadcastability (round 9): both sides
+    # small enough to broadcast (~1M cells) must still dispatch to block
+    # GEMM when L·M·N exceeds the threshold — the measured rectangle case
+    # where broadcast-A was 7.7× slower than block (matmul_auto docstring).
+    c4 = matmul_auto(da, db, dims=(1000, 1000, 1001))
     assert "MapInArrow" in executed_plan(c4)
     np.testing.assert_array_equal(_dense(c4, 12, 8), expect)
+
+
+def test_matmul_auto_dense_above_boundary_without_dims(spark):
+    """With ``dims=None`` the sizes come from count jobs, and a dense
+    1100×1000 @ 1000×1000 pair (1.1e9 products) plans the block GEMM, as
+    it does with ``dims``.  Only the plan is inspected; the GEMM does not
+    run."""
+    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import matmul_auto
+    from emulating_hadoop_with_mpi_spark.plans.inspect import executed_plan
+
+    a = generate_matrix_df(spark, 1100, 1000, seed=1)
+    b = generate_matrix_df(spark, 1000, 1000, seed=2)
+    assert "MapInArrow" in executed_plan(matmul_auto(a, b))
 
 
 def test_matmul_mapreduce_faithful_path(spark):
@@ -161,7 +175,8 @@ def test_matmul_mapreduce_faithful_path(spark):
 
 def test_dat_roundtrip_and_filename_schema(spark, tmp_path):
     """The reference's on-disk format: write with its naming convention,
-    parse dims from the name (program.c:34-43), read distributed."""
+    parse dims from the name (program.c:34-43), read distributed —
+    including int32 extremes, uneven row splits and an empty matrix."""
     arr = generate_matrix_numpy(32, 32, seed=42)
     path = write_matrix_dat(arr, str(tmp_path), file_id=2)
     assert path.endswith("Array_32x32_2.dat")
@@ -169,6 +184,25 @@ def test_dat_roundtrip_and_filename_schema(spark, tmp_path):
     coo = read_matrix_coo(spark, path)
     assert coo.count() == 32 * 32
     np.testing.assert_array_equal(coo_to_numpy(coo, 32, 32), arr)
+
+    # int32 extremes on an odd 67×29 shape, read through 5-row splits: the
+    # last split holds the 2 rows left over
+    ext = np.random.default_rng(11).integers(-(2**31), 2**31, size=(67, 29)).astype(np.int32)
+    ext[0, 0], ext[-1, -1] = -(2**31), 2**31 - 1
+    path = write_matrix_dat(ext, str(tmp_path), file_id=9)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(5 * 29 * 4))
+    try:
+        coo = read_matrix_coo(spark, path)
+        assert coo.rdd.getNumPartitions() == 14
+        np.testing.assert_array_equal(coo_to_numpy(coo, 67, 29), ext)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+    # empty 0×5 and 5×0 matrices read as no cells
+    for shape in ((0, 5), (5, 0)):
+        empty = write_matrix_dat(np.zeros(shape, dtype=np.int32), str(tmp_path), file_id=10)
+        coo = read_matrix_coo(spark, empty)
+        assert coo.columns == ["i", "j", "v"] and coo.count() == 0
 
 
 def test_end_to_end_reference_pipeline(spark, tmp_path):

@@ -44,23 +44,10 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "emulating_hadoop_with_mpi_spark", "jvm", "matmul-extensions.jar",
-    )
-    ext_conf = (
-        {
-            "spark.jars": jar,
-            "spark.sql.extensions": "emulatinghadoop.spark.matmul.MatmulExtensions",
-        }
-        if os.path.exists(jar)
-        else {}
-    )
     spark = get_spark(
         app_name="opt_probe",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
-        extra_conf=ext_conf,
     )
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
