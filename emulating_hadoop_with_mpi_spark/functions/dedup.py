@@ -484,7 +484,8 @@ def ppjoin_ranked(
     deduplicate common subplans without a persist) and moved the hashed
     shingle stream through three exchanges (partial df agg, join probe,
     doc window); this form tokenizes once and exchanges twice (sh
-    window, doc windows).  Bit-identical output, pinned at
+    window, doc windows).  Bit-identical output to the join form (kept
+    as the reference in tests/reference_forms.py), pinned at
     sf0.001/0.01/0.1 AND the Zipf-200k hot-key corpus; interleaved
     min-of-reps: sf10 13.1 → 6.0 s, zipf200k 13.2 → 3.1 s.  Skew note:
     the count window buffers one shingle group per task
@@ -501,32 +502,6 @@ def ppjoin_ranked(
     ds = shingles_df(docs, n=ngram).select("doc_id", F.xxhash64("shingle").alias("sh"))
     return (
         ds.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("sh"))
-            ),
-        )
-    )
-
-
-def _ppjoin_ranked_join(
-    docs: DataFrame, ngram: int = 3, plan: str = "auto"
-) -> DataFrame:
-    """The former groupBy + join formulation of :func:`ppjoin_ranked`
-    (rounds 15-17), retained as the window form's equality twin."""
-    from pyspark.sql import Window
-
-    _pin = (
-        (lambda f: f.hint("shuffle_hash"))
-        if _ppjoin_partitioned(docs, plan)
-        else (lambda f: f)
-    )
-    ds = shingles_df(docs, n=ngram).select("doc_id", F.xxhash64("shingle").alias("sh"))
-    df_counts = ds.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        ds.join(_pin(df_counts), "sh")
         .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
         .withColumn(
             "rk",

@@ -58,87 +58,54 @@ from pyspark.sql import functions as F
 
 DSIR_BUCKETS = 4096
 
-# md5-string cache cap per Python worker (the gram → bucket memo in the
-# Arrow kernel): bounded so a task streaming a huge vocabulary cannot
-# grow worker memory without limit — on overflow the memo resets and
-# later grams simply re-hash.
-_MD5_CACHE_CAP = 1 << 20
-
-
-def _bucket(gram: Column, buckets: int = DSIR_BUCKETS) -> Column:
-    """md5-based hash bucket — identical in Spark and DuckDB (RE2/ANSI
-    portable: 15 hex chars = 60 bits, always non-negative, so pmod ==
-    %)."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long"),
-        F.lit(buckets),
-    )
-
 
 def _bucket_batches_fn(buckets: int):
     """Arrow-batch profile kernel (round 18, guide §4.2 + §2.4):
-    (doc_id, is_target, text) batches → (doc_id, is_target, b, c) rows —
-    the per-doc hashed-bigram bucket counts computed ROW-LOCALLY.  The
-    former Catalyst form paid an interpreted transform lambda per token,
-    one md5 per bigram OCCURRENCE, and a full (doc_id, b) groupBy
-    exchange of the exploded gram stream; a document's grams all live in
-    one row, so the kernel counts them in-process and the exchange
-    disappears from the plan.  Bit-identical: same Java-\\s tokenization
-    of lower(text), same ``md5(gram)[:15 hex] % buckets`` arithmetic
-    (md5 of one gram string is memoized, so repeated grams hash once) —
-    pinned against the retained _doc_bucket_counts_jvm twin in
-    tests/test_profile_kernels.py."""
-    from emulating_hadoop_with_mpi_spark.functions.text import _JAVA_WS_RE
+    staged (doc_id, is_target, lower_text) batches → (doc_id, is_target,
+    b, c) rows — the per-doc hashed-bigram bucket counts computed
+    ROW-LOCALLY.  A document's grams all live in one row, so the kernel
+    counts them in-process and the former (doc_id, b) groupBy exchange
+    disappears from the plan.  A gram is two adjacent tokens joined by
+    one space; each distinct gram of a batch is hashed once,
+    ``md5(gram)[:15 hex] % buckets``."""
+    from emulating_hadoop_with_mpi_spark.functions.text import _token_codes
 
     def gen(batches):
         import hashlib
 
-        memo: dict[str, int] = {}
+        import numpy as np
+
+        def h60(s: str) -> int:
+            return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
             names = batch.schema.names
-            ids = batch.column(names.index("doc_id")).to_pylist()
-            tgts = batch.column(names.index("is_target")).to_pylist()
-            texts = batch.column(names.index("text")).to_pylist()
-            o_id: list = []
-            o_tg: list = []
-            o_b: list = []
-            o_c: list = []
-            for did, tgt, t in zip(ids, tgts, texts):
-                toks = [w for w in _JAVA_WS_RE.split(t.lower()) if w]
-                if len(toks) < 2:
-                    continue
-                counts: dict[int, int] = {}
-                prev = toks[0]
-                for w in toks[1:]:
-                    g = prev + " " + w
-                    prev = w
-                    b = memo.get(g)
-                    if b is None:
-                        b = (
-                            int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                            % buckets
-                        )
-                        if len(memo) >= _MD5_CACHE_CAP:
-                            memo.clear()
-                        memo[g] = b
-                    counts[b] = counts.get(b, 0) + 1
-                for b, c in counts.items():
-                    o_id.append(did)
-                    o_tg.append(tgt)
-                    o_b.append(b)
-                    o_c.append(c)
-            if o_id:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(o_id, type=pa.int64()),
-                        pa.array(o_tg, type=pa.bool_()),
-                        pa.array(o_b, type=pa.int64()),
-                        pa.array(o_c, type=pa.int64()),
-                    ],
-                    names=["doc_id", "is_target", "b", "c"],
-                )
+            tok_off, codes, dic = _token_codes(batch.column(names.index("lower_text")))
+            k = max(len(dic), 1)
+            rows = np.repeat(np.arange(n, dtype=np.int64), np.diff(tok_off))
+            at = np.flatnonzero(np.arange(codes.size) + 1 < tok_off[rows + 1])
+            grams, rank = np.unique(codes[at] * k + codes[at + 1], return_inverse=True)
+            words = dic.to_pylist()
+            gram_b = np.array(
+                [h60(f"{words[g // k]} {words[g % k]}") % buckets for g in grams.tolist()],
+                dtype=np.int64,
+            )
+            key, c = np.unique(rows[at] * buckets + gram_b[rank], return_counts=True)
+            if key.size == 0:
+                continue
+            r = key // buckets
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(names.index("doc_id")).take(r),
+                    batch.column(names.index("is_target")).take(r),
+                    pa.array(key % buckets, type=pa.int64()),
+                    pa.array(c, type=pa.int64()),
+                ],
+                names=["doc_id", "is_target", "b", "c"],
+            )
 
     return gen
 
@@ -152,35 +119,11 @@ def doc_bucket_counts(
     (_bucket_batches_fn): zero exchanges — the former explode + groupBy
     shuffled the whole gram stream to group by a key (doc_id) every gram
     of which already sat in one row."""
-    return docs.select(
-        "doc_id", is_target.alias("is_target"), "text"
-    ).mapInArrow(
+    from emulating_hadoop_with_mpi_spark.functions.text import _stage_text
+
+    return _stage_text(docs, is_target.alias("is_target")).mapInArrow(
         _bucket_batches_fn(buckets),
         "doc_id bigint, is_target boolean, b bigint, c bigint",
-    )
-
-
-def _doc_bucket_counts_jvm(
-    docs: DataFrame, is_target: Column, buckets: int = DSIR_BUCKETS
-) -> DataFrame:
-    """The former all-Catalyst formulation of :func:`doc_bucket_counts`
-    (rounds 10-17), retained as the kernel's equality twin."""
-    toks = F.col("toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    from emulating_hadoop_with_mpi_spark.functions.text import tokens_col
-
-    return (
-        docs.select("doc_id", is_target.alias("is_target"), tokens_col().alias("toks"))
-        .filter(F.size(toks) >= 2)
-        .select("doc_id", "is_target", F.explode(grams).alias("g"))
-        .select("doc_id", "is_target", _bucket(F.col("g"), buckets).alias("b"))
-        .groupBy("doc_id", "is_target", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
     )
 
 

@@ -52,81 +52,60 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _h60(col):
-    """60-bit md5 hash — identical in Spark and DuckDB."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _profile_batches_fn():
     """Arrow-batch profile kernel (round 18, guide §4.2 + §2.4 — the
-    dsir._bucket_batches_fn shape): (doc_id, text) batches →
-    (doc_id, h12, h1, c) rows, the per-doc hashed-bigram counts computed
-    ROW-LOCALLY.  The former Catalyst form paid an interpreted transform
-    lambda per token, TWO md5s per bigram occurrence, and a full
-    (doc_id, h12, h1) groupBy exchange of the exploded pair stream; a
-    document's bigrams all live in one row, so the kernel counts them
-    in-process and the exchange disappears.  Bit-identical: same Java-\\s
-    tokenization of lower(text), same 60-bit ``md5(s)[:15 hex]``
-    arithmetic (memoized per distinct string — repeated grams and the
-    per-token unigram hashes compute once), counts keyed by the exact
-    (h12, h1) PAIR like the former groupBy, so even an md5 collision
-    between bigrams sharing h12 but not h1 yields the same rows — pinned
-    against the retained _doc_bigram_profile_jvm twin in
-    tests/test_profile_kernels.py."""
-    from emulating_hadoop_with_mpi_spark.functions.dsir import _MD5_CACHE_CAP
-    from emulating_hadoop_with_mpi_spark.functions.text import _JAVA_WS_RE
+    dsir._bucket_batches_fn shape): staged (doc_id, lower_text) batches
+    → (doc_id, h12, h1, c) rows, the per-doc hashed-bigram counts
+    computed ROW-LOCALLY.  A document's bigrams all live in one row, so
+    the kernel counts them in-process and the former (doc_id, h12, h1)
+    groupBy exchange disappears.  h12 is the 60-bit ``md5(s)[:15 hex]``
+    of the gram (two adjacent tokens joined by one space), h1 that of its
+    first token; each distinct gram and token of a batch is hashed once.
+    Counts are keyed by the exact (h12, h1) PAIR like the former groupBy,
+    so even an md5 collision between grams yields the same rows."""
+    from emulating_hadoop_with_mpi_spark.functions.text import _token_codes
 
     def gen(batches):
         import hashlib
 
-        memo: dict[str, int] = {}
+        import numpy as np
 
         def h60(s: str) -> int:
-            v = memo.get(s)
-            if v is None:
-                v = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-                if len(memo) >= _MD5_CACHE_CAP:
-                    memo.clear()
-                memo[s] = v
-            return v
+            return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
             names = batch.schema.names
-            ids = batch.column(names.index("doc_id")).to_pylist()
-            texts = batch.column(names.index("text")).to_pylist()
-            o_id: list = []
-            o_12: list = []
-            o_1: list = []
-            o_c: list = []
-            for did, t in zip(ids, texts):
-                toks = [w for w in _JAVA_WS_RE.split(t.lower()) if w]
-                if len(toks) < 2:
-                    continue
-                counts: dict[tuple[int, int], int] = {}
-                prev = toks[0]
-                hprev = h60(prev)
-                for w in toks[1:]:
-                    key = (h60(prev + " " + w), hprev)
-                    counts[key] = counts.get(key, 0) + 1
-                    prev = w
-                    hprev = h60(w)
-                for (h12, h1), c in counts.items():
-                    o_id.append(did)
-                    o_12.append(h12)
-                    o_1.append(h1)
-                    o_c.append(c)
-            if o_id:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(o_id, type=pa.int64()),
-                        pa.array(o_12, type=pa.int64()),
-                        pa.array(o_1, type=pa.int64()),
-                        pa.array(o_c, type=pa.int64()),
-                    ],
-                    names=["doc_id", "h12", "h1", "c"],
-                )
+            tok_off, codes, dic = _token_codes(batch.column(names.index("lower_text")))
+            k = max(len(dic), 1)
+            rows = np.repeat(np.arange(n, dtype=np.int64), np.diff(tok_off))
+            at = np.flatnonzero(np.arange(codes.size) + 1 < tok_off[rows + 1])
+            grams, rank = np.unique(codes[at] * k + codes[at + 1], return_inverse=True)
+            words = dic.to_pylist()
+            firsts = np.unique(grams // k)
+            h_word = np.zeros(k, dtype=np.int64)
+            h_word[firsts] = [h60(words[w]) for w in firsts.tolist()]
+            hashes = np.empty((grams.size, 2), dtype=np.int64)
+            hashes[:, 0] = [h60(f"{words[g // k]} {words[g % k]}") for g in grams.tolist()]
+            hashes[:, 1] = h_word[grams // k]
+            # dense id of each distinct (h12, h1) pair, then (row, id) counts
+            pairs, pair_id = np.unique(hashes, axis=0, return_inverse=True)
+            m = max(len(pairs), 1)
+            key, c = np.unique(rows[at] * m + pair_id.reshape(-1)[rank], return_counts=True)
+            if key.size == 0:
+                continue
+            hk = pairs[key % m]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(names.index("doc_id")).take(key // m),
+                    pa.array(hk[:, 0], type=pa.int64()),
+                    pa.array(hk[:, 1], type=pa.int64()),
+                    pa.array(c, type=pa.int64()),
+                ],
+                names=["doc_id", "h12", "h1", "c"],
+            )
 
     return gen
 
@@ -138,34 +117,11 @@ def doc_bigram_profile(docs: DataFrame) -> DataFrame:
     (_profile_batches_fn): zero exchanges — the former explode + groupBy
     shuffled the whole pair stream to group by a key (doc_id) every pair
     of which already sat in one row."""
-    return docs.select("doc_id", "text").mapInArrow(
+    from emulating_hadoop_with_mpi_spark.functions.text import _stage_text
+
+    return _stage_text(docs).mapInArrow(
         _profile_batches_fn(),
         "doc_id bigint, h12 bigint, h1 bigint, c bigint",
-    )
-
-
-def _doc_bigram_profile_jvm(docs: DataFrame) -> DataFrame:
-    """The former all-Catalyst formulation of :func:`doc_bigram_profile`
-    (rounds 10-17), retained as the kernel's equality twin."""
-    from emulating_hadoop_with_mpi_spark.functions.text import tokens_col
-
-    toks = F.col("toks")
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.struct(
-            _h60(F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1))).alias(
-                "h12"
-            ),
-            _h60(F.element_at(toks, i)).alias("h1"),
-        ),
-    )
-    return (
-        docs.select("doc_id", tokens_col().alias("toks"))
-        .filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
-        .select("doc_id", F.col("p.h12").alias("h12"), F.col("p.h1").alias("h1"))
-        .groupBy("doc_id", "h12", "h1")
-        .agg(F.count(F.lit(1)).alias("c"))
     )
 
 

@@ -36,8 +36,6 @@ identically.
 
 from __future__ import annotations
 
-import re as _re
-
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,49 +46,39 @@ BM25_B = 0.75
 
 def _postings_batches_fn():
     """Arrow-batch posting kernel (round 18, guide §4.2 + §2.4 — the
-    dsir/lm profile-kernel shape): (doc_id, text) batches →
+    dsir/lm profile-kernel shape): staged (doc_id, lower_text) batches →
     (doc_id, term, tf, dl) rows, per-doc term frequencies computed
-    ROW-LOCALLY.  The former explode + groupBy(doc_id, term) shuffled
-    the whole token stream to group by a key every member of which
-    already sat in one row.  Bit-identical rows: same Java-\\s
-    tokenization of lower(text), exact integer counts, dl typed int
-    like the former F.size.  Self-contained closure (no module-function
-    references) so workers need not import this package."""
-    ws_re = _re.compile("[ \t\n\x0b\f\r]+")
+    ROW-LOCALLY by one unique over the (row, token code) keys.  The
+    former explode + groupBy(doc_id, term) shuffled the whole token
+    stream to group by a key every member of which already sat in one
+    row.  ``dl`` is typed int like the former F.size."""
+    from emulating_hadoop_with_mpi_spark.functions.text import _token_codes
 
     def gen(batches):
-        from collections import Counter
+        import numpy as np
 
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
             names = batch.schema.names
-            ids = batch.column(names.index("doc_id")).to_pylist()
-            texts = batch.column(names.index("text")).to_pylist()
-            o_id: list = []
-            o_t: list = []
-            o_tf: list = []
-            o_dl: list = []
-            for did, t in zip(ids, texts):
-                toks = [w for w in ws_re.split(t.lower()) if w]
-                if not toks:
-                    continue
-                dl = len(toks)
-                for term, tf in Counter(toks).items():
-                    o_id.append(did)
-                    o_t.append(term)
-                    o_tf.append(tf)
-                    o_dl.append(dl)
-            if o_id:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(o_id, type=pa.int64()),
-                        pa.array(o_t, type=pa.string()),
-                        pa.array(o_tf, type=pa.int64()),
-                        pa.array(o_dl, type=pa.int32()),
-                    ],
-                    names=["doc_id", "term", "tf", "dl"],
-                )
+            tok_off, codes, dic = _token_codes(batch.column(names.index("lower_text")))
+            k = max(len(dic), 1)
+            dl = np.diff(tok_off)
+            rows = np.repeat(np.arange(n, dtype=np.int64), dl)
+            key, tf = np.unique(rows * k + codes, return_counts=True)
+            if key.size == 0:
+                continue
+            r = key // k
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(names.index("doc_id")).take(r),
+                    dic.take(key % k),
+                    pa.array(tf, type=pa.int64()),
+                    pa.array(dl[r], type=pa.int32()),
+                ],
+                names=["doc_id", "term", "tf", "dl"],
+            )
 
     return gen
 
@@ -106,27 +94,13 @@ def corpus_postings(docs: DataFrame) -> DataFrame:
     zero exchanges; the former explode + groupBy paid a full
     token-stream shuffle for a row-local grouping (measured 0.72 →
     0.41 s at sf0.1, 0.52 → 0.39 s at sf1, min-of-3 interleaved;
-    equality pinned in tests/test_postings_kernel.py against the
-    retained _corpus_postings_jvm twin)."""
-    return docs.select("doc_id", "text").mapInArrow(
+    equality pinned in tests/test_postings_kernel.py against the former
+    formulation, kept in tests/reference_forms.py)."""
+    from emulating_hadoop_with_mpi_spark.functions.text import _stage_text
+
+    return _stage_text(docs).mapInArrow(
         _postings_batches_fn(),
         "doc_id bigint, term string, tf bigint, dl int",
-    )
-
-
-def _corpus_postings_jvm(docs: DataFrame) -> DataFrame:
-    """The former explode + groupBy formulation of
-    :func:`corpus_postings` (rounds 11-17), retained as the kernel's
-    equality twin."""
-    from emulating_hadoop_with_mpi_spark.functions.text import tokens_col
-
-    staged = docs.select("doc_id", tokens_col().alias("toks"))
-    return (
-        staged.select(
-            "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term")
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
     )
 
 

@@ -10,8 +10,6 @@ across engines).
 
 from __future__ import annotations
 
-import re as _re
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -155,36 +153,6 @@ def tokens_col(text: str | Column = "text") -> Column:
 
 
 _SQL_TOKENS = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x != '')"
-
-
-# Longest run of equal adjacent elements in a SORTED bigint array — i.e.
-# the count of the most frequent element — as ONE pure Catalyst aggregate
-# lambda, no explode/groupBy/shuffle.  This is what lets q81's repetition
-# features stay map-only at 100 TB: the per-doc "most frequent n-gram"
-# that Gopher computes with a corpus-wide pass, shuffle-free.  Operates
-# on xxhash64 fingerprints, not the strings themselves: long compares in
-# the accumulator are ~5× faster end-to-end than string compares
-# (measured 2.4 s → 0.54 s for q81's three features at sf0.1), at a
-# ~n²/2⁶⁴ per-doc collision risk (~1e-13 corpus-wide) accepted and
-# documented — the oracle counts real token strings.
-def _max_run(sorted_hashes: Column) -> Column:
-    return F.aggregate(
-        sorted_hashes,
-        F.struct(
-            F.lit(None).cast("bigint").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x.eqNullSafe(acc.prev), acc.run + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best,
-                F.when(x.eqNullSafe(acc.prev), acc.run + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
 
 
 @query(
@@ -402,14 +370,9 @@ def q81_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     word / n_tokens, most-frequent word-2-gram / n_2grams, and the
     duplicate-3-gram fraction.
 
-    The repetition counts are MAP-ONLY at any corpus size: array_sort +
-    a run-length aggregate lambda (_max_run) gives the per-doc mode count
-    with zero shuffle, instead of Gopher's explode+groupBy.  The n-gram
-    arrays are built once per row behind an explode(array(...)) barrier —
-    without it CollapseProject inlines the tokenize expression into every
-    reference and the split re-runs per reference (and per ELEMENT if a
-    lambda body names the column; measured 4× q80's entire runtime when
-    these features were first prototyped there)."""
+    The repetition counts are MAP-ONLY at any corpus size: the Arrow
+    kernel behind quality_scores counts each document's modes within its
+    row, with zero shuffle, instead of Gopher's explode+groupBy."""
     docs = load_table(spark, sf_dir, "documents")
     # Sort the NARROW input, then compute map-side: orderBy placed after
     # the feature projection makes the range-partitioner's sampling pass
@@ -420,44 +383,75 @@ def q81_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Quality-feature Arrow kernel (round 18, guide §4.2 — the r17 MinHash
-# pattern applied to the quality family): the per-doc repetition counts
-# (most-frequent word / bigram, duplicate-trigram distincts) and the
-# stopword/alpha/digit counts were Catalyst higher-order functions
-# (transform / zip_with / aggregate / filter lambdas) — interpreted PER
-# ELEMENT, the same cost class the MinHash kernel removed.  One
-# mapInArrow over (doc_id, text) now computes every count vectorized:
-# character classes as NumPy byte masks over the contiguous Arrow string
-# buffer, token modes via dictionary-encode + segmented reduceat.  The
-# ratio/quality projections stay in the JVM (identical expressions to
-# the former formulation), so every emitted value is bit-identical —
-# pinned against the retained _quality_scores_jvm twin in
-# tests/test_quality_kernel.py and by the q81/q82/q85 oracles.
+# Arrow text kernels (round 18, guide §4.2).  Four mapInArrow kernels —
+# quality_scores below, dsir.doc_bucket_counts, lm.doc_bigram_profile and
+# search.corpus_postings — read a _stage_text frame and share ONE
+# tokenizing front end (_token_codes): the text is split and
+# dictionary-encoded once per batch, and each kernel keeps only its own
+# vectorized reduction over the token codes.  Every kernel is pinned
+# bit-exactly against its former all-Catalyst form in
+# tests/reference_forms.py, and by the q81/q82/q84/q85 oracles.
 # ---------------------------------------------------------------------------
 
-# Java regex \s — what tokens_col splits on (python re over the same
-# class; the corpus tokenizer's semantics, NOT python's \s which adds
-# \x1c-\x1f etc.)
-_JAVA_WS_RE = _re.compile("[ \t\n\x0b\f\r]+")
+
+def _stage_text(docs: DataFrame, *keep: str | Column) -> DataFrame:
+    """A text kernel's input: ``doc_id`` cast to bigint, the ``keep``
+    columns, and ``lower(text)`` as ``lower_text``.  Spark lowers the
+    text, so the kernels fold case exactly as tokens_col does — under
+    any JVM locale."""
+    return docs.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        *keep,
+        F.lower("text").alias("lower_text"),
+    )
+
+
+def _make_token_codes():
+    """Build the kernels' shared front end as a LOCAL function, so
+    cloudpickle ships it by value inside each kernel's generator — Python
+    workers need not import this package (the driver may run from any
+    cwd)."""
+
+    def token_codes(lower_text):
+        """(tok_off, codes, dictionary) of a ``lower_text`` Arrow array:
+        row i's tokens are ``dictionary[codes[tok_off[i]:tok_off[i + 1]]]``
+        with int64 NumPy ``tok_off``/``codes`` and each distinct token
+        once in the Arrow ``dictionary``.  Tokens are tokens_col's: runs
+        between Java-\\s characters ([ \\t\\n\\x0b\\f\\r], not Python's
+        or RE2's wider class), empty tokens dropped.  A batch holds under
+        2^31 rows and tokens, so every kernel's composite key — a product
+        of two of (rows, tokens, distinct tokens or n-grams) — fits int64."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        if lower_text.null_count:
+            raise ValueError("text kernel: null text (upstream contract is non-null)")
+        parts = pc.split_pattern_regex(lower_text, "[ \t\n\x0b\f\r]+")
+        toks = pc.list_flatten(parts)
+        keep = pc.greater(pc.binary_length(toks), 0)
+        rows = pc.list_parent_indices(parts).filter(keep).to_numpy()
+        if max(len(lower_text), rows.size) >= 1 << 31:
+            raise ValueError("text kernel: batch too large for int64 keys")
+        tok_off = np.searchsorted(rows, np.arange(len(lower_text) + 1)).astype(np.int64)
+        enc = toks.filter(keep).dictionary_encode()
+        codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        return tok_off, codes, enc.dictionary
+
+    return token_codes
+
+
+_token_codes = _make_token_codes()
 
 
 def _qfeat_batches_fn(keep_text: bool):
-    """mapInArrow generator over (doc_id, text) batches → per-doc count
-    columns (n_chars, n_tokens, n_alpha, n_digit, n_stop, max_word, top2,
-    n2, n3, d3), all bigint.  Bit-identical to the
-    former Catalyst formulation: same Java-\\s tokenization of
-    lower(text) with empties dropped, ASCII [a-zA-Z]/[0-9] class counts,
-    length() = codepoint count (UTF-8 non-continuation bytes), exact
-    per-doc mode counts (the former xxhash64 fingerprint run-length
-    gave the same values absent 64-bit collisions).
-
-    Everything the generator references is nested or bound by value —
-    NO module-function references — so cloudpickle ships the whole
-    closure by value and Python workers need NOT be able to import this
-    package (the driver may run from any cwd; the r17 MinHash kernel set
-    the precedent)."""
-    stop_set = set(ALL_STOPWORDS)
-    ws_re = _JAVA_WS_RE
+    """mapInArrow generator over _stage_text(docs, "text") batches →
+    per-doc count columns (n_chars, n_tokens, n_alpha, n_digit, n_stop,
+    max_word, top2, n2, n3, d3), all bigint.  The character counts read
+    the original ``text``: length() = codepoint count (UTF-8
+    non-continuation bytes), ASCII [a-zA-Z]/[0-9] class counts.  The
+    token counts are exact per-doc modes and distincts over the token
+    codes."""
+    stopwords = pa.array(ALL_STOPWORDS)
 
     def seg_sums(mask: np.ndarray, offsets: np.ndarray) -> np.ndarray:
         """Per-segment sums of a boolean mask: cumsum sampled at offsets."""
@@ -468,30 +462,26 @@ def _qfeat_batches_fn(keep_text: bool):
     def seg_mode(row_ids: np.ndarray, codes: np.ndarray, k: int, n: int) -> np.ndarray:
         """Count of the most frequent code per row (0 for empty rows):
         unique over the composite (row, code) key, then a segmented max
-        of the counts — the vectorized twin of _max_run over sorted
-        hashes."""
+        of the counts."""
         out = np.zeros(n, dtype=np.int64)
         if codes.size == 0:
             return out
-        key = row_ids * k + codes
-        uk, uc = np.unique(key, return_counts=True)
+        uk, uc = np.unique(row_ids * k + codes, return_counts=True)
         urow = uk // k
         starts = np.concatenate(([0], np.flatnonzero(np.diff(urow)) + 1))
         out[urow[starts]] = np.maximum.reduceat(uc, starts)
         return out
 
     def gen(batches):
+        import pyarrow.compute as pc
+
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             names = batch.schema.names
-            ids = batch.column(names.index("doc_id"))
+            tok_off, codes, dic = _token_codes(batch.column(names.index("lower_text")))
             text_arr = batch.column(names.index("text"))
-            if text_arr.null_count:
-                raise ValueError(
-                    "quality kernel: null text (upstream contract is non-null)"
-                )
             bufs = text_arr.buffers()
             off_dtype = (
                 np.int64 if pa.types.is_large_string(text_arr.type) else np.int32
@@ -508,73 +498,28 @@ def _qfeat_batches_fn(keep_text: bool):
             n_alpha = seg_sums(m_alpha, ends)
             n_digit = seg_sums((data >= 48) & (data <= 57), ends)
 
-            texts = text_arr.to_pylist()
-            flat: list = []
-            counts = np.empty(n, dtype=np.int64)
-            for i, t in enumerate(texts):
-                tk = [w for w in ws_re.split(t.lower()) if w]
-                counts[i] = len(tk)
-                flat.extend(tk)
-            tok_off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(counts, out=tok_off[1:])
-
-            if flat:
-                enc = pa.array(flat, type=pa.string()).dictionary_encode()
-                codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-                dic = enc.dictionary.to_pylist()
-            else:
-                codes = np.zeros(0, dtype=np.int64)
-                dic = []
+            counts = np.diff(tok_off)
             k = max(len(dic), 1)
-            stop_flag = np.fromiter(
-                (s in stop_set for s in dic), dtype=bool, count=len(dic)
-            )
-            n_stop = seg_sums(
-                stop_flag[codes] if codes.size else np.zeros(0, dtype=bool), tok_off
-            )
-
-            # int64 composite keys: guard the (rows × dict) products
-            # loudly (a 10k-row batch over any real vocabulary is
-            # orders of magnitude below this)
-            lim = 1 << 62
-            if codes.size >= (1 << 31) or n * k >= lim or k * k >= lim:
-                raise ValueError("quality kernel: batch too large for int64 keys")
+            stop_flag = pc.is_in(dic, value_set=stopwords).to_numpy(zero_copy_only=False)
+            n_stop = seg_sums(stop_flag[codes], tok_off)
             row_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
             max_word = seg_mode(row_ids, codes, k, n)
             pos = np.arange(codes.size, dtype=np.int64)
-            has_next = (
-                (pos + 1) < tok_off[row_ids + 1]
-                if codes.size
-                else np.zeros(0, dtype=bool)
-            )
-            b_idx = np.flatnonzero(has_next)
+            b_idx = np.flatnonzero(pos + 1 < tok_off[row_ids + 1])
             # bigram code = dense rank of (code, next code) pairs
-            pk = codes[b_idx] * k + codes[b_idx + 1]
-            up, pinv = np.unique(pk, return_inverse=True)
-            kp = max(len(up), 1)
-            if n * kp >= lim or kp * k >= lim:
-                raise ValueError("quality kernel: batch too large for int64 keys")
-            top2 = seg_mode(row_ids[b_idx], pinv, kp, n)
+            up, pinv = np.unique(codes[b_idx] * k + codes[b_idx + 1], return_inverse=True)
+            top2 = seg_mode(row_ids[b_idx], pinv, max(len(up), 1), n)
             # trigram distincts: (bigram rank at i, code at i+2)
-            has_next2 = (
-                (pos + 2) < tok_off[row_ids + 1]
-                if codes.size
-                else np.zeros(0, dtype=bool)
-            )
-            t_idx = np.flatnonzero(has_next2)
+            t_idx = np.flatnonzero(pos + 2 < tok_off[row_ids + 1])
             pinv_at = np.full(codes.size, -1, dtype=np.int64)
             pinv_at[b_idx] = pinv
             tk_key = pinv_at[t_idx] * k + codes[t_idx + 2]
             ut = np.unique(tk_key)
-            tinv = np.searchsorted(ut, tk_key)
             kt = max(len(ut), 1)
-            if n * kt >= lim:
-                raise ValueError("quality kernel: batch too large for int64 keys")
-            trikey = row_ids[t_idx] * kt + tinv
-            utk = np.unique(trikey)
-            d3 = np.bincount((utk // kt).astype(np.int64), minlength=n)
+            utk = np.unique(row_ids[t_idx] * kt + np.searchsorted(ut, tk_key))
+            d3 = np.bincount(utk // kt, minlength=n)
 
-            cols = [ids] + ([batch.column(names.index("text"))] if keep_text else [])
+            cols = [batch.column(names.index("doc_id"))] + ([text_arr] if keep_text else [])
             out_names = ["doc_id"] + (["text"] if keep_text else [])
             by_name = {
                 "n_chars": n_chars,
@@ -586,7 +531,7 @@ def _qfeat_batches_fn(keep_text: bool):
                 "top2": top2,
                 "n2": np.maximum(counts - 1, 0),
                 "n3": np.maximum(counts - 2, 0),
-                "d3": d3.astype(np.int64),
+                "d3": d3,
             }
             for name, values in by_name.items():
                 cols.append(pa.array(values, type=pa.int64()))
@@ -626,8 +571,9 @@ def _with_quality(feats: DataFrame) -> DataFrame:
 
 def _quality_ratio_projection(feats: DataFrame, keep_text: bool) -> DataFrame:
     """The ratio/quality projection over a full count frame — shared by
-    the kernel path and the retained JVM twin so the emitted expressions
-    (and therefore every rounded value) are literally identical."""
+    the kernel path and its Catalyst reference form in
+    tests/reference_forms.py, so the emitted expressions (and therefore
+    every rounded value) are literally identical."""
     alpha_r = _ratio(F.col("n_alpha"), F.col("n_chars"))
     digit_r = _ratio(F.col("n_digit"), F.col("n_chars"))
     stop_r = _ratio(F.col("n_stop"), F.col("n_tokens"))
@@ -661,64 +607,10 @@ def quality_scores(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     (_qfeat_batches_fn — guide §4.2) instead of interpreted Catalyst
     higher-order functions; the ratio/quality projection is unchanged
     JVM expression code, so values are bit-identical to the former
-    formulation (pinned in tests/test_quality_kernel.py against the
-    retained _quality_scores_jvm twin)."""
-    feats = docs.select("doc_id", "text").mapInArrow(
+    formulation (pinned in tests/test_quality_kernel.py against its
+    reference form in tests/reference_forms.py)."""
+    feats = _stage_text(docs, "text").mapInArrow(
         _qfeat_batches_fn(keep_text), _qfeat_schema(keep_text)
-    )
-    return _quality_ratio_projection(feats, keep_text)
-
-
-def _quality_scores_jvm(docs: DataFrame, keep_text: bool = False) -> DataFrame:
-    """The former all-Catalyst formulation of :func:`quality_scores`
-    (rounds 9-17), retained as the kernel's equality twin."""
-    # Generate (explode of a 1-element array) is a CollapseProject
-    # barrier: the token array AND its xxhash64 fingerprint array are
-    # materialized once per row, so the dozen references below read
-    # attributes instead of re-running the split (measured 4× blowup
-    # without the barrier).  All mode counting runs over the LONG
-    # fingerprints (see _max_run); the strings are kept only for the
-    # stopword filter.
-    staged0 = docs.select(
-        "doc_id",
-        "text",
-        F.explode(
-            F.array(
-                F.struct(
-                    tokens_col().alias("toks"),
-                    F.transform(tokens_col(), lambda t: F.xxhash64(t)).alias("th"),
-                )
-            )
-        ).alias("tk"),
-    ).select("doc_id", "text", F.col("tk.toks").alias("toks"), F.col("tk.th").alias("th"))
-    # hashed adjacent n-grams: zip_with over shifted slices (lambdas touch
-    # only lambda vars — an outer column named in a lambda body would be
-    # re-evaluated per element after CollapseProject inlining)
-    g2h = F.expr(
-        "zip_with(slice(th, 1, greatest(size(th) - 1, 0)),"
-        "         slice(th, 2, greatest(size(th) - 1, 0)),"
-        "         (a, b) -> xxhash64(a, b))"
-    )
-    g3h = F.expr(
-        "zip_with(zip_with(slice(th, 1, greatest(size(th) - 2, 0)),"
-        "                  slice(th, 2, greatest(size(th) - 2, 0)),"
-        "                  (a, b) -> xxhash64(a, b)),"
-        "         slice(th, 3, greatest(size(th) - 2, 0)),"
-        "         (ab, c) -> xxhash64(ab, c))"
-    )
-    feats = staged0.select(
-        "doc_id",
-        *(["text"] if keep_text else []),
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.size("toks").cast("bigint").alias("n_tokens"),
-        F.length(F.regexp_replace("text", "[^a-zA-Z]", "")).cast("bigint").alias("n_alpha"),
-        F.length(F.regexp_replace("text", "[^0-9]", "")).cast("bigint").alias("n_digit"),
-        F.size(F.filter("toks", lambda x: x.isin(*ALL_STOPWORDS))).cast("bigint").alias("n_stop"),
-        _max_run(F.array_sort("th")).cast("bigint").alias("max_word"),
-        _max_run(F.array_sort(g2h)).cast("bigint").alias("top2"),
-        F.size(g2h).cast("bigint").alias("n2"),
-        F.size(g3h).cast("bigint").alias("n3"),
-        F.size(F.array_distinct(g3h)).cast("bigint").alias("d3"),
     )
     return _quality_ratio_projection(feats, keep_text)
 

@@ -4,8 +4,8 @@ The reference hand-schedules its physical plan (§4 of SURVEY: static row
 splits, full-replication shuffle, serial group-by).  Here Catalyst owns the
 physical plan, and these helpers let tests ASSERT the physical properties
 we rely on at 100 TB: filters pushed into parquet scans, unused columns
-pruned from the read schema, small dimensions broadcast, aggregates
-partial-before-shuffle, and no Python evaluation in JVM-only pipelines.
+pruned from the read schema, small dimensions broadcast, and no Python
+evaluation in JVM-only pipelines.
 """
 
 from __future__ import annotations
@@ -44,11 +44,6 @@ def read_schema_columns(df: DataFrame, table_hint: str = "") -> list[str]:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in executed_plan(df)
-
-
-def has_partial_aggregate(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "partial_" in plan or "HashAggregate" in executed_plan(df)
 
 
 def python_eval_free(df: DataFrame) -> bool:

@@ -1,5 +1,6 @@
 """Round-18 pin: the mapInArrow posting kernel emits exactly the rows
-the former explode + groupBy(doc_id, term) formulation did — types
+the former explode + groupBy(doc_id, term) formulation
+(_corpus_postings_jvm in tests/reference_forms.py) did — types
 included (tf bigint from count, dl int from size).  corpus_postings
 backs q84's tfidf AND bm25 sections, so end-to-end equality rides the
 q84 oracle; this pins the frame itself on kernel edge cases.
@@ -9,14 +10,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from emulating_hadoop_with_mpi_spark.functions.search import (
-    _corpus_postings_jvm,
-    corpus_postings,
-)
+from reference_forms import _corpus_postings_jvm
+
+from emulating_hadoop_with_mpi_spark.functions.search import corpus_postings
 
 # repeated terms (tf > 1), single-token docs, empty and whitespace-only
 # (dropped), mixed case, every Java-\s char, UTF-8 multibyte terms,
-# twins (identical posting rows), a long doc
+# twins (identical posting rows), a long doc, and cased non-ASCII
+# letters (İ, word-final Σ, Kelvin sign U+212A)
 _DOCS = [
     (1, "a b a b a b c"),
     (2, "solo"),
@@ -28,6 +29,9 @@ _DOCS = [
     (8, " ".join(f"w{i % 7}" for i in range(60))),
     (9, "x y z"),
     (10, "x y z"),
+    (11, "İstanbul İZMİR İ i"),
+    (12, "ΟΔΟΣ ΟΔΟΣ Σ σ ς"),
+    (13, "\u212a \u212aelvin kelvin K"),
 ]
 
 

@@ -160,13 +160,13 @@ def test_exact_jaccard_selfjoin_dispatches_by_stats(spark, sf_dir):
 
 def test_ranked_window_form_equals_join_form(spark):
     """Round-18 pin: ppjoin_ranked's count-window df (one tokenize pass,
-    two exchanges) emits exactly the rows of the retained groupBy + join
-    twin (two tokenize passes, three exchanges) — on the Zipf regime
+    two exchanges) emits exactly the rows of the groupBy + join reference
+    form in tests/reference_forms.py (two tokenize passes, three
+    exchanges) — on the Zipf regime
     where shingle df is skewed, in BOTH physical regimes."""
-    from emulating_hadoop_with_mpi_spark.functions.dedup import (
-        _ppjoin_ranked_join,
-        ppjoin_ranked,
-    )
+    from reference_forms import _ppjoin_ranked_join
+
+    from emulating_hadoop_with_mpi_spark.functions.dedup import ppjoin_ranked
 
     docs = zipf_corpus(spark, n_docs=400, doc_len=40, vocab=20_000, seed=7)
     cols = ["doc_id", "sh", "df", "n", "rk"]

@@ -5,11 +5,11 @@ The kernels (functions/dsir._bucket_batches_fn and
 functions/lm._profile_batches_fn) compute per-document hashed-bigram
 counts row-locally, removing an interpreted transform lambda, per-
 occurrence md5 expressions, and one full exchange of the gram stream
-each.  Their contract is BIT-IDENTICAL profile frames — same Java-\\s
-tokenization of lower(text), same md5[:15 hex] arithmetic — so the
-downstream stats/weights/score joins (untouched) produce bit-identical
-dsir / lm_xent values.  The former formulations are retained as
-_doc_bucket_counts_jvm / _doc_bigram_profile_jvm and compared
+each.  Their contract is BIT-IDENTICAL profile frames — the same tokens
+of lower(text), same md5[:15 hex] arithmetic — so the downstream
+stats/weights/score joins (untouched) produce bit-identical dsir /
+lm_xent values.  The former formulations, _doc_bucket_counts_jvm /
+_doc_bigram_profile_jvm in tests/reference_forms.py, are compared
 row-for-row here, plus end-score equality through the public entry
 points.
 """
@@ -19,20 +19,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from emulating_hadoop_with_mpi_spark.functions.dsir import (
-    _doc_bucket_counts_jvm,
-    doc_bucket_counts,
-    dsir_scores,
-)
-from emulating_hadoop_with_mpi_spark.functions.lm import (
-    _doc_bigram_profile_jvm,
-    bigram_lm_xent,
-    doc_bigram_profile,
-)
+from reference_forms import _doc_bigram_profile_jvm, _doc_bucket_counts_jvm
+
+from emulating_hadoop_with_mpi_spark.functions.dsir import doc_bucket_counts, dsir_scores
+from emulating_hadoop_with_mpi_spark.functions.lm import bigram_lm_xent, doc_bigram_profile
 
 # edge cases: repeated bigrams (count > 1), exactly one bigram, one and
 # zero tokens (dropped by the >= 2 filter), whitespace variety, mixed
-# case, UTF-8 multibyte grams, a long doc, and twins (identical rows).
+# case, UTF-8 multibyte grams, a long doc, twins (identical rows), and
+# cased non-ASCII letters (İ, word-final Σ, Kelvin sign U+212A).
 _DOCS = [
     (1, "a b a b a b c", "en"),
     (2, "one two", "en"),
@@ -44,6 +39,9 @@ _DOCS = [
     (8, " ".join(f"w{i % 7}" for i in range(60)), "en"),
     (9, "x y z", "en"),
     (10, "x y z", "en"),
+    (11, "İstanbul İZMİR İ i", "en"),
+    (12, "ΟΔΟΣ ΟΔΟΣ Σ σ ς", "es"),
+    (13, "\u212a \u212aelvin kelvin K", "en"),
 ]
 
 

@@ -3,13 +3,16 @@ exactly the values the former all-Catalyst formulation did.
 
 The kernel (functions/text._qfeat_batches_fn) replaced the interpreted
 higher-order-function lambdas (transform/zip_with/aggregate/filter)
-behind quality_scores; its contract is BIT-IDENTICAL output — same
-Java-\\s tokenization of lower(text), same ASCII class counts, exact
-per-doc mode counts, and an unchanged JVM ratio/quality projection.  The
-former formulation is retained as _quality_scores_jvm and compared
-row-for-row, column-for-column here on a corpus constructed to hit the
-kernel's edge cases; the all-Catalyst quality_gate_scores subset is
-pinned to quality_scores on the same corpus.
+behind quality_scores; its contract is BIT-IDENTICAL output — the same
+tokens of lower(text), same ASCII class counts, exact per-doc mode
+counts, and an unchanged JVM ratio/quality projection.  The former
+formulation, _quality_scores_jvm in tests/reference_forms.py, is
+compared row-for-row, column-for-column here on a corpus constructed to
+hit the kernel's edge cases; the all-Catalyst quality_gate_scores subset
+is pinned to quality_scores on the same corpus.  The generator-level
+tests feed the kernel staged batches whose ``lower_text`` column is
+Python's ``str.lower`` of ``text``, which equals Spark's lower on these
+fixtures.
 """
 
 from __future__ import annotations
@@ -18,9 +21,10 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from reference_forms import _quality_scores_jvm, kernel_pairs
+
 from emulating_hadoop_with_mpi_spark.functions.text import (
     _qfeat_batches_fn,
-    _quality_scores_jvm,
     quality_gate_scores,
     quality_scores,
 )
@@ -29,8 +33,10 @@ from emulating_hadoop_with_mpi_spark.functions.text import (
 # and two tokens (empty n-gram arrays), empty and whitespace-only text,
 # every Java-\s whitespace char, mixed case (lower() path), uppercase
 # stopwords, digit/punctuation runs, UTF-8 multibyte text (codepoint
-# counting + ASCII class masks), and a long doc spanning reduceat
-# segments.  Small maxRecordsPerBatch forces several Arrow batches.
+# counting + ASCII class masks), a long doc spanning reduceat segments,
+# and cased non-ASCII letters whose lowercase changes length or lands in
+# ASCII (İ → i + U+0307, word-final Σ → ς, Kelvin sign U+212A → k).
+# Small maxRecordsPerBatch forces several Arrow batches.
 _DOCS = [
     (1, "a b a b a b c"),
     (2, "x x x x"),
@@ -47,7 +53,23 @@ _DOCS = [
     (13, "a " * 500 + "b"),
     (14, "der die das und ist ein zu mit auf nicht"),
     (15, "10 20 30 40 50 60 70 80 90 100 " * 3),
+    (16, "İstanbul İZMİR İ i"),
+    (17, "ΟΔΟΣ ΟΔΟΣ Σ σ ς"),
+    (18, "\u212a \u212aelvin kelvin K"),
 ]
+
+
+def _staged(texts):
+    """A staged (doc_id, text, lower_text) batch, as _stage_text makes."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(list(range(len(texts))), type=pa.int64()),
+            pa.array(texts, type=pa.string()),
+            pa.array([t.lower() for t in texts], type=pa.string()),
+        ],
+        names=["doc_id", "text", "lower_text"],
+    )
+
 
 _FULL_COLS = [
     "n_chars", "n_tokens", "alpha_ratio", "digit_ratio", "stopword_ratio",
@@ -81,14 +103,7 @@ def test_kernel_generator_on_sliced_batch():
     """Direct unit test of the generator on a manually sliced RecordBatch
     (offsets not starting at 0) — Spark builds each Arrow batch fresh, so
     only a hand-sliced batch exercises the rebase path (ADVICE r17)."""
-    texts = [t for _, t in _DOCS]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(range(len(texts))), type=pa.int64()),
-            pa.array(texts, type=pa.string()),
-        ],
-        names=["doc_id", "text"],
-    )
+    batch = _staged([t for _, t in _DOCS])
     gen = _qfeat_batches_fn(keep_text=False)
     full = list(gen([batch]))[0]
     sliced = list(gen([batch.slice(2)]))[0]
@@ -102,14 +117,15 @@ def test_kernel_generator_on_sliced_batch():
     assert list(gen([batch.slice(0, 0)])) == []
 
 
-def test_kernel_rejects_null_text():
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array([1], type=pa.int64()), pa.array([None], type=pa.string())],
-        names=["doc_id", "text"],
+def test_kernel_rejects_null_text(spark):
+    """Every text kernel fails the same loud way on a null text, through
+    its public entry: the shared front end's ValueError."""
+    docs = spark.createDataFrame(
+        [(1, "a b c", "en"), (2, None, "en")], "doc_id long, text string, lang string"
     )
-    gen = _qfeat_batches_fn(keep_text=False)
-    with pytest.raises(ValueError, match="null text"):
-        list(gen([batch]))
+    for entry, _ in kernel_pairs().values():
+        with pytest.raises(Exception, match=r"ValueError: text kernel: null text"):
+            entry(docs).collect()
 
 
 def test_kernel_matches_numpy_free_reference():
@@ -119,13 +135,7 @@ def test_kernel_matches_numpy_free_reference():
     import re
 
     ws = re.compile("[ \t\n\x0b\f\r]+")
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(range(len(_DOCS))), type=pa.int64()),
-            pa.array([t for _, t in _DOCS], type=pa.string()),
-        ],
-        names=["doc_id", "text"],
-    )
+    batch = _staged([t for _, t in _DOCS])
     out = list(_qfeat_batches_fn(keep_text=False)([batch]))[0]
     for i, (_, t) in enumerate(_DOCS):
         toks = [w for w in ws.split(t.lower()) if w]
@@ -160,13 +170,7 @@ def test_quality_kernel_fuzz_seeded():
         "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 80)))
         for _ in range(300)
     ]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(range(len(texts))), type=pa.int64()),
-            pa.array(texts, type=pa.string()),
-        ],
-        names=["doc_id", "text"],
-    )
+    batch = _staged(texts)
     ws = re.compile("[ \t\n\x0b\f\r]+")
     outs = list(_qfeat_batches_fn(keep_text=False)([batch]))
     got = {k: sum((o.column(k).to_pylist() for o in outs), []) for k in
