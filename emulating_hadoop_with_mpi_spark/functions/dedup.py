@@ -472,10 +472,7 @@ def ppjoin_ranked(
     """(doc_id, sh, df, n, rk): ppjoin_pairs' stage-1 frame — every
     document's shingle hashes ranked by ascending global document
     frequency (rarest first; one total order corpus-wide), with the
-    per-doc set size ``n``.  Factored out (round 15, the q73
-    minhash_combined precedent) so the bench can time the SHIPPED
-    stage-1 plan as its own min-of-2 interleaved leg and inject the
-    cached frame back via ``ppjoin_pairs(ranked=)``.
+    per-doc set size ``n``.
 
     Round 18 (guide §2.3/§2.4, VERDICT r17 item 5): ``df`` is a COUNT
     WINDOW over the sh-keyed exchange instead of a groupBy + join back.
@@ -520,11 +517,10 @@ def ppjoin_candidates(
     partitioned: bool = True,
 ) -> DataFrame:
     """(doc_a, doc_b) distinct candidate pairs from the prefix self-join —
-    ppjoin_pairs' stage 2 over a :func:`ppjoin_ranked` frame (the prefix
-    and positional filters are documented inline in ppjoin_pairs; this IS
-    the shipped plan, factored for stage-leg timing and injection via
-    ``ppjoin_pairs(cands=)``).  ``partitioned`` defaults scale-safe
-    (shuffle_hash pins); pass False only for the small regime."""
+    ppjoin_pairs' stage 2 over a :func:`ppjoin_ranked` frame, with the
+    prefix and positional filters explained inline.  ``partitioned``
+    defaults scale-safe (shuffle_hash pins); pass False only for the small
+    regime."""
     _pin = (lambda f: f.hint("shuffle_hash")) if partitioned else (lambda f: f)
     # prefix = first n − ⌈t·n⌉ + 1 shingles in global rarity order
     # (t = 1/2 ⟹ ⌊n/2⌋ + 1, the former hardcoded form)
@@ -567,8 +563,6 @@ def ppjoin_pairs(
     t_den: int = 2,
     positional: bool = True,
     plan: str = "auto",
-    ranked: DataFrame | None = None,
-    cands: DataFrame | None = None,
 ) -> DataFrame:
     """PPJoin-style prefix-filtered EXACT Jaccard pairs (J ≥ t_num/t_den,
     default 0.5) — the scale-safe exact sibling of q72's direct shingle
@@ -608,11 +602,9 @@ def ppjoin_pairs(
     (semi-join before collect_set), so verify cost tracks candidate
     count, not corpus size.
 
-    ``ranked=`` / ``cands=`` (round 15) inject pre-built — typically
-    cached — stage frames so the bench's interleaved stage legs time
-    exactly the shipped plan (the q73 combined=/cands= idiom); without
-    them the stages are built here via :func:`ppjoin_ranked` /
-    :func:`ppjoin_candidates`."""
+    The stages are :func:`ppjoin_ranked` (rarity ranks),
+    :func:`ppjoin_candidates` (prefix self-join) and the verify joins
+    below."""
     partitioned = _ppjoin_partitioned(docs, plan)
 
     # In the partitioned regime every shingle-keyed join is pinned
@@ -626,18 +618,16 @@ def ppjoin_pairs(
     # hints are omitted and the single-exchange broadcast plan wins
     # (measured ~2.5× at sf0.1); the auto boundary is the corpus' own
     # scan-size estimate.
-    if ranked is None:
-        ranked = ppjoin_ranked(docs, ngram=ngram, plan=plan)
-        # ranked feeds three consumers (prefix a/b + the verify sets);
-        # caching is opt-in so library callers own the lifetime (bench
-        # clears the cache between measurements; see exact_jaccard_pairs).
-        if persist:
-            ranked = ranked.cache()
-    if cands is None:
-        cands = ppjoin_candidates(
-            ranked, t_num=t_num, t_den=t_den,
-            positional=positional, partitioned=partitioned,
-        )
+    ranked = ppjoin_ranked(docs, ngram=ngram, plan=plan)
+    # ranked feeds three consumers (prefix a/b + the verify sets);
+    # caching is opt-in so library callers own the lifetime (bench
+    # clears the cache between measurements; see exact_jaccard_pairs).
+    if persist:
+        ranked = ranked.cache()
+    cands = ppjoin_candidates(
+        ranked, t_num=t_num, t_den=t_den,
+        positional=positional, partitioned=partitioned,
+    )
     # verify sets ONLY for docs in some candidate pair — candidate count,
     # not corpus size, bounds the collect_set work
     cand_docs = (
@@ -839,22 +829,13 @@ def minhash_combined(docs: DataFrame) -> DataFrame:
     return sets.mapInArrow(_sig_batches_fn(NUM_PERM), schema).cache()
 
 
-def minhash_verified_pairs(
-    docs: DataFrame,
-    combined: DataFrame | None = None,
-    cands: DataFrame | None = None,
-) -> DataFrame:
+def minhash_verified_pairs(docs: DataFrame) -> DataFrame:
     """q73's body over any (doc_id, text) frame: MinHash(128) + LSH band
     candidates, exact-Jaccard verification, q72's output contract.
     Shared by q73 (registered) and q71's fuzzy pipeline (candidate
-    stage).
-
-    `combined` / `cands` injection (bench stage attribution, the q70
-    `spans=` idiom): callers that already materialized the shared
-    groupBy frame (`minhash_combined`) and/or the band-join candidates
-    (`lsh_candidates`) pass them in so the verify stage can be timed on
-    its own; semantics are identical because this function builds the
-    same frames from the same helpers when they are None.
+    stage).  The stages are :func:`minhash_combined` (the one corpus
+    groupBy), :func:`lsh_candidates` (band self-join) and the verify
+    joins below.
 
     Cache contract (ADVICE r8): in the partitioned regime this plan
     cache()s two candidate-bounded frames that stay resident for the
@@ -862,11 +843,9 @@ def minhash_verified_pairs(
     builder cannot unpersist them itself).  Long-running callers issuing
     many independent dedup passes should spark.catalog.clearCache()
     between passes."""
-    if combined is None:
-        combined = minhash_combined(docs)
+    combined = minhash_combined(docs)
     sigs = combined.select("doc_id", *[f"h{i}" for i in range(NUM_PERM)])
-    if cands is None:
-        cands = lsh_candidates(sigs)
+    cands = lsh_candidates(sigs)
     sets_df = combined.select("doc_id", "shset")
     a = sets_df.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("set_a"))
     b = sets_df.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("set_b"))
@@ -1304,28 +1283,22 @@ def simhash64_from_120(sims120: DataFrame) -> DataFrame:
     )
 
 
-def simhash120_neardup_pairs(
-    docs: DataFrame, sims: DataFrame | None = None
-) -> DataFrame:
+def simhash120_neardup_pairs(docs: DataFrame) -> DataFrame:
     """q74's contract at 120-bit sketch width — the corpus-scale
     configuration (see SIMHASH120_BLOCKS): same Hamming ≤ 9 bound, same
     block machinery, 24-bit pigeonhole blocks, so random block collisions
     — q74's measured dominant cost at the sf10 decade — drop ~2^11×.
     Guaranteed-complete for its own contract (pinned against all-pairs
     Hamming in tests/test_pipeline_ops.py).  Registered on the driver
-    surface since round 9 as q74's 'sim120' method branch.
-
-    ``sims=`` (round 14 — the q73 ``combined=``/``cands=`` idiom) injects
-    an already-built ``simhash120_df`` frame so the bench's stage legs
-    time the sketch build and the pigeonhole pairs join separately while
-    still exercising THIS registered plan, not a parallel formulation.
+    surface since round 9 as q74's 'sim120' method branch.  Two stages:
+    the :func:`simhash120_df` sketch build and the pigeonhole
+    candidates + verify join over it.
 
     Cache contract: the persist()ed sketch frame stays resident after
     materialization (the result is lazy — the builder cannot release it);
     callers issuing repeated passes should spark.catalog.clearCache()
     between them, as the bench does per entry."""
-    if sims is None:
-        sims = simhash120_df(docs).persist()
+    sims = simhash120_df(docs).persist()
     return _pigeonhole_pairs(
         sims, SIMHASH120_BLOCKS, _block_value_words, simhash120_hamming
     ).orderBy("doc_a", "doc_b")

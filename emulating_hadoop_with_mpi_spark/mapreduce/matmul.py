@@ -203,46 +203,23 @@ def matmul_mapreduce(
     return spark.createDataFrame(out, "i int, k int, v long")
 
 
-def _block_tiles(df: DataFrame, block: int, row_block: str, col_block: str) -> DataFrame:
-    return df.select(
-        (F.col("i") / block).cast("int").alias(row_block),
-        (F.col("j") / block).cast("int").alias(col_block),
-        "i",
-        "j",
-        "v",
+def _block_tiles(df: DataFrame, block: int, row_block: str, col_block: str, names) -> DataFrame:
+    """B×B tiles of one side: its (i, j, v) cells collected per
+    (row block, column block) — one exchange per side."""
+    return (
+        df.select(
+            (F.col("i") / block).cast("int").alias(row_block),
+            (F.col("j") / block).cast("int").alias(col_block),
+            "i",
+            "j",
+            "v",
+        )
+        .groupBy(row_block, col_block)
+        .agg(*(F.collect_list(c).alias(n) for c, n in zip(("i", "j", "v"), names)))
     )
 
 
-def block_tiles_a(a: DataFrame, block: int = 128) -> DataFrame:
-    """A-side B×B tile build — the first of matmul_block's two tile
-    exchanges (groupBy collect_list over block coordinates), exposed so
-    bench.py's matmul_auto_2048 stage legs can time the SHIPPED tile
-    build separately from the GEMM join via matmul_block's
-    ``tiles_a=``/``tiles_b=`` injection (the ranked=/cands= idiom the
-    dedup-family stage gates use)."""
-    return _block_tiles(a, block, "bi", "bk").groupBy("bi", "bk").agg(
-        F.collect_list("i").alias("ai"),
-        F.collect_list("j").alias("aj"),
-        F.collect_list("v").alias("av"),
-    )
-
-
-def block_tiles_b(b: DataFrame, block: int = 128) -> DataFrame:
-    """B-side twin of block_tiles_a (bk × bj tiles)."""
-    return _block_tiles(b, block, "bk", "bj").groupBy("bk", "bj").agg(
-        F.collect_list("i").alias("bi_"),
-        F.collect_list("j").alias("bj_"),
-        F.collect_list("v").alias("bv"),
-    )
-
-
-def matmul_block(
-    a: DataFrame,
-    b: DataFrame,
-    block: int = 128,
-    tiles_a: DataFrame | None = None,
-    tiles_b: DataFrame | None = None,
-) -> DataFrame:
+def matmul_block(a: DataFrame, b: DataFrame, block: int = 128) -> DataFrame:
     """Block (SUMMA-style) matrix multiply — the 100 TB formulation.
 
     The COO join (matmul_coo) materializes L·M·N joined rows; fine up to
@@ -256,13 +233,9 @@ def matmul_block(
     The reference ships every cell to every rank as 512-byte strings
     (``program.c:277-288``); here a cell crosses the wire at most
     ⌈N/B⌉ (resp. ⌈L/B⌉) times, packed in Arrow batches.
-
-    ``tiles_a``/``tiles_b`` inject pre-built (typically cached) tile
-    frames — they must be block_tiles_a/_b outputs at the SAME ``block``
-    (caller's contract, same as the dedup stage injections).
     """
-    a_t = tiles_a if tiles_a is not None else block_tiles_a(a, block)
-    b_t = tiles_b if tiles_b is not None else block_tiles_b(b, block)
+    a_t = _block_tiles(a, block, "bi", "bk", ("ai", "aj", "av"))
+    b_t = _block_tiles(b, block, "bk", "bj", ("bi_", "bj_", "bv"))
     paired = a_t.join(b_t, "bk")
 
     blk = block

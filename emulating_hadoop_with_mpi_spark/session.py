@@ -26,6 +26,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+DRIVER_MEMORY_CAP_MB = 16 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half of physical memory, capped at 16g.  In local mode the driver heap
+    holds every task, so a heap larger than the machine lets a runaway job
+    exhaust the machine instead of failing with an OutOfMemoryError."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys_bytes // 2 >> 20, DRIVER_MEMORY_CAP_MB)}m"
 
 
 def get_spark(
@@ -58,7 +69,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

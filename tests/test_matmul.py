@@ -69,31 +69,6 @@ def test_matmul_block_matches_numpy(spark, shape, block):
     np.testing.assert_array_equal(_dense(c, l, n), a @ b)
 
 
-def test_matmul_block_tile_injection_equivalence(spark):
-    """matmul_block(tiles_a=, tiles_b=) — the stage-timing injection
-    (bench.py's matmul_auto_2048 stage legs) — must produce the exact
-    frame the un-injected path does, including a non-dividing shape."""
-    from emulating_hadoop_with_mpi_spark.mapreduce.matmul import (
-        block_tiles_a,
-        block_tiles_b,
-        matmul_block,
-    )
-
-    l, m, n, block = 20, 30, 10, 8
-    a = generate_matrix_numpy(l, m, seed=31)
-    b = generate_matrix_numpy(m, n, seed=32)
-    da, db = matrix_coo_from_numpy(spark, a), matrix_coo_from_numpy(spark, b)
-    injected = matmul_block(
-        da,
-        db,
-        block=block,
-        tiles_a=block_tiles_a(da, block).cache(),
-        tiles_b=block_tiles_b(db, block).cache(),
-    )
-    np.testing.assert_array_equal(_dense(injected, l, n), a @ b)
-    spark.catalog.clearCache()
-
-
 def test_matmul_auto_strategy_dispatch(spark):
     """matmul_auto picks broadcast for a small side, block beyond the
     product threshold, COO between — all producing identical results.

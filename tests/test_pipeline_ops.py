@@ -891,59 +891,3 @@ def test_semantic_dedup_drops_keep_one_per_component(spark):
     )
     got = {(r.vec_id, r.keeper) for r in semantic_dedup_drops(pairs).collect()}
     assert got == {(2, 1), (3, 1), (11, 10)}
-
-
-def test_minhash_injected_stages_equal_plain(spark, sf_dir):
-    """bench.py's q73 stage attribution (round 13) times the registered
-    path by injecting pre-built frames into minhash_verified_pairs via
-    combined=/cands= — the stage-sum GATE is only honest if the injected
-    plan computes exactly the registered result.  Pin it."""
-    from emulating_hadoop_with_mpi_spark.functions.dedup import (
-        NUM_PERM,
-        lsh_candidates,
-        minhash_combined,
-        minhash_verified_pairs,
-    )
-    from emulating_hadoop_with_mpi_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    combined = minhash_combined(docs)
-    sigs = combined.select("doc_id", *[f"h{i}" for i in range(NUM_PERM)])
-    cands = lsh_candidates(sigs).cache()
-    injected = sorted(
-        tuple(r)
-        for r in minhash_verified_pairs(
-            docs, combined=combined, cands=cands
-        ).collect()
-    )
-    spark.catalog.clearCache()
-    plain = sorted(tuple(r) for r in minhash_verified_pairs(docs).collect())
-    spark.catalog.clearCache()
-    assert injected == plain
-    assert len(injected) > 0, "vacuous: no near-dup pairs at this SF"
-
-
-def test_simhash120_injected_sims_equal_plain(spark, sf_dir):
-    """bench.py's sf10 sim120 stage attribution injects the persisted
-    sketch frame via sims= (the q73 combined=/cands= idiom), and since
-    round 17 the slope3_sim120 gate rides that decomposition's stage
-    sum — the gate is only honest if the injected plan computes exactly
-    the registered result.  Pin it."""
-    from emulating_hadoop_with_mpi_spark.functions.dedup import (
-        simhash120_df,
-        simhash120_neardup_pairs,
-    )
-    from emulating_hadoop_with_mpi_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    sims = simhash120_df(docs).persist()
-    injected = sorted(
-        tuple(r) for r in simhash120_neardup_pairs(docs, sims=sims).collect()
-    )
-    spark.catalog.clearCache()
-    plain = sorted(
-        tuple(r) for r in simhash120_neardup_pairs(docs).collect()
-    )
-    spark.catalog.clearCache()
-    assert injected == plain
-    assert injected, "vacuous: no near-dup pairs at this SF"

@@ -178,25 +178,3 @@ def test_ranked_window_form_equals_join_form(spark):
             for r in _ppjoin_ranked_join(docs, plan=plan).select(*cols).collect()
         )
         assert got == exp, plan
-
-
-def test_ppjoin_injected_stages_equal_plain(spark):
-    """bench.py's sf10 ppjoin stage attribution injects pre-built frames
-    via ranked=/cands= (the q73 combined=/cands= idiom), and since round
-    17 the slope3_ppjoin gate rides that decomposition's stage sum — the
-    gate is only honest if the injected plan computes exactly the
-    registered result.  Pin it on the Zipf regime where prefixes prune."""
-    from emulating_hadoop_with_mpi_spark.functions.dedup import (
-        ppjoin_candidates,
-        ppjoin_ranked,
-    )
-
-    docs = zipf_corpus(spark, n_docs=400, doc_len=40, vocab=20_000, seed=7)
-    ranked = ppjoin_ranked(docs).cache()
-    cands = ppjoin_candidates(ranked).cache()
-    injected = _rows(ppjoin_pairs(docs, ranked=ranked, cands=cands))
-    spark.catalog.clearCache()
-    plain = _rows(ppjoin_pairs(docs))
-    spark.catalog.clearCache()
-    assert injected == plain
-    assert injected, "vacuous: no qualifying pairs on the planted corpus"

@@ -12,6 +12,7 @@ times q.fn() + sink together — the bench's timed region (queries whose
 builders run eager plan-construction jobs, q82/q85, differ a lot).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+SPARK_GRAFT_CPUS defaults to the CPUs this process may run on.
 Timing uses the guide §1.4 noop sink (computes every column, discards the
 write) with min-of-reps, printed as one JSON line at the end.
 """
@@ -43,7 +44,7 @@ def main() -> None:
     names = args  # remaining: query subset (empty → all)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = get_spark(
         app_name="opt_probe",
         master=f"local[{cpus}]",
