@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from emulating_hadoop_with_mpi_spark.functions.text import tokens_col, _SQL_TOKENS
 from emulating_hadoop_with_mpi_spark.operators.graph import connected_components
+from emulating_hadoop_with_mpi_spark.plans import inspect as _inspect
 from emulating_hadoop_with_mpi_spark.registry import query
 from emulating_hadoop_with_mpi_spark.sources.tables import load_table, spread_small_scan
 
@@ -408,8 +409,8 @@ def exact_jaccard_pairs(
     # blow-up factor; sort-merge (not hash-build) for the large-large
     # self-join.  cnt's O(docs) broadcasts below stay — they're two
     # orders smaller.
-    size = _plan_size_bytes(docs)
-    if size is None or size > PPJOIN_PARTITIONED_BYTES // 8:
+    size = _inspect.plan_size_bytes(docs)
+    if size is None or size > _inspect.PARTITIONED_BYTES // 8:
         b = b.hint("shuffle_merge")
     pairs = (
         a.join(
@@ -442,33 +443,7 @@ def exact_jaccard_pairs(
     )
 
 
-# Corpus-size boundary for ppjoin's physical strategy: below it Catalyst
-# may broadcast the shingle-derived frames (single-exchange, wins when
-# everything fits one heap); above it every join is pinned shuffle_hash —
-# broadcasting an O(corpus-tokens) frame to every executor is wrong at
-# cluster scale no matter the driver heap.  Stats come from the
-# optimizer's own sizeInBytes (file size for parquet scans; no job).
-PPJOIN_PARTITIONED_BYTES = 64 * 1024 * 1024
-
-
-# shared with the text/TF-IDF scale path; see plans/inspect.py
-from emulating_hadoop_with_mpi_spark.plans.inspect import plan_size_bytes as _plan_size_bytes
-
-
-def _ppjoin_partitioned(docs: DataFrame, plan: str) -> bool:
-    """Resolve the ppjoin physical regime from the corpus' own Catalyst
-    size estimate (the matmul_auto stats-dispatch pattern)."""
-    if plan == "auto":
-        size = _plan_size_bytes(docs)
-        return size is None or size > PPJOIN_PARTITIONED_BYTES
-    if plan in ("partitioned", "small"):
-        return plan == "partitioned"
-    raise ValueError(f"plan must be auto|partitioned|small, got {plan!r}")
-
-
-def ppjoin_ranked(
-    docs: DataFrame, ngram: int = 3, plan: str = "auto"
-) -> DataFrame:
+def ppjoin_ranked(docs: DataFrame, ngram: int = 3) -> DataFrame:
     """(doc_id, sh, df, n, rk): ppjoin_pairs' stage-1 frame — every
     document's shingle hashes ranked by ascending global document
     frequency (rarest first; one total order corpus-wide), with the
@@ -490,10 +465,9 @@ def ppjoin_ranked(
     the same hot group in the same single task (hash by sh) — the
     hot-key straggler is unchanged in placement, it now spills instead
     of streaming; no broadcast of the O(vocabulary) df table at any
-    regime (the join's small-regime plan did broadcast it).  ``plan``
-    is accepted for API stability; the rank build itself no longer has
-    a regime-dependent join to pin (ppjoin_candidates / the verify
-    joins keep their own pins)."""
+    regime (the join's small-regime plan did broadcast it).  The rank
+    build has no regime-dependent join to pin (ppjoin_candidates and
+    the verify joins keep their own pins)."""
     from pyspark.sql import Window
 
     ds = shingles_df(docs, n=ngram).select("doc_id", F.xxhash64("shingle").alias("sh"))
@@ -562,7 +536,6 @@ def ppjoin_pairs(
     t_num: int = 1,
     t_den: int = 2,
     positional: bool = True,
-    plan: str = "auto",
 ) -> DataFrame:
     """PPJoin-style prefix-filtered EXACT Jaccard pairs (J ≥ t_num/t_den,
     default 0.5) — the scale-safe exact sibling of q72's direct shingle
@@ -589,11 +562,11 @@ def ppjoin_pairs(
     Plan shape at 100 TB: two hash aggregations (df computation, per-doc
     rank), one equi-join on prefix shingles, one verify join — all
     key-partitioned, no all-pairs product anywhere.  Physical strategy
-    dispatches on the corpus' own Catalyst size estimate (``plan="auto"``,
-    same stats-dispatch pattern as matmul_auto): small corpora keep the
-    single-exchange broadcast plan Catalyst picks, large ones pin every
-    shingle join to shuffle_hash so no O(corpus-tokens) frame is ever
-    broadcast (``plan="partitioned"``/``"small"`` force either regime).  Constant-factor
+    dispatches on the corpus' own Catalyst size estimate
+    (plans/inspect.partitioned, the matmul_auto stats-dispatch pattern):
+    small corpora keep the single-exchange broadcast plan Catalyst
+    picks, large ones pin every shingle join to shuffle_hash so no
+    O(corpus-tokens) frame is ever broadcast.  Constant-factor
     choices that matter at that scale (measured locally, round 7):
     shingles are carried as xxhash64 LONGS through every shuffle/sort
     (half the bytes of the 3-word strings; same pair counts modulo a
@@ -605,7 +578,7 @@ def ppjoin_pairs(
     The stages are :func:`ppjoin_ranked` (rarity ranks),
     :func:`ppjoin_candidates` (prefix self-join) and the verify joins
     below."""
-    partitioned = _ppjoin_partitioned(docs, plan)
+    partitioned = _inspect.partitioned(docs)
 
     # In the partitioned regime every shingle-keyed join is pinned
     # shuffle_hash: df_counts and the prefix frame are AGGREGATE/FILTER
@@ -618,7 +591,7 @@ def ppjoin_pairs(
     # hints are omitted and the single-exchange broadcast plan wins
     # (measured ~2.5× at sf0.1); the auto boundary is the corpus' own
     # scan-size estimate.
-    ranked = ppjoin_ranked(docs, ngram=ngram, plan=plan)
+    ranked = ppjoin_ranked(docs, ngram=ngram)
     # ranked feeds three consumers (prefix a/b + the verify sets);
     # caching is opt-in so library callers own the lifetime (bench
     # clears the cache between measurements; see exact_jaccard_pairs).
@@ -829,63 +802,78 @@ def minhash_combined(docs: DataFrame) -> DataFrame:
     return sets.mapInArrow(_sig_batches_fn(NUM_PERM), schema).cache()
 
 
+def verify_join(
+    cands: DataFrame,
+    payload: DataFrame,
+    id_col: str,
+    side_a: dict[str, str],
+    side_b: dict[str, str],
+    partitioned: bool,
+) -> DataFrame:
+    """Candidate pairs joined to both sides' payload rows — the verify
+    join of the candidate-then-verify operators (q73's MinHash-LSH and
+    q75b's semantic LSH).  ``payload`` is keyed by ``id_col``;
+    ``side_a``/``side_b`` map payload columns to each side's names, and
+    ``cands`` carries the two side ids ``side_a[id_col]`` and
+    ``side_b[id_col]``.
+
+    Below the corpus boundary (``partitioned=False``) these are plain
+    joins, and Catalyst's broadcast plan wins on single-digit-MB
+    corpora.  Above it Catalyst would broadcast the O(corpus) payload
+    frame (array columns whose deserialized size its stats cannot see —
+    measured ~400 MB in-process at sf10 for q73, fatal at cluster
+    scale).  So the payload is first semi-joined down to ids that appear
+    in a candidate pair, and both joins are pinned shuffle_hash building
+    on the ids-only candidate side: every shuffled or built frame is
+    bounded by candidate count, never corpus size.
+
+    In that regime the candidates and the bounded payload are CACHED —
+    LAZILY, on purpose: the candidates otherwise re-run their self-join three times
+    (two semi sides + the outer join) and the semi-join re-scans the
+    payload twice.  Eager alternatives were A/B'd fresh-process at sf10
+    in BOTH orderings (NOTES r9): lazy cache cold 39-47 s vs
+    localCheckpoint 70-128 s vs cache+count 83-86 s — eager
+    materialization forces the full candidate output to byte-store
+    before AQE can pipeline/prune it downstream.  Cache contract
+    (ADVICE r8): both frames stay resident for the session after the
+    result is materialized (they are lazy, so the builder cannot
+    unpersist them itself); long-running callers issuing many
+    independent passes should spark.catalog.clearCache() between them."""
+    key_a, key_b = side_a[id_col], side_b[id_col]
+    pin = (lambda f: f.hint("shuffle_hash")) if partitioned else (lambda f: f)
+    if partitioned:
+        cands = cands.cache()
+        ids = (
+            cands.select(F.col(key_a).alias(id_col))
+            .unionAll(cands.select(F.col(key_b).alias(id_col)))
+            .distinct()
+        )
+        payload = payload.join(ids, id_col, "left_semi").cache()
+
+    def side(names: dict[str, str]) -> DataFrame:
+        return payload.select(*[F.col(c).alias(n) for c, n in names.items()])
+
+    return pin(pin(cands).join(side(side_a), key_a)).join(side(side_b), key_b)
+
+
 def minhash_verified_pairs(docs: DataFrame) -> DataFrame:
     """q73's body over any (doc_id, text) frame: MinHash(128) + LSH band
     candidates, exact-Jaccard verification, q72's output contract.
     Shared by q73 (registered) and q71's fuzzy pipeline (candidate
     stage).  The stages are :func:`minhash_combined` (the one corpus
-    groupBy), :func:`lsh_candidates` (band self-join) and the verify
-    joins below.
-
-    Cache contract (ADVICE r8): in the partitioned regime this plan
-    cache()s two candidate-bounded frames that stay resident for the
-    session after the result is materialized (they are lazy, so the
-    builder cannot unpersist them itself).  Long-running callers issuing
-    many independent dedup passes should spark.catalog.clearCache()
-    between passes."""
+    groupBy), :func:`lsh_candidates` (band self-join) and
+    :func:`verify_join` (its cache contract applies in the partitioned
+    regime)."""
     combined = minhash_combined(docs)
     sigs = combined.select("doc_id", *[f"h{i}" for i in range(NUM_PERM)])
-    cands = lsh_candidates(sigs)
-    sets_df = combined.select("doc_id", "shset")
-    a = sets_df.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("set_a"))
-    b = sets_df.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("set_b"))
-    # Same stats-blind hazard as ppjoin's verify: above the size boundary
-    # Catalyst broadcasts the per-doc shset-ARRAY frame into both verify
-    # joins (O(corpus) deserialized bytes to every executor — measured
-    # ~400 MB in-process at sf10, 100 TB-fatal on a cluster).  In the
-    # partitioned regime do what ppjoin's verify does: semi-join the sets
-    # down to docs that actually appear in a candidate pair FIRST (ids
-    # only, candidate-bounded), then pin shuffle_hash building on the
-    # candidate side — every shuffled/built frame is bounded by candidate
-    # count, never corpus size.  Below the boundary the broadcast plan
-    # stays (it wins on single-digit-MB corpora).
-    size = _plan_size_bytes(docs)
-    if size is None or size > PPJOIN_PARTITIONED_BYTES:
-        # candidate-bounded frames are CACHED — LAZILY, on purpose: cands
-        # otherwise re-runs the band self-join three times (two semi sides
-        # + the outer join) and bounded's semi-join re-scans the corpus
-        # cache twice.  Eager alternatives were A/B'd fresh-process at
-        # sf10 in BOTH orderings (NOTES r9): lazy cache cold 39-47 s vs
-        # localCheckpoint 70-128 s vs cache+count 83-86 s — eager
-        # materialization forces the full band-join output to byte-store
-        # before AQE can pipeline/prune it downstream, which costs more
-        # than the duplicate-stage risk it was meant to avoid.  The r8
-        # 72.5-s lazy cold reading was box drift, not a cache-fill race.
-        # Cached blocks stay pinned for the session like any cached plan;
-        # long-running callers reclaim them with
-        # spark.catalog.clearCache() (ADVICE r8 — documented contract).
-        cands = cands.cache()
-        cand_docs = (
-            cands.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(cands.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        bounded = sets_df.join(cand_docs, "doc_id", "left_semi").cache()
-        a = bounded.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("set_a"))
-        b = bounded.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("set_b"))
-        joined = cands.hint("shuffle_hash").join(a, "doc_a").hint("shuffle_hash").join(b, "doc_b")
-    else:
-        joined = cands.join(a, "doc_a").join(b, "doc_b")
+    joined = verify_join(
+        lsh_candidates(sigs),
+        combined.select("doc_id", "shset"),
+        "doc_id",
+        {"doc_id": "doc_a", "shset": "set_a"},
+        {"doc_id": "doc_b", "shset": "set_b"},
+        _inspect.partitioned(docs),
+    )
     common = F.size(F.array_intersect("set_a", "set_b"))
     n_a, n_b = F.size("set_a"), F.size("set_b")
     return (
@@ -1461,7 +1449,7 @@ def q74_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent passes should spark.catalog.clearCache() between them
     (the bench does exactly this per entry)."""
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    size = _plan_size_bytes(docs)
+    size = _inspect.plan_size_bytes(docs)
     sim64_gated = (
         size > SIM64_MAX_BYTES if size is not None else docs.count() > SIM64_MAX_DOCS
     )

@@ -1,8 +1,9 @@
 """Bounded plan-keyed registries for operator-internal persists.
 
 Several pipeline operators persist an intermediate frame that multiple
-consumers traverse (the ranged prefix sum's staged frame, sequence
-packing's token counts, the curation pipeline's survivor anchors).  A
+consumers traverse (the ranged prefix sum's staged frame — sequence
+packing's token counts among them — q85's quality-score projection, the
+curation pipeline's survivor anchors).  A
 bare ``persist()`` per invocation is correct but leaks: a long-lived
 pipeline process calling the operator repeatedly accumulates executor
 storage for the whole session (VERDICT r13 item 4).  Eager

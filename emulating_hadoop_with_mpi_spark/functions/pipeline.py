@@ -29,6 +29,7 @@ from emulating_hadoop_with_mpi_spark.functions.text import (
     chunk_documents,
     pack_sequences,
     quality_gate_scores,
+    token_budget_select,
 )
 
 # chunk_id = doc_id * FACTOR + chunk_idx: keeps one sortable key through
@@ -227,10 +228,13 @@ def curate_frames(
     scored: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The curation composition with every stage's survivor frame exposed
-    (lazy, except the SELECTION stages' plan-construction actions: the
-    ``mixture`` rate derivation — one eager |strata|-row driver aggregate
-    that also validates the weights — and the ``dsir``/``lm_keep_frac``/
-    ``token_budget`` stages' prefix-sum range boundaries; when any
+    (lazy, except these plan-construction actions: the ``mixture`` rate
+    derivation — one eager |strata|-row driver aggregate that also
+    validates the weights — the ``dsir``/``lm_keep_frac``/
+    ``token_budget`` stages' prefix-sum range boundaries, and, on every
+    call, the final per-split packing's prefix-sum range boundaries
+    (text.pack_sequences — one job over the chunk token counts, none on
+    a plan-identical re-build); when any
     selection stage is enabled the post-decon and pre-selection survivor
     frames — plus the post-selection frame when mixture/budget follow
     DSIR/LM — are persisted for the session through the bounded registry
@@ -516,31 +520,16 @@ def curate_frames(
     # post-dedup/post-mixture survivors (and their post-span-cut texts —
     # quality and token counts are recomputed over the current text, not
     # the original).  Best quality first until the running token total
-    # exceeds the budget (functions/sampling.ranged_running_total — the
-    # distributed prefix sum, no single-task global window).
+    # exceeds the budget (text.token_budget_select over the distributed
+    # prefix sum — no single-task global window).
     if token_budget is not None:
-        from emulating_hadoop_with_mpi_spark.functions.sampling import (
-            ranged_running_total,
-        )
-
         # the score columns always reflect the CURRENT text (the span-cut
         # stage re-scores in-pass; every later stage is pure selection),
         # so the budget input is a zero-join compact projection of the
         # persisted survivor frame on every path — no second feature pass
-        qtok = uniq.select("doc_id", "n_tokens", "quality").filter(
-            F.col("n_tokens") > 0
-        )
-        sel = (
-            ranged_running_total(
-                qtok,
-                ord_col=-F.col("quality"),
-                tie_col="doc_id",
-                val_col=F.col("n_tokens"),
-                out_col="__cum",
-            )
-            .filter(F.col("__cum") <= token_budget)
-            .select("doc_id")
-        )
+        sel = token_budget_select(
+            uniq.select("doc_id", "n_tokens", "quality"), token_budget, "__cum"
+        ).select("doc_id")
         uniq = uniq.join(sel, "doc_id", "left_semi")
         frames["budget"] = uniq
 

@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 
 SPLIT_DENOM = 10_000  # basis points: fractions are exact to 0.01%
 
-# Range count for the distributed global-order machinery (the
-# pack_sequences precedent: output is invariant to boundary placement,
-# so the approximate percentiles only set task balance, never results).
+# Default range count of ranged_running_total (output is invariant to
+# boundary placement, so the approximate percentiles only set task
+# balance, never results).
 ORDER_NUM_RANGES = 64
 
 # The canonical train/val/test carve (defined here, next to the operator
@@ -333,16 +333,16 @@ def order_key_oracle_sql(key_sql: str, salt: str = "") -> str:
 # Bounded plan-keyed cache registry for ranged_running_total's staged
 # frames (round 14, VERDICT r13 item 4 — repeated pipeline invocations
 # must not accumulate executor storage; see functions/framecache.py for
-# the reuse/eviction contract).  Capacity 4 (round 15): one query can
-# interleave four ranged consumers — q85 runs the standalone
-# token-budget section, the DSIR and LM rank selections, and the curate
-# budget stage in one invocation — so all four stay warm while storage
-# stays bounded at four compact staged frames.
+# the reuse/eviction contract).  Capacity 5: one q85 call interleaves
+# five ranged consumers — the standalone token-budget section, the DSIR
+# and LM rank selections, the curate budget stage and the curate
+# packing (text.pack_sequences) — so all five stay warm while storage
+# stays bounded at five compact staged frames.
 from emulating_hadoop_with_mpi_spark.functions.framecache import (  # noqa: E402
     PlanKeyedFrameCache,
 )
 
-_RANGED_CACHE = PlanKeyedFrameCache(capacity=4)
+_RANGED_CACHE = PlanKeyedFrameCache(capacity=5)
 
 
 def unpersist_ranged_cache() -> None:
@@ -360,31 +360,36 @@ def ranged_running_total(
     val_col: Column,
     out_col: str,
     num_ranges: int = ORDER_NUM_RANGES,
+    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Distributed running total of ``val_col`` over the global
-    (``ord_col``, ``tie_col``) order — the generalization of
-    pack_sequences' inline prefix sum (functions/text.py) to an arbitrary
-    numeric order key.  Same scalable shape, NOT a bare
-    ``Window.orderBy`` (which would move the whole corpus to one task):
+    (``ord_col``, ``tie_col``) order of a numeric order key — restarted
+    per ``group_cols`` value when given.  The one prefix sum of the
+    package (sequence packing, token-budget and rank selection, the
+    training-order shuffle).  NOT a bare ``Window.orderBy``, which would
+    move the whole corpus to one task:
 
-    1. ``approx_percentile`` range boundaries over the order key (output
-       is invariant to boundary placement — any contiguous-in-order range
-       split yields the same global prefix — so approximate percentiles
-       only affect task balance);
-    2. per-range running totals, window partitioned by range id;
-    3. per-range grand totals + a fixed-size (num_ranges-row) offset
-       window;
-    4. global total = range offset + in-range running total via a
-       broadcast join.
+    1. ``approx_percentile`` range boundaries over the order key, global
+       across groups (output is invariant to boundary placement — any
+       contiguous-in-order range split yields the same prefix — so
+       approximate percentiles only affect task balance: they make
+       ranges count-balanced for sparse or skewed key spaces alike);
+    2. per-range running totals, window partitioned by
+       (``group_cols``, range id);
+    3. per-range grand totals + an offset window partitioned by
+       ``group_cols`` (a single partition of num_ranges rows without
+       groups — fixed-size, not data-scale);
+    4. total = range offset + in-range running total via a broadcast
+       join.
 
     Rows with equal order keys share a range id by construction (range
     id = #boundaries strictly below the key), and ``tie_col`` must be
     unique, so the order — and therefore the output — is total and
     deterministic.  ``num_ranges=1`` is the degenerate single-range case
-    (legal, but a single-task window — only for tiny frames); the range
-    machinery is skipped entirely rather than built from an empty
-    percentile list, whose NULL bounds would NULL ``__rng`` and silently
-    drop every row at the range join.
+    (legal, but a single-task window per group — only for tiny frames);
+    the range machinery is skipped entirely rather than built from an
+    empty percentile list, whose NULL bounds would NULL ``__rng`` and
+    silently drop every row at the range join.
 
     EAGER at call time (ADVICE r14 — callers constructing frames
     speculatively pay this): merely BUILDING the returned frame runs the
@@ -401,7 +406,7 @@ def ranged_running_total(
     the input lineage; the boundary agg doubles as the eager cache
     fill) through the bounded plan-keyed registry above — identical
     re-invocations reuse the warm frame, new plans evict the
-    least-recently-used entry beyond capacity 2, so storage stays
+    least-recently-used entry beyond capacity 5, so storage stays
     bounded no matter how many times a pipeline invokes shuffle/budget
     selection.  Call :func:`unpersist_ranged_cache` for an explicit
     early release.
@@ -410,44 +415,44 @@ def ranged_running_total(
 
     if num_ranges < 1:
         raise ValueError(f"num_ranges must be >= 1 (got {num_ranges})")
+    g = list(group_cols or [])
     staged, meta = _RANGED_CACHE.lookup_entry(
         df.withColumn("__ord", ord_col).withColumn("__val", val_col.cast("long"))
     )
-    if num_ranges == 1:
-        staged = staged.withColumn("__rng", F.lit(0).cast("long"))
-    else:
-        bounds_key = f"bounds:{num_ranges}"
-        bounds = meta.get(bounds_key)
-        if bounds is None:
-            probs = [i / num_ranges for i in range(1, num_ranges)]
-            row = staged.agg(
-                F.percentile_approx(
-                    "__ord", F.array(*[F.lit(p) for p in probs]), 10000
-                ).alias("__bounds")
-            ).collect()[0]
-            bounds = [b for b in (row["__bounds"] or []) if b is not None]
-            meta[bounds_key] = bounds
-        if bounds:
-            arr = F.array(*[F.lit(b) for b in bounds])
-            staged = staged.withColumn(
-                "__rng",
-                F.size(F.filter(arr, lambda b: b < F.col("__ord"))).cast("long"),
-            )
-        else:  # empty input: percentiles are NULL, but there are no rows to range
-            staged = staged.withColumn("__rng", F.lit(0).cast("long"))
-    w_in = Window.partitionBy("__rng").orderBy("__ord", tie_col).rowsBetween(
+    # num_ranges=1 needs no bounds: the empty list puts every row in range 0
+    bounds_key = f"bounds:{num_ranges}"
+    bounds = meta.get(bounds_key) if num_ranges > 1 else []
+    if bounds is None:
+        probs = [i / num_ranges for i in range(1, num_ranges)]
+        row = staged.agg(
+            F.percentile_approx(
+                "__ord", F.array(*[F.lit(p) for p in probs]), 10000
+            ).alias("__bounds")
+        ).collect()[0]
+        bounds = [b for b in (row["__bounds"] or []) if b is not None]
+        meta[bounds_key] = bounds
+    if bounds:
+        # ONE parsed array expression, not one py4j F.lit per bound
+        # (~0.5 s for pack_sequences' 1,023); str(float) round-trips
+        lits = [f"{b}L" if isinstance(b, int) else f"CAST('{b}' AS DOUBLE)" for b in bounds]
+        arr = F.expr(f"array({', '.join(lits)})")
+        rng = F.size(F.filter(arr, lambda b: b < F.col("__ord")))
+    else:  # one range, or empty input (NULL percentiles, but no rows to range)
+        rng = F.lit(0)
+    staged = staged.withColumn("__rng", rng.cast("long"))
+    w_in = Window.partitionBy(*g, "__rng").orderBy("__ord", tie_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     local = staged.withColumn("__cum_in", F.sum("__val").over(w_in))
-    range_totals = staged.groupBy("__rng").agg(F.sum("__val").alias("__rt"))
-    w_rng = Window.partitionBy(F.lit(1)).orderBy("__rng").rowsBetween(
+    range_totals = staged.groupBy(*g, "__rng").agg(F.sum("__val").alias("__rt"))
+    w_rng = Window.partitionBy(*(g or [F.lit(1)])).orderBy("__rng").rowsBetween(
         Window.unboundedPreceding, -1
     )
     offsets = range_totals.select(
-        "__rng", F.coalesce(F.sum("__rt").over(w_rng), F.lit(0)).alias("__off")
+        *g, "__rng", F.coalesce(F.sum("__rt").over(w_rng), F.lit(0)).alias("__off")
     )
     return (
-        local.join(F.broadcast(offsets), "__rng")
+        local.join(F.broadcast(offsets), [*g, "__rng"])
         .withColumn(out_col, (F.col("__off") + F.col("__cum_in")).cast("long"))
         .drop("__ord", "__val", "__rng", "__cum_in", "__off")
     )

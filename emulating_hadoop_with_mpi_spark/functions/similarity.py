@@ -24,13 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emulating_hadoop_with_mpi_spark.plans.inspect import plan_size_bytes
+from emulating_hadoop_with_mpi_spark.plans.inspect import partitioned
 from emulating_hadoop_with_mpi_spark.registry import query
 from emulating_hadoop_with_mpi_spark.sources.tables import load_table
-
-# corpus-size boundary above which q75b's verify joins stop broadcasting
-# the O(corpus) quantized-vector frames (same regime as the dedup family)
-SEMANTIC_PARTITIONED_BYTES = 64 * 1024 * 1024
 
 NEARDUP_SLICE = 300  # vec_id bound for the oracle-checked brute-force pair scan
 NEARDUP_MIN_COSINE = 0.25
@@ -263,11 +259,11 @@ def semantic_neardup_pairs(
     """Core of q75b over an arbitrary (vec_id, embedding) frame — see
     q75b_semantic_neardup_lsh for the contract and scale shape.
 
-    Cache contract (ADVICE r8): in the partitioned regime two
-    candidate-bounded frames are cache()d lazily and stay resident for
-    the session; long-running callers issuing many independent passes
-    should spark.catalog.clearCache() between them (same contract as
-    minhash_verified_pairs)."""
+    The verify join is dedup.verify_join (its cache contract applies
+    in the partitioned regime, as for minhash_verified_pairs): above
+    the corpus boundary the qv-array frames never broadcast."""
+    from emulating_hadoop_with_mpi_spark.functions.dedup import verify_join
+
     coded = lsh_codes(emb)
     qv = coded.select(
         "vec_id", quantize(F.col("embedding")).alias("qv"), "code"
@@ -280,36 +276,14 @@ def semantic_neardup_pairs(
     cand = a.join(
         b, (F.col("pcode") == F.col("bcode")) & (F.col("vec_a") < F.col("vec_b"))
     ).select("vec_a", "vec_b")
-    sa = qv.select(
-        F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"), F.col("norm2").alias("na")
+    joined = verify_join(
+        cand,
+        qv,
+        "vec_id",
+        {"vec_id": "vec_a", "qv": "qa", "norm2": "na"},
+        {"vec_id": "vec_b", "qv": "qb", "norm2": "nb"},
+        partitioned(emb),
     )
-    sb = qv.select(
-        F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"), F.col("norm2").alias("nb")
-    )
-    # Same size-dispatched verify shape as the MinHash/ppjoin family
-    # (plans/inspect.plan_size_bytes): above the corpus boundary the
-    # qv-array frames must never broadcast — semi-join them down to
-    # candidate ids and build shuffle_hash on the ids-only candidate side,
-    # everything bounded by candidate count.  Below it Catalyst's
-    # broadcast plan wins.
-    size = plan_size_bytes(emb)
-    if size is None or size > SEMANTIC_PARTITIONED_BYTES:
-        cand = cand.cache()
-        cand_ids = (
-            cand.select(F.col("vec_a").alias("vec_id"))
-            .unionAll(cand.select(F.col("vec_b").alias("vec_id")))
-            .distinct()
-        )
-        bounded = qv.join(cand_ids, "vec_id", "left_semi").cache()
-        sa = bounded.select(
-            F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"), F.col("norm2").alias("na")
-        )
-        sb = bounded.select(
-            F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"), F.col("norm2").alias("nb")
-        )
-        joined = cand.hint("shuffle_hash").join(sa, "vec_a").hint("shuffle_hash").join(sb, "vec_b")
-    else:
-        joined = cand.join(sa, "vec_a").join(sb, "vec_b")
     cosine = F.col("dot").cast("double") / F.sqrt(
         F.col("na").cast("double") * F.col("nb").cast("double")
     )

@@ -140,10 +140,6 @@ PII_CANARY_TEXT = (
 FINGERPRINT_PREFIX = 256  # chars of text folded into the rolling hash
 FP_MOD = 2147483647
 
-# corpus-size boundary above which q84 stops broadcasting the O(vocab)
-# df table (same regime boundary as the dedup family's verify joins)
-TFIDF_PARTITIONED_BYTES = 64 * 1024 * 1024
-
 
 def tokens_col(text: str | Column = "text") -> Column:
     """Whitespace tokens of lowercased text, empty strings dropped —
@@ -993,7 +989,7 @@ def q84_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
       is already hash-partitioned by term from its own groupBy, and
       broadcasting a 100 TB corpus' vocabulary to every executor is the
       same stats-class failure as the dedup verify joins
-      (plans/inspect.plan_size_bytes dispatch).
+      (plans/inspect.partitioned dispatch).
     - 'bm25' (round 11, VERDICT r10 item 7): Okapi BM25 top-10 docs per
       query for the fixed BM25_SECTION_QUERIES set — ``bm25_topk``
       (functions/search.py), TF-IDF's query-time sibling, promoted from
@@ -1003,7 +999,7 @@ def q84_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``bm25_oracle_sql`` — the same DuckDB twin the local parity test
       pins at sf0.001/sf0.01."""
     from emulating_hadoop_with_mpi_spark.functions.search import bm25_topk
-    from emulating_hadoop_with_mpi_spark.plans.inspect import plan_size_bytes
+    from emulating_hadoop_with_mpi_spark.plans.inspect import partitioned
 
     docs = load_table(spark, sf_dir, "documents")
     # ONE logical posting frame for the whole query (VERDICT r11 item 1):
@@ -1026,8 +1022,7 @@ def q84_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emulating_hadoop_with_mpi_spark.functions.search import corpus_postings
 
     postings = corpus_postings(docs)
-    size = plan_size_bytes(docs)
-    small = size is not None and size <= TFIDF_PARTITIONED_BYTES
+    small = not partitioned(docs)
     if not small:
         postings = postings.persist()
     # df is a FREE reduction of the posting frame: one row per (doc,
@@ -1139,18 +1134,13 @@ def chunk_documents(
 
 PACK_NUM_RANGES = 1024  # prefix-sum range partitions (count-balanced)
 
-# Bounded plan-keyed registry for pack_sequences' per-doc token counts
-# (functions/framecache.py; capacity 2 = the grouped + ungrouped pair a
-# pipeline might interleave) — a resident process packing many corpora
-# must not accumulate a counts cache per call.
+# Bounded plan-keyed registry (functions/framecache.py) for q85's shared
+# quality-score projection (one compact frame per corpus; capacity 2
+# covers an interleaved SF pair).
 from emulating_hadoop_with_mpi_spark.functions.framecache import (  # noqa: E402
     PlanKeyedFrameCache as _PlanKeyedFrameCache,
 )
 
-_PACK_CACHE = _PlanKeyedFrameCache(capacity=2)
-
-# Same registry class for q85's shared quality-score projection (one
-# compact frame per corpus; capacity 2 covers an interleaved SF pair).
 _QSCORE_CACHE = _PlanKeyedFrameCache(capacity=2)
 
 
@@ -1163,94 +1153,72 @@ def pack_sequences(
     total ENDS, so a doc that would straddle a boundary opens the next bin
     and any doc larger than the budget occupies its bin(s) alone.
 
-    Scalable shape — a DISTRIBUTED prefix sum, not a global window (a bare
-    ``Window.orderBy`` would move the whole corpus to one partition):
-
-    1. range boundaries: ``approx_percentile(doc_id)`` at
-       ``PACK_NUM_RANGES`` evenly-spaced probabilities — one tiny agg.
-       Count-balanced BY CONSTRUCTION, so sparse id spaces (ids · 1e6)
-       and skewed ones (90% of ids in one narrow band) both split into
-       ~equal ranges, where the former ``doc_id div SPAN`` keying
-       degenerated (one doc per range, or one range with 90% of the
-       corpus).  The packing OUTPUT is invariant to boundary placement —
-       any contiguous-in-order range partition yields the same global
-       prefix sum — so approximate (even run-varying) percentiles can
-       never change a bin assignment, only task balance.
-    2. per-range running totals: window partitioned by the range id
-       (= how many broadcast boundaries lie below doc_id) — parallel
-       across ranges;
-    3. per-range grand totals: one tiny aggregate (rows = ranges);
-    4. range offsets: cumulative sum over that tiny table (single-partition
-       window over PACK_NUM_RANGES rows — fixed-size, not data-scale);
-    5. global running total = range offset + in-range running total,
-       via a broadcast join of the offsets.
-
-    Deterministic output, one data shuffle (the range hash),
+    Scalable shape — the running token total over doc_id order is the
+    distributed prefix sum (functions/sampling.ranged_running_total over
+    ``PACK_NUM_RANGES`` count-balanced doc_id ranges), not a global
+    window (a bare ``Window.orderBy`` would move the whole corpus to one
+    partition); the bin fill is one more window partitioned by bin.
     O(corpus/PACK_NUM_RANGES) rows per task (~1M docs/range at 1B docs;
-    raise PACK_NUM_RANGES for larger corpora).  Exact greedy packing is inherently sequential (each
-    bin boundary depends on the waste of every earlier bin); this
-    end-aligned binning is its standard deterministic approximation, with
-    a bounded overshoot: a bin whose FIRST document straddles the budget
-    boundary holds up to ``budget + that_doc_len - 1`` tokens (the
-    straddler counts fully toward the bin it ends in).  Consumers size
-    ``budget`` with max-document headroom or truncate at load.
+    raise PACK_NUM_RANGES for larger corpora).  Exact greedy packing is
+    inherently sequential (each bin boundary depends on the waste of
+    every earlier bin); this end-aligned binning is its standard
+    deterministic approximation, with a bounded overshoot: a bin whose
+    FIRST document straddles the budget boundary holds up to
+    ``budget + that_doc_len - 1`` tokens (the straddler counts fully
+    toward the bin it ends in).  Consumers size ``budget`` with
+    max-document headroom or truncate at load.
+
+    EAGER like ranged_running_total: building the frame runs the
+    percentile-bounds job over the per-doc token counts (which also
+    fills their persisted, registry-bounded cache); a plan-identical
+    re-build runs no job.
 
     Output: (doc_id, n_tokens, bin_id, bin_fill) where bin_fill is the
     running token count within the doc's bin.
 
-    With ``group_col`` (e.g. a train/val/test split label) the whole
-    scheme runs independently PER GROUP — every window/aggregate above
-    gains the group as a leading partition key, so bins are group-pure by
-    construction and bin_ids restart per group.  Same cost shape: the
-    group key just rides along in the one data shuffle.
+    With ``group_col`` (e.g. a train/val/test split label) the packing
+    runs independently PER GROUP — the prefix sum restarts per group and
+    the bin window gains the group as a leading partition key, so bins
+    are group-pure by construction and bin_ids restart per group.  Same
+    cost shape: the group key just rides along in the one data shuffle.
     """
     from pyspark.sql import Window
 
     g = [group_col] if group_col else []
-    # persist: the boundary agg, the in-range window, and the range-total
-    # agg each traverse these rows; without a materialization point the
-    # tokenize pass (the dominant cost) would run once per traversal.
-    # 16 bytes/doc — trivially cacheable at any corpus size.  Routed
-    # through the bounded plan-keyed registry (round 14): identical
-    # re-invocations reuse the warm counts, storage stays bounded across
-    # arbitrarily many packing calls in one session.
-    counted = _PACK_CACHE.lookup(
-        docs.select(*g, "doc_id", F.size(tokens_col()).cast("long").alias("n_tokens"))
-        .filter(F.col("n_tokens") > 0)
-    )
-    probs = [i / PACK_NUM_RANGES for i in range(1, PACK_NUM_RANGES)]
-    bounds = counted.agg(
-        F.percentile_approx(
-            "doc_id", F.array(*[F.lit(p) for p in probs]), 10000
-        ).alias("bounds")
-    )
-    # range id = #boundaries strictly below doc_id: monotone in doc_id, so
-    # ranges stay contiguous in packing order (the correctness requirement);
-    # the boundaries only set where ranges split (the balance requirement).
-    staged = counted.join(F.broadcast(bounds)).withColumn(
-        "rng",
-        F.size(F.filter("bounds", lambda b: b < F.col("doc_id"))).cast("long"),
-    ).drop("bounds")
-    w_in = Window.partitionBy(*g, "rng").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = staged.withColumn("cum_in", F.sum("n_tokens").over(w_in))
-    range_totals = staged.groupBy(*g, "rng").agg(F.sum("n_tokens").alias("rng_total"))
-    w_rng = Window.partitionBy(*g).orderBy("rng").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = range_totals.select(
-        *g, "rng", F.coalesce(F.sum("rng_total").over(w_rng), F.lit(0)).alias("offset")
-    )
-    binned = local.join(F.broadcast(offsets), [*g, "rng"]).withColumn(
-        "bin_id", F.expr(f"(offset + cum_in - 1) div {budget}")
-    )
+    counted = docs.select(
+        *g, "doc_id", F.size(tokens_col()).cast("long").alias("n_tokens")
+    ).filter(F.col("n_tokens") > 0)
+    binned = _ranged_running_total(
+        counted,
+        ord_col=F.col("doc_id"),
+        tie_col="doc_id",
+        val_col=F.col("n_tokens"),
+        out_col="__cum",
+        num_ranges=PACK_NUM_RANGES,
+        group_cols=g,
+    ).withColumn("bin_id", F.expr(f"(__cum - 1) div {budget}"))
     wb = Window.partitionBy(*g, "bin_id").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return binned.withColumn("bin_fill", F.sum("n_tokens").over(wb)).select(
         *g, "doc_id", "n_tokens", "bin_id", "bin_fill"
     )
+
+
+def token_budget_select(scored: DataFrame, budget: int, out_col: str) -> DataFrame:
+    """Token-budget quality selection over (doc_id, n_tokens, quality)
+    rows: best quality first (ties by doc_id) while the running token
+    total — the distributed prefix sum, kept as ``out_col`` — fits
+    ``budget``; docs without tokens are dropped.  EAGER like
+    ranged_running_total.  Shared by q85's 'budget' section and the
+    curation pipeline's token-budget stage."""
+    return _ranged_running_total(
+        scored.filter(F.col("n_tokens") > 0),
+        ord_col=-F.col("quality"),
+        tie_col="doc_id",
+        val_col=F.col("n_tokens"),
+        out_col=out_col,
+    ).filter(F.col(out_col) <= budget)
 
 
 CHUNK_WINDOW = 64
@@ -1955,11 +1923,11 @@ def q85_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(label).alias("chunk_text"),
         )
 
-    # 'budget' (round 13 continuation): token-budget quality selection —
-    # distributed running total of n_tokens over the (quality DESC,
-    # doc_id) order, keep while the running total fits the budget.  Its
+    # 'budget' (round 13 continuation): token-budget quality selection
+    # (token_budget_select — distributed running total of n_tokens over
+    # the (quality DESC, doc_id) order, keep while it fits the budget).  Its
     # ranged staged frame and the curate budget stage's below both stay
-    # warm under sampling.py's capacity-2 plan-keyed cache registry.
+    # warm under sampling.py's capacity-5 plan-keyed cache registry.
     #
     # ONE quality pass for the whole query (round 14): this section and
     # the curate composition's gate stage both consume
@@ -1971,23 +1939,12 @@ def q85_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs_base = _QSCORE_CACHE.lookup(
         quality_gate_scores(docs).select("doc_id", "n_tokens", "quality")
     )
-    qs = qs_base.filter(F.col("n_tokens") > 0)
-    brows = (
-        _ranged_running_total(
-            qs,
-            ord_col=-F.col("quality"),
-            tie_col="doc_id",
-            val_col=F.col("n_tokens"),
-            out_col="cum_tokens",
-        )
-        .filter(F.col("cum_tokens") <= TOKEN_BUDGET_SECTION)
-        .select(
+    brows = token_budget_select(qs_base, TOKEN_BUDGET_SECTION, "cum_tokens").select(
             F.lit("budget").alias("method"),
             "doc_id",
             F.col("cum_tokens").cast("int").alias("chunk_idx"),
             F.col("n_tokens").cast("int").alias("n_tokens"),
             F.lit(None).cast("string").alias("chunk_text"),
-        )
     )
 
     # ONE composition, every stage audited from the SAME frames the final
@@ -2170,8 +2127,9 @@ def q86_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-keyed order (functions/sampling.global_order_index), i.e. the
     reproducible permutation a run shards its training data by, with
     none of ``rand()``'s layout dependence.  Distributed prefix count
-    over percentile ranges (the pack_sequences machinery generalized —
-    no single-task global window), re-derived by the oracle as
+    over percentile ranges (sampling.ranged_running_total, the same
+    prefix sum the packing above runs on — no single-task global
+    window), re-derived by the oracle as
     ``ROW_NUMBER() OVER (ORDER BY md5key, doc_id)`` so the driver hash
     covers the entire permutation."""
     docs = load_table(spark, sf_dir, "documents")

@@ -12,6 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# Corpus-size boundary of the scale paths' physical regime (the dedup,
+# semantic and TF-IDF verify/df joins): below it Catalyst may broadcast
+# the corpus-derived frames (single-exchange plans win on one heap);
+# above it those joins are pinned shuffle_hash, because broadcasting an
+# O(corpus) frame to every executor fails at cluster scale whatever the
+# driver heap.  Tests force the large regime by setting it to 1.
+PARTITIONED_BYTES = 64 * 1024 * 1024
+
 
 def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -81,3 +89,10 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     except Exception:  # noqa: BLE001 — internal conf; fall back to its default
         default = (1 << 63) - 1
     return None if size >= default else size
+
+
+def partitioned(df: DataFrame) -> bool:
+    """True when ``df`` belongs to the partitioned regime: its Catalyst
+    size estimate is unknown or above :data:`PARTITIONED_BYTES`."""
+    size = plan_size_bytes(df)
+    return size is None or size > PARTITIONED_BYTES

@@ -38,9 +38,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables a planner should always broadcast in star joins.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":

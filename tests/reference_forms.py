@@ -21,10 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from emulating_hadoop_with_mpi_spark.functions.dedup import (
-    _ppjoin_partitioned,
-    shingles_df,
-)
+from emulating_hadoop_with_mpi_spark.functions.dedup import shingles_df
 from emulating_hadoop_with_mpi_spark.functions.dsir import DSIR_BUCKETS, doc_bucket_counts
 from emulating_hadoop_with_mpi_spark.functions.lm import doc_bigram_profile
 from emulating_hadoop_with_mpi_spark.functions.search import corpus_postings
@@ -34,6 +31,7 @@ from emulating_hadoop_with_mpi_spark.functions.text import (
     quality_scores,
     tokens_col,
 )
+from emulating_hadoop_with_mpi_spark.plans.inspect import partitioned
 
 
 # Longest run of equal adjacent elements in a SORTED bigint array — i.e.
@@ -194,15 +192,12 @@ def _corpus_postings_jvm(docs: DataFrame) -> DataFrame:
     )
 
 
-def _ppjoin_ranked_join(
-    docs: DataFrame, ngram: int = 3, plan: str = "auto"
-) -> DataFrame:
+def _ppjoin_ranked_join(docs: DataFrame, ngram: int = 3) -> DataFrame:
     """The former groupBy + join formulation of :func:`ppjoin_ranked`
-    (rounds 15-17), kept as the window form's reference."""
+    (rounds 15-17), kept as the window form's reference; its df join is
+    pinned shuffle_hash in the partitioned regime."""
     _pin = (
-        (lambda f: f.hint("shuffle_hash"))
-        if _ppjoin_partitioned(docs, plan)
-        else (lambda f: f)
+        (lambda f: f.hint("shuffle_hash")) if partitioned(docs) else (lambda f: f)
     )
     ds = shingles_df(docs, n=ngram).select("doc_id", F.xxhash64("shingle").alias("sh"))
     df_counts = ds.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))

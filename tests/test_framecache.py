@@ -1,6 +1,6 @@
 """PlanKeyedFrameCache (functions/framecache.py — round 14, VERDICT r13
 item 4 generalized): bounded operator-internal persists with warm reuse.
-The ranged/pack/curate registries are instances; this file pins the
+The ranged/quality-score/curate registries are instances; this file pins the
 class contract itself."""
 
 from __future__ import annotations
@@ -137,17 +137,22 @@ def test_truncate_mode_returns_plan_leaf_and_bounds_storage(spark):
 
 def test_ranged_running_total_warm_hit_skips_bounds_aggregate(spark):
     """VERDICT r14 item 5: a plan-identical re-invocation of
-    ranged_running_total must reuse the folded bounds — zero new jobs at
-    build time (the percentile aggregate ran once, on the cold call)."""
+    ranged_running_total — directly, or through pack_sequences, which
+    runs on it — must reuse the folded bounds: zero new jobs at build
+    time (the percentile aggregate ran once, on the cold call)."""
     from emulating_hadoop_with_mpi_spark.functions.sampling import (
         _RANGED_CACHE,
         ranged_running_total,
     )
+    from emulating_hadoop_with_mpi_spark.functions.text import pack_sequences
 
     _RANGED_CACHE.release_all()
     df = _frame(spark, "rrt").select(F.col("id").alias("doc_id"))
+    docs = _frame(spark, "pack").select(
+        F.col("id").alias("doc_id"), F.concat_ws(" ", "h", "h").alias("text")
+    )
 
-    def build():
+    def ranged():
         return ranged_running_total(
             df,
             ord_col=F.col("doc_id") * 7 % 13,
@@ -157,15 +162,16 @@ def test_ranged_running_total_warm_hit_skips_bounds_aggregate(spark):
             num_ranges=4,
         )
 
-    cold = build()
     tracker = spark.sparkContext.statusTracker()
-    n0 = max(tracker.getJobIdsForGroup(None) or [-1])
-    warm = build()  # plan-identical: bounds from entry metadata, no job
-    n1 = max(tracker.getJobIdsForGroup(None) or [-1])
-    assert n1 == n0, f"warm build ran {n1 - n0} job(s); expected 0"
-    assert sorted(r.cum for r in warm.collect()) == sorted(
-        r.cum for r in cold.collect()
-    )
+    for build in (ranged, lambda: pack_sequences(docs, budget=5)):
+        cold = build()
+        n0 = max(tracker.getJobIdsForGroup(None) or [-1])
+        warm = build()  # plan-identical: bounds from entry metadata, no job
+        n1 = max(tracker.getJobIdsForGroup(None) or [-1])
+        assert n1 == n0, f"warm build ran {n1 - n0} job(s); expected 0"
+        assert sorted(map(tuple, warm.collect())) == sorted(
+            map(tuple, cold.collect())
+        )
     _RANGED_CACHE.release_all()
 
 

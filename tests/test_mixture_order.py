@@ -266,7 +266,7 @@ def test_mix_keep_agrees_with_manual_bucket(spark, sf_dir):
 # --- property tests (the test_properties.py idiom: few examples, no deadline,
 # tiny driver-built frames — shapes and adversarial values, not bulk) ---
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -276,31 +276,40 @@ from hypothesis import strategies as st
         st.tuples(
             st.integers(min_value=-(2**31), max_value=2**31),  # order key w/ ties
             st.integers(min_value=0, max_value=1000),  # value
+            st.integers(min_value=0, max_value=2),  # group
         ),
         min_size=1,
         max_size=60,
     ),
     num_ranges=st.integers(min_value=1, max_value=9),
 )
+# a one-row group (g=0) next to a multi-row one, with and without ranges
+@example(rows=[(5, 3, 0), (5, 2, 1), (1, 4, 1), (9, 1, 1)], num_ranges=1)
+@example(rows=[(5, 3, 0), (5, 2, 1), (1, 4, 1), (9, 1, 1)], num_ranges=3)
 def test_ranged_running_total_property(spark, rows, num_ranges):
     """Distributed prefix sum == the sequential formulation for ANY order
     keys (duplicates included — the tie-on-a-range-boundary case) and any
-    range count, on adversarial tiny frames."""
+    range count, on adversarial tiny frames — over the whole frame, and
+    with ``group_cols`` against one single-window sum per group (the
+    bounds stay global, so ranges straddle groups)."""
     from pyspark.sql import Window
 
-    data = [(i, o, v) for i, (o, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "id long, o long, v long")
-    dist = ranged_running_total(
-        df, ord_col=F.col("o"), tie_col="id", val_col=F.col("v"),
-        out_col="cum", num_ranges=num_ranges,
-    )
-    w = Window.orderBy("o", "id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ref = df.withColumn("ref", F.sum("v").over(w).cast("long"))
-    # Row-preservation first: an empty distributed result would make the
-    # join-based mismatch count pass vacuously (ADVICE r13 — it masked
-    # the num_ranges=1 empty-frame bug).
-    assert dist.count() == df.count()
-    assert dist.join(ref.select("id", "ref"), "id").filter("cum != ref").count() == 0
+    data = [(i, o, v, g) for i, (o, v, g) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id long, o long, v long, g long")
+    for groups in ([], ["g"]):
+        dist = ranged_running_total(
+            df, ord_col=F.col("o"), tie_col="id", val_col=F.col("v"),
+            out_col="cum", num_ranges=num_ranges, group_cols=groups,
+        )
+        w = Window.partitionBy(*groups).orderBy("o", "id").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        ref = df.withColumn("ref", F.sum("v").over(w).cast("long"))
+        # Row-preservation first: an empty distributed result would make
+        # the join-based mismatch count pass vacuously (ADVICE r13 — it
+        # masked the num_ranges=1 empty-frame bug).
+        assert dist.count() == df.count()
+        assert dist.join(ref.select("id", "ref"), "id").filter("cum != ref").count() == 0
 
 
 @settings(max_examples=8, deadline=None)
@@ -395,7 +404,7 @@ def test_ranged_cache_is_bounded(spark):
     df = spark.createDataFrame(
         [(i, i % 7, 1) for i in range(30)], "id long, o long, v long"
     )
-    for salt in ("a", "b", "c", "d", "a2"):
+    for salt in ("a", "b", "c", "d", "e", "f", "a2"):
         global_order_index(df, "id", salt=salt, num_ranges=4).count()
         assert jsc.getPersistentRDDs().size() <= base + _RANGED_CACHE.capacity
     # identical plan -> cache HIT: no new registry entry, warm frame reused

@@ -726,48 +726,46 @@ def test_connected_components_nonconvergence_raises(spark):
         connected_components(edges, max_rounds=2, local_max_edges=0)
 
 
-def test_minhash_partitioned_regime_never_broadcasts_sets(spark, sf_dir):
+def test_minhash_partitioned_regime_never_broadcasts_sets(spark, sf_dir, monkeypatch):
     """Above the size boundary the q73 verify joins must build on the
     candidate side (ShuffledHashJoin) with the shset-array frame
     semi-joined down to candidate docs — no O(corpus) broadcast (the
     sf10-measured ~400 MB hazard); output equal to the broadcast regime."""
     import emulating_hadoop_with_mpi_spark.functions.dedup as dd
+    from emulating_hadoop_with_mpi_spark.plans import inspect
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    orig = dd.PPJOIN_PARTITIONED_BYTES
-    try:
-        dd.PPJOIN_PARTITIONED_BYTES = 1
+    with monkeypatch.context() as m:
+        m.setattr(inspect, "PARTITIONED_BYTES", 1)
         part = dd.minhash_verified_pairs(docs)
         plan = part._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan
         part_rows = sorted(map(tuple, part.collect()))
-    finally:
-        dd.PPJOIN_PARTITIONED_BYTES = orig
     spark.catalog.clearCache()
+    assert not inspect.partitioned(docs)  # the driver corpus is below the boundary
     small = dd.minhash_verified_pairs(docs)
     assert sorted(map(tuple, small.collect())) == part_rows
     spark.catalog.clearCache()
 
 
-def test_semantic_neardup_partitioned_regime(spark, sf_dir):
+def test_semantic_neardup_partitioned_regime(spark, sf_dir, monkeypatch):
     """q75b above the size boundary: shuffle_hash verify with the
     qv-array frames semi-joined to candidate ids — no O(corpus)
     broadcast; output equal to the broadcast regime."""
     import emulating_hadoop_with_mpi_spark.functions.similarity as sim
+    from emulating_hadoop_with_mpi_spark.plans import inspect
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+    assert not inspect.partitioned(emb)  # the driver corpus is below the boundary
     small_rows = sorted(map(tuple, sim.semantic_neardup_pairs(emb).collect()))
-    orig = sim.SEMANTIC_PARTITIONED_BYTES
-    try:
-        sim.SEMANTIC_PARTITIONED_BYTES = 1
+    with monkeypatch.context() as m:
+        m.setattr(inspect, "PARTITIONED_BYTES", 1)
         part = sim.semantic_neardup_pairs(emb)
         plan = part._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan
         assert sorted(map(tuple, part.collect())) == small_rows
-    finally:
-        sim.SEMANTIC_PARTITIONED_BYTES = orig
     spark.catalog.clearCache()
 
 

@@ -140,23 +140,33 @@ def test_q74_candidates_join_is_equi_not_nested_loop(spark, sf_dir):
 
 def test_pack_sequences_no_global_window(spark, sf_dir):
     """The packing prefix sum must NOT sort the corpus into a single
-    partition: no window in the plan may be both unpartitioned and fed by
-    the documents scan (the tiny range-offset window is fine — it sees at
-    most PACK_NUM_RANGES rows, not per-document ones)."""
+    partition: the running-sum window over the per-document token counts
+    (ranged_running_total's ``__val``) must exist and be partitioned by
+    the range id, and the bin-fill window over ``n_tokens`` by the bin.
+    The range-offset window may be unpartitioned — it sees at most
+    PACK_NUM_RANGES rows, not per-document ones."""
+    import re
+
     from emulating_hadoop_with_mpi_spark.functions.text import pack_sequences
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
     plan = pack_sequences(
         load_table(spark, sf_dir, "documents")
     )._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    # every Window over the raw token rows must carry a partition spec
-    for m in re.finditer(r"Window \[sum\(n_tokens.*?\)", plan):
-        window_line = m.group(0)
-        assert "rng" in window_line or "bin_id" in window_line or "rng_total" in plan, (
-            f"unpartitioned corpus-wide window: {window_line}"
+    # windowspecdefinition(<partition keys>, <order keys ASC/DESC>, frame)
+    windows = [
+        (col, [k for k in spec.split(", ") if k and " ASC " not in k and " DESC " not in k])
+        for col, spec in re.findall(
+            r"Window \[sum\((\w+)#\d+L?\) windowspecdefinition\((.*?)specifiedwindowframe",
+            plan,
         )
+    ]
+    prefix = [keys for col, keys in windows if col == "__val"]
+    assert prefix, f"no running-sum window over the corpus rows:\n{plan}"
+    for keys in prefix:
+        assert any(k.startswith("__rng#") for k in keys), f"unranged prefix window: {keys}"
+    fills = [keys for col, keys in windows if col == "n_tokens"]
+    assert fills and all(any(k.startswith("bin_id#") for k in keys) for keys in fills), fills
 
 
 def test_q75b_semantic_neardup_is_bucketed_equi_join(spark, sf_dir):
@@ -186,26 +196,25 @@ def test_ppjoin_verify_joins_are_shuffled_hash(spark, sf_dir):
     assert "NestedLoop" not in plan, plan
 
 
-def test_tfidf_df_join_dispatches_by_corpus_size(spark, sf_dir):
+def test_tfidf_df_join_dispatches_by_corpus_size(spark, sf_dir, monkeypatch):
     """q84's df join: broadcast below the corpus boundary (driver data),
     ShuffledHashJoin with NO broadcast of the O(vocab) df table above it
     (forced boundary) — same values either way."""
-    import emulating_hadoop_with_mpi_spark.functions.text as tx
+    from emulating_hadoop_with_mpi_spark.plans import inspect
     from emulating_hadoop_with_mpi_spark.registry import all_queries
+    from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
+    assert not inspect.partitioned(load_table(spark, sf_dir, "documents"))
     q = all_queries()["q84_tfidf_top_terms"]
     # key=repr: the bm25 section carries NULL tf/df (round 11), which
     # plain tuple ordering cannot compare against the tfidf ints
     small_rows = sorted(map(tuple, q.fn(spark, sf_dir).collect()), key=repr)
-    orig = tx.TFIDF_PARTITIONED_BYTES
-    try:
-        tx.TFIDF_PARTITIONED_BYTES = 1
+    with monkeypatch.context() as m:
+        m.setattr(inspect, "PARTITIONED_BYTES", 1)
         part = q.fn(spark, sf_dir)
         plan = part._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan
         assert sorted(map(tuple, part.collect()), key=repr) == small_rows
-    finally:
-        tx.TFIDF_PARTITIONED_BYTES = orig
 
 
 def test_no_cartesian_product_in_any_registered_query(spark, sf_dir):
@@ -233,10 +242,10 @@ def test_no_cartesian_product_in_any_registered_query(spark, sf_dir):
     assert not offenders, offenders
 
 
-def test_q84_tokenizes_corpus_exactly_once_above_boundary(spark, sf_dir):
+def test_q84_tokenizes_corpus_exactly_once_above_boundary(spark, sf_dir, monkeypatch):
     """q84's two sections (tfidf + bm25) share ONE posting frame
     (VERDICT r11 item 1).  In the cluster-scale regime (corpus above
-    TFIDF_PARTITIONED_BYTES, forced here) the frame is persisted and
+    plans/inspect.PARTITIONED_BYTES, forced here) the frame is persisted and
     exactly one parquet scan of documents reads the text column — the
     r11 plan tokenized the corpus three times (tf, df, and bm25's
     postings + stats).  The only other documents scan is bm25's stats
@@ -244,15 +253,11 @@ def test_q84_tokenizes_corpus_exactly_once_above_boundary(spark, sf_dir):
     consumers recompute instead — measured faster at toy scale, NOTES
     r12; result equality across regimes is pinned by
     test_tfidf_df_join_dispatches_by_corpus_size.)"""
-    import emulating_hadoop_with_mpi_spark.functions.text as tx
-    from emulating_hadoop_with_mpi_spark.plans.inspect import formatted_plan
+    from emulating_hadoop_with_mpi_spark.plans import inspect
 
-    orig = tx.TFIDF_PARTITIONED_BYTES
-    try:
-        tx.TFIDF_PARTITIONED_BYTES = 1
-        plan = formatted_plan(REGISTRY["q84_tfidf_top_terms"].fn(spark, sf_dir))
-    finally:
-        tx.TFIDF_PARTITIONED_BYTES = orig
+    with monkeypatch.context() as m:
+        m.setattr(inspect, "PARTITIONED_BYTES", 1)
+        plan = inspect.formatted_plan(REGISTRY["q84_tfidf_top_terms"].fn(spark, sf_dir))
     text_scans = [
         ln for ln in plan.splitlines() if "ReadSchema" in ln and "text" in ln
     ]

@@ -99,66 +99,67 @@ def test_prefix_prunes_on_zipf_corpus(spark):
     assert prefix_pairs < direct_pairs / 2, (prefix_pairs, direct_pairs)
 
 
-def test_ppjoin_partitioned_plan_no_broadcast(spark, sf_dir):
-    """plan="partitioned" (the >64MiB auto regime) must contain ZERO
-    BroadcastExchange — broadcasting an O(corpus-tokens) frame is the
-    sf10-measured OOM path — and still equal the small-regime output."""
+def test_ppjoin_partitioned_plan_no_broadcast(spark, sf_dir, monkeypatch):
+    """The partitioned regime (corpus above plans/inspect's boundary,
+    forced here) must contain ZERO BroadcastExchange — broadcasting an
+    O(corpus-tokens) frame is the sf10-measured OOM path — and still
+    equal the small-regime output."""
     from emulating_hadoop_with_mpi_spark.functions.dedup import ppjoin_pairs
+    from emulating_hadoop_with_mpi_spark.plans import inspect
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    part = ppjoin_pairs(docs, plan="partitioned")
-    plan_str = part._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan_str
-    small = ppjoin_pairs(docs, plan="small")
-    assert sorted(map(tuple, part.collect())) == sorted(map(tuple, small.collect()))
+    with monkeypatch.context() as m:
+        m.setattr(inspect, "PARTITIONED_BYTES", 1)
+        part = ppjoin_pairs(docs)
+        plan_str = part._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan_str
+        part_rows = sorted(map(tuple, part.collect()))
+    small = ppjoin_pairs(docs)
+    assert part_rows == sorted(map(tuple, small.collect()))
 
 
-def test_ppjoin_auto_dispatches_by_stats(spark, sf_dir):
-    """auto = small regime under the byte threshold (driver corpus),
-    partitioned above it (monkeypatched boundary)."""
+def test_ppjoin_auto_dispatches_by_stats(spark, sf_dir, monkeypatch):
+    """Small regime under the byte boundary (driver corpus: Catalyst
+    keeps its broadcast plan), partitioned above it (monkeypatched
+    boundary: no broadcast)."""
     import emulating_hadoop_with_mpi_spark.functions.dedup as dd
+    from emulating_hadoop_with_mpi_spark.plans import inspect
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    size = dd._plan_size_bytes(docs)
-    assert size is not None and 0 < size < dd.PPJOIN_PARTITIONED_BYTES
+    size = inspect.plan_size_bytes(docs)
+    assert size is not None and 0 < size < inspect.PARTITIONED_BYTES
+    assert not inspect.partitioned(docs)
+    small_plan = dd.ppjoin_pairs(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in small_plan
 
-    auto_plan = dd.ppjoin_pairs(docs)._jdf.queryExecution().executedPlan().toString()
-    small_plan = dd.ppjoin_pairs(docs, plan="small")._jdf.queryExecution().executedPlan().toString()
-    # same strategy choice as the explicit small regime on this corpus
-    assert auto_plan.count("BroadcastExchange") == small_plan.count("BroadcastExchange")
-
-    orig = dd.PPJOIN_PARTITIONED_BYTES
-    try:
-        dd.PPJOIN_PARTITIONED_BYTES = 1  # force the large regime
-        forced = dd.ppjoin_pairs(docs)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in forced
-    finally:
-        dd.PPJOIN_PARTITIONED_BYTES = orig
+    monkeypatch.setattr(inspect, "PARTITIONED_BYTES", 1)  # force the large regime
+    assert inspect.partitioned(docs)
+    forced = dd.ppjoin_pairs(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in forced
 
 
-def test_exact_jaccard_selfjoin_dispatches_by_stats(spark, sf_dir):
+def test_exact_jaccard_selfjoin_dispatches_by_stats(spark, sf_dir, monkeypatch):
     """q72's shingle self-join pins sort-merge above the (divided) corpus
     boundary — no broadcast of the O(corpus-tokens) string frame — with
     output equal to the broadcast regime."""
     import emulating_hadoop_with_mpi_spark.functions.dedup as dd
+    from emulating_hadoop_with_mpi_spark.plans import inspect
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    small_rows = _rows(dd.exact_jaccard_pairs(docs))
-    orig = dd.PPJOIN_PARTITIONED_BYTES
-    try:
-        dd.PPJOIN_PARTITIONED_BYTES = 1
-        part = dd.exact_jaccard_pairs(docs)
-        plan = part._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert _rows(part) == small_rows
-    finally:
-        dd.PPJOIN_PARTITIONED_BYTES = orig
+    small = dd.exact_jaccard_pairs(docs)
+    assert "SortMergeJoin" not in small._jdf.queryExecution().executedPlan().toString()
+    small_rows = _rows(small)
+    monkeypatch.setattr(inspect, "PARTITIONED_BYTES", 1)
+    part = dd.exact_jaccard_pairs(docs)
+    plan = part._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan
+    assert _rows(part) == small_rows
 
 
-def test_ranked_window_form_equals_join_form(spark):
+def test_ranked_window_form_equals_join_form(spark, monkeypatch):
     """Round-18 pin: ppjoin_ranked's count-window df (one tokenize pass,
     two exchanges) emits exactly the rows of the groupBy + join reference
     form in tests/reference_forms.py (two tokenize passes, three
@@ -167,14 +168,15 @@ def test_ranked_window_form_equals_join_form(spark):
     from reference_forms import _ppjoin_ranked_join
 
     from emulating_hadoop_with_mpi_spark.functions.dedup import ppjoin_ranked
+    from emulating_hadoop_with_mpi_spark.plans import inspect
 
     docs = zipf_corpus(spark, n_docs=400, doc_len=40, vocab=20_000, seed=7)
     cols = ["doc_id", "sh", "df", "n", "rk"]
     got = sorted(tuple(r) for r in ppjoin_ranked(docs).select(*cols).collect())
     assert got, "vacuous: empty ranked frame"
-    for plan in ("small", "partitioned"):
+    for boundary in (inspect.PARTITIONED_BYTES, 1):  # small, then partitioned
+        monkeypatch.setattr(inspect, "PARTITIONED_BYTES", boundary)
         exp = sorted(
-            tuple(r)
-            for r in _ppjoin_ranked_join(docs, plan=plan).select(*cols).collect()
+            tuple(r) for r in _ppjoin_ranked_join(docs).select(*cols).collect()
         )
-        assert got == exp, plan
+        assert got == exp, boundary
