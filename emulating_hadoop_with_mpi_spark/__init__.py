@@ -24,7 +24,15 @@ sinks) — Spark-first:
                    pruning, and broadcast decisions.
 """
 
-from emulating_hadoop_with_mpi_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # PEP 562: importing the package imports no pyspark, so Python workers
+    # started through ``worker_daemon`` can filter ``sys.path`` first.
+    if name == "get_spark":
+        from emulating_hadoop_with_mpi_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

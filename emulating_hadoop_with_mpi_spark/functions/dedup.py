@@ -67,9 +67,6 @@ NUM_PERM = 128
 BANDS = 32
 ROWS_PER_BAND = NUM_PERM // BANDS
 JACCARD_THRESHOLD_NUM = 3  # 3*common >= na+nb  ⟺  J >= 0.5
-SIMHASH_BITS = 64  # held as two 32-bit halves (sim_lo, sim_hi): engine-
-# portable bit math — bit 63 of a single int64 sketch flips the sign,
-# which engines shift/compare differently.
 HAMMING_MAX = 9
 # 5 pigeonhole BLOCKS of 13/13/13/13/12 bits over the full 64-bit sketch,
 # searched with single-bit MULTIPROBE: a pair at Hamming ≤ 9 puts ≤ ⌊9/5⌋
@@ -1065,7 +1062,9 @@ def q79_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def simhash_df(docs: DataFrame) -> DataFrame:
     """(doc_id, sim_lo, sim_hi) — 64-bit SimHash over token hashes, held
-    as two 32-bit halves: bit i of the sketch is the sign of
+    as two 32-bit halves because a single int64 sketch flips sign at bit
+    63, and engines shift and compare that differently; the halves keep
+    the bit math engine-portable.  Bit i of the sketch is the sign of
     Σ_token_occurrences (±1 from bit i of the token hash).  Term-frequency
     weighting (every occurrence counts) — on short/small-vocab corpora,
     distinct-token SimHash degenerates (random pairs collide);

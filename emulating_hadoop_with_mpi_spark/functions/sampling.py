@@ -380,7 +380,7 @@ def ranged_running_total(
        ``group_cols`` (a single partition of num_ranges rows without
        groups — fixed-size, not data-scale);
     4. total = range offset + in-range running total via a broadcast
-       join.
+       join, null-safe on ``group_cols`` (a NULL group is one group).
 
     Rows with equal order keys share a range id by construction (range
     id = #boundaries strictly below the key), and ``tie_col`` must be
@@ -448,13 +448,18 @@ def ranged_running_total(
     w_rng = Window.partitionBy(*(g or [F.lit(1)])).orderBy("__rng").rowsBetween(
         Window.unboundedPreceding, -1
     )
+    # joined null-safely on renamed keys: a NULL group is one group, as in
+    # the windows and the range totals (an equi-join would drop its rows)
+    keys = {k: f"__k{i}" for i, k in enumerate([*g, "__rng"])}
     offsets = range_totals.select(
-        *g, "__rng", F.coalesce(F.sum("__rt").over(w_rng), F.lit(0)).alias("__off")
+        *[F.col(k).alias(r) for k, r in keys.items()],
+        F.coalesce(F.sum("__rt").over(w_rng), F.lit(0)).alias("__off"),
     )
+    on = [F.col(k).eqNullSafe(F.col(r)) for k, r in keys.items()]
     return (
-        local.join(F.broadcast(offsets), [*g, "__rng"])
+        local.join(F.broadcast(offsets), on)
         .withColumn(out_col, (F.col("__off") + F.col("__cum_in")).cast("long"))
-        .drop("__ord", "__val", "__rng", "__cum_in", "__off")
+        .drop("__ord", "__val", "__rng", "__cum_in", "__off", *keys.values())
     )
 
 

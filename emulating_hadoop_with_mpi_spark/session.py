@@ -14,6 +14,17 @@ One place to encode the session defaults the engine relies on:
   long — and naive-µs TIMESTAMP_NTZ scans alike — to a UTC ``timestamp``
   (``sources/tables.py:_normalize_ts``), so downstream code is agnostic to
   the writer's choice.
+- Python workers on ``local`` masters start from ``worker_daemon``, not
+  ``pyspark.daemon``.  Spark puts ``pyspark.zip``, the py4j zip and the
+  spark-core jar on every worker's path, and PySpark calls
+  ``importlib.invalidate_caches()`` before every task; on Python 3.11/3.12
+  each ``zipimporter`` then re-reads its whole archive directory, 120–230 ms
+  per task.  ``worker_daemon`` drops those archives when the same PySpark
+  resolves from a directory, so the archive metadata is read once per worker.
+  ``spark.executorEnv.PYTHONPATH`` carries the package's parent directory so
+  the module resolves from any cwd.  Other masters keep Spark's daemon:
+  a cluster's executors need not have this package.  ``extra_conf``
+  overrides both keys.
 
 Tests and bench run on ``local[N]``; on a real cluster the same builder is
 used with master/deploy settings supplied by spark-submit.
@@ -37,6 +48,17 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
     if phys_bytes is None:
         phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     return f"{min(phys_bytes // 2 >> 20, DRIVER_MEMORY_CAP_MB)}m"
+
+
+def worker_conf(master: str) -> dict[str, str]:
+    """The Python-worker settings for ``master``: start workers from
+    ``worker_daemon`` on ``local`` masters, keep Spark's daemon elsewhere."""
+    if not master.startswith("local"):
+        return {}
+    return {
+        "spark.python.daemon.module": "emulating_hadoop_with_mpi_spark.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    }
 
 
 def get_spark(
@@ -73,9 +95,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**worker_conf(master), **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

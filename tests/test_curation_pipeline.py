@@ -113,6 +113,22 @@ def test_grouped_pack_equals_per_group_pack(spark, sf_dir):
         assert got[g] == solo, f"group {g}"
 
 
+def test_grouped_pack_keeps_null_group(spark):
+    """A NULL group value is one group, packed like any other: none of its
+    documents is lost at the prefix sum's offset join."""
+    from emulating_hadoop_with_mpi_spark.functions.text import pack_sequences
+
+    docs = spark.createDataFrame(
+        [(1, "a b", "x"), (2, "c d e", None), (3, "f", "x"), (4, "g h", None)],
+        "doc_id long, text string, grp string",
+    )
+    rows = pack_sequences(docs, budget=4, group_col="grp").collect()
+    assert len(rows) == 4
+    got = {(r.grp, r.doc_id, r.bin_id, r.bin_fill) for r in rows}
+    # per group: running totals x 2, 3 and NULL 3, 5 → bins (cum - 1) div 4
+    assert got == {("x", 1, 0, 2), ("x", 3, 0, 3), (None, 2, 0, 3), (None, 4, 1, 2)}
+
+
 def test_curated_bins_are_split_pure(spark, sf_dir):
     cur = curate_corpus(load_table(spark, sf_dir, "documents"))
     impure = (

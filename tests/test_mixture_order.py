@@ -276,7 +276,7 @@ from hypothesis import strategies as st
         st.tuples(
             st.integers(min_value=-(2**31), max_value=2**31),  # order key w/ ties
             st.integers(min_value=0, max_value=1000),  # value
-            st.integers(min_value=0, max_value=2),  # group
+            st.sampled_from([None, 0, 1, 2]),  # group; NULL is one group
         ),
         min_size=1,
         max_size=60,
@@ -286,12 +286,14 @@ from hypothesis import strategies as st
 # a one-row group (g=0) next to a multi-row one, with and without ranges
 @example(rows=[(5, 3, 0), (5, 2, 1), (1, 4, 1), (9, 1, 1)], num_ranges=1)
 @example(rows=[(5, 3, 0), (5, 2, 1), (1, 4, 1), (9, 1, 1)], num_ranges=3)
+# two NULL-group rows in different ranges: the offset join is null-safe
+@example(rows=[(5, 3, None), (5, 2, 1), (1, 4, None), (9, 1, 1)], num_ranges=3)
 def test_ranged_running_total_property(spark, rows, num_ranges):
     """Distributed prefix sum == the sequential formulation for ANY order
     keys (duplicates included — the tie-on-a-range-boundary case) and any
     range count, on adversarial tiny frames — over the whole frame, and
     with ``group_cols`` against one single-window sum per group (the
-    bounds stay global, so ranges straddle groups)."""
+    bounds stay global, so ranges straddle groups; NULL is one group)."""
     from pyspark.sql import Window
 
     data = [(i, o, v, g) for i, (o, v, g) in enumerate(rows)]
