@@ -81,7 +81,7 @@ HAMMING_MAX = 9
 SIMHASH_BLOCKS = [(0, 13), (13, 13), (26, 13), (39, 13), (52, 12)]  # (offset, width)
 # 120-bit scale variant (simhash120_neardup_pairs): same md5 digests carry
 # 60 usable bits per half, so the SAME token pass yields a 120-bit sketch
-# held as four 30-bit words.  At the SAME absolute Hamming ≤ 9 contract the
+# held as two 60-bit words.  At the SAME absolute Hamming ≤ 9 contract the
 # pigeonhole blocks widen from 13 to 24 bits — random block-collision
 # probability drops 2^11 (~2000×), which converts q74's top-decade
 # collision stream (~7.2B rows at 500k docs, the measured dominant cost)
@@ -97,9 +97,12 @@ SIMHASH_BLOCKS = [(0, 13), (13, 13), (26, 13), (39, 13), (52, 12)]  # (offset, w
 # DuckDB oracle's lo120/hi120 use.  vs the earlier four 30-bit words:
 # every shuffle row through the pair join carries 2 longs instead of 4
 # and Hamming costs 2 xor+popcounts instead of 4 (sf10 A/B: ~30% off
-# the whole pass together with the lane-packed aggregation below).
-SIMHASH120_WORD_BITS = 60
-SIMHASH120_WORDS = ("w0", "w1")
+# the whole pass together with the lane-packed aggregation below).  The
+# 64-bit sketch is two 32-bit halves: a single int64 sketch flips sign at
+# bit 63, which engines shift and compare differently.  A layout is (word
+# columns, bits per word); block extraction and Hamming read it.
+SIMHASH64_LAYOUT = (("sim_lo", "sim_hi"), 32)
+SIMHASH120_LAYOUT = (("w0", "w1"), 60)
 SIMHASH120_BLOCKS = [(0, 24), (24, 24), (48, 24), (72, 24), (96, 24)]
 # SWAR lanes for the sign-sum aggregation (round 10): the per-bit sums
 # are accumulated three-to-a-long in 20-bit lanes (value per token =
@@ -1060,68 +1063,16 @@ def q79_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, sim_lo, sim_hi) — 64-bit SimHash over token hashes, held
-    as two 32-bit halves because a single int64 sketch flips sign at bit
-    63, and engines shift and compare that differently; the halves keep
-    the bit math engine-portable.  Bit i of the sketch is the sign of
-    Σ_token_occurrences (±1 from bit i of the token hash).  Term-frequency
-    weighting (every occurrence counts) — on short/small-vocab corpora,
-    distinct-token SimHash degenerates (random pairs collide);
-    tf-weighting keeps planted near-dups ≤9 bits apart while random pairs
-    sit at ~18.
-
-    Token hash = md5 (bits 0-31 of the sketch draw from hex chars 1-15,
-    bits 32-63 from chars 16-30).  md5 — not xxhash64 — because both Spark
-    and DuckDB compute the identical digest, which is what lets q74's
-    whole pair set be driver-oracle-checked; the ±1 signs are the same in
-    both engines, so the sketches are too."""
-    md5 = F.md5(F.col("tok"))
-    toks = docs.select("doc_id", F.explode(tokens_col()).alias("tok")).select(
-        "doc_id",
-        F.conv(F.substring(md5, 1, 15), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(md5, 16, 15), 16, 10).cast("long").alias("h2"),
-    )
-    # Per-bit sign sum Σ±1 == 2·Σbit - n_tok, so aggregate the raw bit
-    # sums (shift+mask only, no conditional per bit) plus one count; the
-    # sign test "Σ±1 > 0" becomes "2·Σbit > n_tok" in the projection.
-    bit_sums = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tok"),
-        *[
-            F.sum(F.shiftright(F.col(h), i).bitwiseAND(F.lit(1))).alias(f"{name}{i}")
-            for name, h in (("lo", "h1"), ("hi", "h2"))
-            for i in range(32)
-        ],
-    )
-    halves = []
-    for name in ("lo", "hi"):
-        acc = None
-        for i in range(32):
-            bit = (
-                F.when(F.col(f"{name}{i}") * 2 > F.col("n_tok"), F.lit(1).cast("long"))
-                .otherwise(F.lit(0).cast("long"))
-            )
-            term = F.shiftleft(bit, i)
-            acc = term if acc is None else acc.bitwiseOR(term)
-        halves.append(acc.alias(f"sim_{name}"))
-    return bit_sums.select("doc_id", *halves)
-
-
-def simhash_hamming(prefix_a: str = "a.", prefix_b: str = "b.") -> Column:
-    """Exact Hamming distance between two (sim_lo, sim_hi) sketches."""
-    return (
-        F.bit_count(F.col(f"{prefix_a}sim_lo").bitwiseXOR(F.col(f"{prefix_b}sim_lo")))
-        + F.bit_count(F.col(f"{prefix_a}sim_hi").bitwiseXOR(F.col(f"{prefix_b}sim_hi")))
-    ).cast("int")
-
-
 def simhash120_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, w0, w1) — 120-bit SimHash from the SAME md5 token digests
-    as ``simhash_df`` (each 15-hex-char half carries 60 bits; the 64-bit
-    sketch uses only 32 of each).  Two 60-bit words: w0 = flat bits 0-59
-    from h1, w1 = flat bits 60-119 from h2 — the oracle's lo120/hi120
-    layout.  Same tf-weighted sign-sum construction, same
-    engine-portable integer math.
+    """(doc_id, w0, w1) — 120-bit SimHash over md5 token digests.  Each
+    15-hex-char half of a token's md5 carries 60 bits: w0 = flat bits
+    0-59 from half 1, w1 = flat bits 60-119 from half 2 — the oracle's
+    lo120/hi120 layout; ``simhash64_from_120`` keeps 32 bits of each.
+    Bit i is the sign of Σ_token_occurrences (±1 from bit i of the token
+    hash): tf-weighted, because distinct-token SimHash degenerates on
+    short/small-vocab corpora.  md5, not xxhash64, because Spark and
+    DuckDB compute the identical digest, so the driver oracle checks
+    q74's whole pair set.
 
     The per-bit sums are SWAR-packed (see SIMHASH_LANE_BITS): each long
     aggregate accumulates three bit positions in 20-bit lanes.  Exact
@@ -1134,11 +1085,12 @@ def simhash120_df(docs: DataFrame) -> DataFrame:
         F.conv(F.substring(md5, 1, 15), 16, 10).cast("long").alias("h1"),
         F.conv(F.substring(md5, 16, 15), 16, 10).cast("long").alias("h2"),
     )
+    words, word_bits = SIMHASH120_LAYOUT
     aggs = [F.count(F.lit(1)).alias("n_tok")]
-    for w, h in (("w0", "h1"), ("w1", "h2")):
-        for j in range(0, SIMHASH120_WORD_BITS, SIMHASH_LANES):
+    for w, h in zip(words, ("h1", "h2")):
+        for j in range(0, word_bits, SIMHASH_LANES):
             lanes = None
-            for k in range(min(SIMHASH_LANES, SIMHASH120_WORD_BITS - j)):
+            for k in range(min(SIMHASH_LANES, word_bits - j)):
                 t = F.shiftright(F.col(h), j + k).bitwiseAND(F.lit(1))
                 if k:
                     t = F.shiftleft(t, SIMHASH_LANE_BITS * k)
@@ -1161,11 +1113,11 @@ def simhash120_df(docs: DataFrame) -> DataFrame:
         n_guard.alias("n_tok"),
         *[c for c in bit_sums.columns if c not in ("doc_id", "n_tok")],
     )
-    words = []
-    for w in ("w0", "w1"):
+    sketch = []
+    for w in words:
         acc = None
-        for j in range(0, SIMHASH120_WORD_BITS, SIMHASH_LANES):
-            for k in range(min(SIMHASH_LANES, SIMHASH120_WORD_BITS - j)):
+        for j in range(0, word_bits, SIMHASH_LANES):
+            for k in range(min(SIMHASH_LANES, word_bits - j)):
                 c = F.shiftrightunsigned(
                     F.col(f"{w}_g{j}"), SIMHASH_LANE_BITS * k
                 ).bitwiseAND(F.lit(SIMHASH_TOKEN_CAP - 1))
@@ -1174,13 +1126,14 @@ def simhash120_df(docs: DataFrame) -> DataFrame:
                 )
                 term = F.shiftleft(bit, j + k)
                 acc = term if acc is None else acc.bitwiseOR(term)
-        words.append(acc.alias(w))
-    return guarded.select("doc_id", *words)
+        sketch.append(acc.alias(w))
+    return guarded.select("doc_id", *sketch)
 
 
-def _block_value_words(off: int, width: int, words=SIMHASH120_WORDS, word_bits: int = SIMHASH120_WORD_BITS) -> Column:
-    """Bits [off, off+width) of a sketch held as fixed-width words;
-    blocks may straddle word boundaries."""
+def _block_value(off: int, width: int, layout) -> Column:
+    """Bits [off, off+width) of a sketch held in ``layout``; blocks may
+    straddle word boundaries."""
+    words, word_bits = layout
     parts = []
     placed = 0
     while width > 0:
@@ -1197,15 +1150,16 @@ def _block_value_words(off: int, width: int, words=SIMHASH120_WORDS, word_bits: 
     return acc
 
 
-def simhash120_hamming(prefix_a: str = "a.", prefix_b: str = "b.") -> Column:
+def simhash_hamming(layout, prefix_a: str = "a.", prefix_b: str = "b.") -> Column:
+    """Exact Hamming distance between two sketches held in ``layout``."""
     acc = None
-    for w in SIMHASH120_WORDS:
+    for w in layout[0]:
         t = F.bit_count(F.col(f"{prefix_a}{w}").bitwiseXOR(F.col(f"{prefix_b}{w}")))
         acc = t if acc is None else acc + t
     return acc.cast("int")
 
 
-def _pigeonhole_pairs(sims: DataFrame, blocks, block_value, hamming) -> DataFrame:
+def _pigeonhole_pairs(sims: DataFrame, blocks, layout) -> DataFrame:
     """The shared candidate-generation + verify join for both SimHash
     widths: probe side = exact (block, value) plus every one-bit flip
     (complete for Hamming ≤ 9 by pigeonhole over ≥5 blocks), build side =
@@ -1221,13 +1175,12 @@ def _pigeonhole_pairs(sims: DataFrame, blocks, block_value, hamming) -> DataFram
     measured dominant stage at the sf10 decade (its cost is per-ROW, not
     per-byte — slimming rows alone moved nothing), so the explode emits
     the fewest, flattest rows that keep candidate generation complete."""
-    sketch_cols = [c for c in sims.columns if c != "doc_id"]
     shift = max(w for _, w in blocks)
 
     def exploded(flips: bool) -> DataFrame:
         ks = []
         for bi, (off, width) in enumerate(blocks):
-            v = block_value(off, width)
+            v = _block_value(off, width, layout)
             base = F.lit(bi << shift)
             ks.append(base.bitwiseOR(v))
             if flips:
@@ -1235,7 +1188,7 @@ def _pigeonhole_pairs(sims: DataFrame, blocks, block_value, hamming) -> DataFram
                     base.bitwiseOR(v.bitwiseXOR(F.lit(1 << j)))
                     for j in range(width)
                 )
-        return sims.select("doc_id", *sketch_cols, F.explode(F.array(*ks)).alias("k"))
+        return sims.select("doc_id", *layout[0], F.explode(F.array(*ks)).alias("k"))
 
     a = exploded(True).alias("a")
     b = exploded(False).alias("b")
@@ -1247,7 +1200,7 @@ def _pigeonhole_pairs(sims: DataFrame, blocks, block_value, hamming) -> DataFram
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            hamming().alias("hamming"),
+            simhash_hamming(layout).alias("hamming"),
         )
         .filter(F.col("hamming") <= HAMMING_MAX)
         .distinct()
@@ -1259,9 +1212,10 @@ def simhash64_from_120(sims120: DataFrame) -> DataFrame:
     120-bit word frame, no second token pass.  Valid because both widths
     take bit i of the sketch half from the SAME per-bit sign sum over
     md5-half bit i: sim_lo = flat bits 0-31 = w0's low 32 bits, sim_hi =
-    flat bits 60-91 = w1's low 32 bits.  Pinned equal to ``simhash_df``
-    in tests/test_pipeline_ops.py — this is what lets q74 serve both
-    method branches from ONE tokenize+md5+sign-sum aggregation."""
+    flat bits 60-91 = w1's low 32 bits.  Pinned equal to a direct 64-bit
+    sign-sum (``simhash_df`` in tests/reference_forms.py) by
+    tests/test_pipeline_ops.py — this is what lets q74 serve both method
+    branches from ONE tokenize+md5+sign-sum aggregation."""
     mask = F.lit((1 << 32) - 1)
     return sims120.select(
         "doc_id",
@@ -1286,9 +1240,9 @@ def simhash120_neardup_pairs(docs: DataFrame) -> DataFrame:
     callers issuing repeated passes should spark.catalog.clearCache()
     between them, as the bench does per entry."""
     sims = simhash120_df(docs).persist()
-    return _pigeonhole_pairs(
-        sims, SIMHASH120_BLOCKS, _block_value_words, simhash120_hamming
-    ).orderBy("doc_a", "doc_b")
+    return _pigeonhole_pairs(sims, SIMHASH120_BLOCKS, SIMHASH120_LAYOUT).orderBy(
+        "doc_a", "doc_b"
+    )
 
 
 # The full SimHash pipeline, re-derived in DuckDB: md5 token hashes →
@@ -1379,22 +1333,6 @@ SIM64_MAX_DOCS = 150_000
 SIM64_MAX_BYTES = 32 * 1024 * 1024
 
 
-def _block_value(off: int, width: int) -> Column:
-    """Bits [off, off+width) of the 64-bit sketch held as sim_lo (bits
-    0-31) / sim_hi (bits 32-63); blocks may straddle the half boundary."""
-    end = off + width
-    if end <= 32:
-        return F.shiftrightunsigned(F.col("sim_lo"), off).bitwiseAND(F.lit((1 << width) - 1))
-    if off >= 32:
-        return F.shiftrightunsigned(F.col("sim_hi"), off - 32).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-    lo_bits = 32 - off
-    lo_part = F.shiftrightunsigned(F.col("sim_lo"), off).bitwiseAND(F.lit((1 << lo_bits) - 1))
-    hi_part = F.col("sim_hi").bitwiseAND(F.lit((1 << (width - lo_bits)) - 1))
-    return lo_part.bitwiseOR(F.shiftleft(hi_part, lo_bits))
-
-
 @query("q74_simhash_neardup", oracle=_SIMHASH_ORACLE)
 def q74_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, method-tagged union of BOTH sketch widths
@@ -1462,7 +1400,7 @@ def q74_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims64 = simhash64_from_120(sims120)
     # Join shape, hinting rationale, and the filter-before-distinct
     # ordering live in _pigeonhole_pairs (shared by both widths).
-    p64 = _pigeonhole_pairs(sims64, SIMHASH_BLOCKS, _block_value, simhash_hamming)
+    p64 = _pigeonhole_pairs(sims64, SIMHASH_BLOCKS, SIMHASH64_LAYOUT)
     if sim64_gated:
         warnings.warn(
             f"q74: corpus is above the sim64 scale boundary "
@@ -1472,9 +1410,7 @@ def q74_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             stacklevel=2,
         )
         p64 = p64.limit(0)
-    p120 = _pigeonhole_pairs(
-        sims120, SIMHASH120_BLOCKS, _block_value_words, simhash120_hamming
-    )
+    p120 = _pigeonhole_pairs(sims120, SIMHASH120_BLOCKS, SIMHASH120_LAYOUT)
     tag = lambda df, m: df.select(  # noqa: E731
         F.lit(m).alias("method"), "doc_a", "doc_b", "hamming"
     )

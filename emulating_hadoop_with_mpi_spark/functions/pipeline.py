@@ -303,7 +303,7 @@ def curate_frames(
     - optional data-mixture resampling (``mixture``, round 13): thin
       every stratum of ``mixture_col`` to the integer target proportions
       in ``mixture`` (e.g. ``{"en": 2, "zh": 1}`` = 2:1 by characters of
-      surviving text) via functions/sampling.mixture_rates — rates are
+      surviving text) via functions/sampling.mixture_rate_values — rates are
       derived AFTER dedup/selection so the shipped corpus hits the
       proportions exactly in expectation; strata absent from ``mixture``
       are dropped; deterministic in (doc_id, ``mixture_salt``);
@@ -741,12 +741,14 @@ _PII_TAG_COLS = {"<EMAIL>": "n_email", "<IP>": "n_ip", "<CARD>": "n_card",
 
 
 def pii_count_cols(text_col: str = "text", patterns=None) -> list:
-    """The count Columns of the sequential-masking audit chain — exposed
-    separately from ``pii_counts`` so a host query (q80) can embed the
-    counts in an existing projection instead of paying a join.  Each
-    count runs on the text as already masked by the PREVIOUS patterns
-    (same sequential order as redact_pii), so a span counted as one type
-    is never recounted by a later pattern.
+    """Per-doc PII hit counts BEFORE redaction (n_email, n_ip, n_card,
+    n_ssn, n_phone), as Columns of the sequential-masking audit chain, so
+    a host query (q80) embeds them in its projection; ``patterns``
+    restricts the chain (PII_PATTERNS_RE2 is the oracle-checkable
+    subset) and the columns follow it.  Each count runs on the text as
+    already masked by the PREVIOUS patterns (same sequential order as
+    redact_pii), so a span counted as one type is never recounted by a
+    later pattern.
 
     Note the chain is quadratic in pattern count (count column i embeds
     the i-1 previous regexp_replace steps) — harmless at 5 patterns and
@@ -761,15 +763,3 @@ def pii_count_cols(text_col: str = "text", patterns=None) -> list:
         )
         cur = F.regexp_replace(cur, pat, tag)
     return out_cols
-
-
-def pii_counts(
-    docs: DataFrame, text_col: str = "text", patterns=None
-) -> DataFrame:
-    """(doc_id, n_email, n_ip, n_card, n_ssn, n_phone): per-doc PII hit
-    counts BEFORE redaction — the audit/reporting side of redact_pii
-    (gate on it, sample flagged docs, or track scrub coverage over
-    time).  ``patterns`` restricts the chain (e.g. PII_PATTERNS_RE2 for
-    the oracle-checkable subset); output columns follow the given
-    chain."""
-    return docs.select("doc_id", *pii_count_cols(text_col, patterns))

@@ -2,12 +2,14 @@
 training-data pipeline (train/val/test carving, per-stratum downsampling).
 
 Not in the reference (its datagen is the nearest analogue,
-``filecreation.c:8-28``); added for the LLM-pipeline surface.  Both ops are
-map-only JVM expressions: no shuffle, no driver state, stable under
-repartitioning — the properties that make a split REPRODUCIBLE on 100 TB
-across cluster sizes and re-runs (a row's assignment depends only on its
-key, never on partition layout or task order, unlike ``rand()``-based
-splitting which changes with the partitioning).
+``filecreation.c:8-28``); added for the LLM-pipeline surface.  The split
+and keep columns (``split_column``, ``stratified_keep``,
+``mixture_keep_case``) are map-only JVM expressions: no shuffle, no driver
+state, stable under repartitioning — the properties that make a split
+REPRODUCIBLE on 100 TB across cluster sizes and re-runs (a row's
+assignment depends only on its key, never on partition layout or task
+order, unlike ``rand()``-based splitting which changes with the
+partitioning).
 """
 
 from __future__ import annotations
@@ -89,28 +91,6 @@ def split_oracle_case(key_sql: str, splits: dict[str, float], salt: str = "") ->
     return " ".join(parts)
 
 
-def hash_split(
-    df: DataFrame, key_col: str, splits: dict[str, float], salt: str = ""
-) -> DataFrame:
-    """Tag every row with its deterministic split label (see
-    split_column).  Rows with equal keys always land in the same split —
-    the leakage guard a random split lacks (near-duplicate documents
-    sharing a key can never straddle train/test)."""
-    return df.withColumn("split", split_column(key_col, splits, salt=salt))
-
-
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling via sampleBy — rebalancing a corpus
-    (e.g. capping the dominant language) in one map-only pass.  Seeded →
-    reproducible for a fixed partitioning; for layout-independent
-    selection use ``stratified_keep`` instead (the tradeoff: sampleBy
-    gives exact per-row independence, keyed hashing gives
-    layout-independence and an engine-portable audit trail)."""
-    return df.sampleBy(strata_col, fractions=fractions, seed=seed)
-
-
 def stratified_keep(
     key_col: str | Column,
     strata_col: str | Column,
@@ -126,9 +106,9 @@ def stratified_keep(
     (q82 registers one as ``sample_keep``; the DuckDB oracle re-derives
     it per row).  Strata absent from ``fractions`` keep ``default``
     mass (1.0 = keep all).  The per-stratum keep rate is exact to a
-    basis point in expectation; unlike sampleBy the draws for equal
-    keys are identical — the same leakage-coupling property the hash
-    split provides."""
+    basis point in expectation; unlike Spark's ``sampleBy`` the draws for
+    equal keys are identical — the same leakage-coupling property
+    :func:`split_column` provides."""
     for name, frac in fractions.items():
         if not 0.0 <= frac <= 1.0:
             raise ValueError(f"fraction for {name!r} must be in [0, 1] (got {frac})")
@@ -229,45 +209,12 @@ def mixture_keep_case(
     return (split_bucket(key_col, salt=salt) < thr).alias("mix_keep")
 
 
-def mixture_rates(
-    df: DataFrame,
-    strata_col: str,
-    weight_col: str,
-    weights: dict[str, int],
-    strict: bool = False,
-) -> DataFrame:
-    """Frame view of :func:`mixture_rate_values` — (strata_col,
-    mix_rate_bp) rows for callers that prefer a broadcast join-back over
-    plan literals.  Eager (the rates are computed driver-side; see
-    mixture_rate_values for the math, determinism, and strictness
-    contract).  Defaults to ``strict=False`` for backward compatibility:
-    absent strata are ignored (no row → the consumer's COALESCE(…, 0))."""
-    rates = mixture_rate_values(df, strata_col, weight_col, weights, strict=strict)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(k, int(v)) for k, v in rates.items()],
-        f"{strata_col} string, mix_rate_bp long",
-    )
-
-
-def mixture_keep(key_col: str | Column, rate_bp_col: str | Column, salt: str = "") -> Column:
-    """The keep decision for :func:`mixture_rates` output after the
-    broadcast join-back: a row survives iff its md5 bucket falls under
-    its stratum's derived rate.  Deterministic in (key, salt) like every
-    selection op in this module; strata with no rate row (absent from
-    the mixture) are dropped via the COALESCE-to-0."""
-    rate = F.col(rate_bp_col) if isinstance(rate_bp_col, str) else rate_bp_col
-    return (split_bucket(key_col, salt=salt) < F.coalesce(rate, F.lit(0))).alias(
-        "mix_keep"
-    )
-
-
 def mixture_oracle_ctes(
     base_sql: str,
     weights: dict[str, int],
     prefix: str = "mix",
 ) -> str:
-    """DuckDB twin of :func:`mixture_rates` as chained CTEs.  ``base_sql``
+    """DuckDB twin of :func:`mixture_rate_values` as chained CTEs.  ``base_sql``
     must be a relation producing (stratum VARCHAR, w BIGINT) rows — one
     per input row of the Spark side.  Emits ``{prefix}_rate(stratum,
     rate_bp)``; embed with a LEFT JOIN + COALESCE(rate_bp, 0) and the

@@ -40,7 +40,7 @@ Q82_SAMPLE_FRACTIONS = {"en": 0.5}
 # the corpus to 2:1:1:1:1 en:es:de:fr:zh BY CHARACTERS — the data-mixing
 # op (Pile/DoReMi-style domain reweighting) whose integer-exact keep
 # rates the DuckDB oracle re-derives from the same per-language masses
-# (functions/sampling.mixture_rates).  Mass = the documents table's
+# (functions/sampling.mixture_rate_values).  Mass = the documents table's
 # n_chars column, NOT a tokenize: the rates aggregate reads two tiny
 # columns, so q82's corpus-text scan count stays at the pinned 4 and the
 # 100 TB mixing pass never touches the text bytes.
@@ -189,7 +189,7 @@ def q80_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized.)
 
     Since round 10 this also carries the PII audit section (VERDICT r9
-    item 4): per-doc n_email / n_card / n_ssn from pii_counts'
+    item 4): per-doc n_email / n_card / n_ssn from pii_count_cols'
     sequential-masking chain, restricted to the RE2-expressible patterns
     so DuckDB can hash-check them (the IPv4/phone patterns need
     lookarounds RE2 lacks — property-test-only by design).  The counts
@@ -686,7 +686,7 @@ from emulating_hadoop_with_mpi_spark.functions.lm import lm_oracle_ctes as _lm_c
 _LM_CTES = _lm_ctes()
 
 # Data-mixture rate CTEs (q82's mix_keep section — functions/sampling.py
-# mixture_rates' integer arithmetic re-derived over the same per-language
+# mixture_rate_values' integer arithmetic re-derived over the same per-language
 # n_chars masses the Spark side aggregates).
 _MIX_CTES = _mixture_oracle_ctes(
     "SELECT lang AS stratum, CAST(n_chars AS BIGINT) AS w FROM documents",
@@ -780,7 +780,7 @@ def q82_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-checked surface even though the iterative trainer cannot.
 
     ``mix_keep`` (round 13 continuation) is the seventh: data-mixture
-    resampling (functions/sampling.mixture_rates — the Pile/DoReMi-style
+    resampling (functions/sampling.mixture_rate_values — the Pile/DoReMi-style
     "reweight domains to target proportions" op).  The per-language keep
     rates are DERIVED FROM THE DATA (integer-exact arithmetic over
     per-language character masses — the pruned n_chars column, zero text

@@ -81,59 +81,6 @@ def q23_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def asof_join_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alternative as-of join via cogroup + pd.merge_asof: purchases and
-    clicks are cogrouped per user, each group pair merged as-of in pandas.
-    Same output contract as q23 (tested equal) — the Pandas escape hatch
-    for when the union-window form can't express the semantics (e.g.
-    nearest-by-value tolerance).  Arrow-batched; shuffle is one hash
-    partition per side on user_id."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.unix_micros("ts").alias("t_us")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), F.unix_micros("ts").alias("t_us")
-    )
-
-    def merge(left, right):
-        import pandas as pd
-
-        left = left.sort_values(["t_us", "purchase_id"])
-        right = right.sort_values(["t_us", "click_id"])
-        if right.empty:
-            out = left.assign(click_id=pd.array([None] * len(left), dtype="Int64"),
-                              click_ts_us=pd.array([None] * len(left), dtype="Int64"))
-        else:
-            # merge_asof keeps the LAST right row with t_us <= left.t_us;
-            # ties on t_us resolve to the later (max click_id) row because
-            # right is sorted by (t_us, click_id)
-            out = pd.merge_asof(
-                left,
-                right.rename(columns={"t_us": "click_ts_us"}),
-                left_on="t_us",
-                right_on="click_ts_us",
-                by="user_id",
-                direction="backward",
-            )
-        out = out.rename(columns={"t_us": "purchase_ts_us"})
-        out["gap_s"] = (out["purchase_ts_us"] - out["click_ts_us"]) // 1_000_000
-        return out[["purchase_id", "user_id", "purchase_ts_us", "click_id", "click_ts_us", "gap_s"]]
-
-    return (
-        purchases.groupBy("user_id")
-        .cogroup(clicks.groupBy("user_id"))
-        .applyInPandas(
-            merge,
-            schema=(
-                "purchase_id long, user_id long, purchase_ts_us long, "
-                "click_id long, click_ts_us long, gap_s long"
-            ),
-        )
-        .orderBy("purchase_id")
-    )
-
-
 # q24_grouping_sets was merged into q19_rollup_sets (operators/relational.py)
 # as its 'sets' branch — driver 50-query cap, NOTES.md round 3.
 

@@ -29,23 +29,6 @@ from pyspark.sql import functions as F
 BUCKET_COL = "__range_bucket"
 
 
-def range_join_naive(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_col: str,
-    start_col: str,
-    end_col: str,
-) -> DataFrame:
-    """The semantics baseline: theta join on half-open containment
-    ``start <= p < end``.  Plans as a nested-loop/cartesian — correct, and
-    the thing the bucketized rewrite must equal (pinned in
-    tests/test_rangejoin.py).  Only for test-scale inputs."""
-    return points.join(
-        intervals,
-        (F.col(point_col) >= F.col(start_col)) & (F.col(point_col) < F.col(end_col)),
-    )
-
-
 def range_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -57,8 +40,8 @@ def range_join(
     """Bucketized point-in-interval join (see module docstring).  Columns
     must be integer-typed (epoch seconds/ns, ids...); intervals are
     half-open ``[start, end)`` and empty intervals (end <= start) match
-    nothing.  Output = every points-row × containing intervals-row, same
-    contract as range_join_naive."""
+    nothing.  Output = every points-row × containing intervals-row, the
+    theta join's contract (pinned against it in tests/test_rangejoin.py)."""
     if bucket_width <= 0:
         raise ValueError(f"bucket_width must be positive (got {bucket_width})")
     p = points.withColumn(

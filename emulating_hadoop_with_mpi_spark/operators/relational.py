@@ -84,30 +84,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate + projection: filters push down to the parquet scan
-    (PushedFilters), projection prunes the read schema to 6 of 11 columns.
-
-    Unregistered from the driver registry in round 3 to fit the driver's
-    50-query cap (NOTES.md): its capabilities remain driver-evidenced by
-    q06 (pushed filters on lineitem) and q15 (projection breadth), and its
-    pushdown/pruning plan shape stays pinned by
-    tests/test_plans.py::test_q02_filter_pushdown_and_column_pruning,
-    which calls this function directly."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_discount") > 0.05)
-        & (F.col("l_quantity") < 30)
-    ).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.year("l_shipdate").cast("int").alias("ship_year"),
-        F.round(_revenue(), 2).cast("double").alias("revenue"),
-    )
-
-
 @query(
     "q03_top_revenue_orders",
     oracle=f"""

@@ -12,6 +12,10 @@ two real tools:
   holding >> a partition's worth): replicate the small side R ways, spread
   the big side's hot keys across R sub-keys, join on (key, salt).
 
+Aggregations need no salting: HashAggregate's map-side partial sends a hot
+key of a decomposable aggregate (sum/count/min/max) to its final task as
+at most one row per map partition (pinned in tests/test_skew.py).
+
 ``salted_join`` is semantics-preserving for inner equi-joins — proven
 against the plain join in tests/test_skew.py on a deliberately skewed key.
 """
@@ -20,45 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    agg_exprs: dict[str, str],
-    salt: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation for heavy-hitter group keys: partial-aggregate
-    on (key, salt) — spreading a hot key over `salt` shuffle partitions —
-    then final-aggregate on the key.  Valid for the decomposable aggregates
-    named in ``agg_exprs`` ({output_col: 'sum'|'count'|'min'|'max'}).
-
-    Spark's own HashAggregate already does map-side partials; this helps
-    when a SINGLE reducer key still exceeds a partition (the reference's
-    worst case: its contiguous key ranges put entire hot rows on one rank,
-    ``program.c:378-413``).  Equality with the plain groupBy is tested in
-    tests/test_skew.py."""
-    salted = df.withColumn("__salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt)))
-    partial_exprs = []
-    final_exprs = []
-    for out, how in agg_exprs.items():
-        src = F.col(out)
-        if how == "sum":
-            partial_exprs.append(F.sum(out).alias(f"__p_{out}"))
-            final_exprs.append(F.sum(f"__p_{out}").alias(out))
-        elif how == "count":
-            partial_exprs.append(F.count(F.lit(1)).alias(f"__p_{out}"))
-            final_exprs.append(F.sum(f"__p_{out}").alias(out))
-        elif how == "min":
-            partial_exprs.append(F.min(out).alias(f"__p_{out}"))
-            final_exprs.append(F.min(f"__p_{out}").alias(out))
-        elif how == "max":
-            partial_exprs.append(F.max(out).alias(f"__p_{out}"))
-            final_exprs.append(F.max(f"__p_{out}").alias(out))
-        else:
-            raise ValueError(f"non-decomposable aggregate: {how}")
-    partial = salted.groupBy(key, "__salt").agg(*partial_exprs)
-    return partial.groupBy(key).agg(*final_exprs)
 
 
 def salted_join(

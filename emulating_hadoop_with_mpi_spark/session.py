@@ -26,8 +26,12 @@ One place to encode the session defaults the engine relies on:
   a cluster's executors need not have this package.  ``extra_conf``
   overrides both keys.
 
-Tests and bench run on ``local[N]``; on a real cluster the same builder is
-used with master/deploy settings supplied by spark-submit.
+The master: an explicit ``master`` argument wins; otherwise a process that
+``spark-submit`` (or the ``pyspark`` shell) launched keeps the master from
+its launch conf (``--master``, ``spark-defaults.conf``); a plain ``python``
+launch — tests, bench, perfbench, the CLI — gets
+``local[$SPARK_GRAFT_CPUS]``.  There is no cluster preset: executor counts,
+partition sizes and the rest of a cluster's tuning come from spark-submit.
 """
 
 from __future__ import annotations
@@ -61,6 +65,18 @@ def worker_conf(master: str) -> dict[str, str]:
     }
 
 
+def _launch_master() -> str | None:
+    """``spark.master`` from the launch conf of the JVM that started this
+    process (spark-submit sets ``PYSPARK_GATEWAY_PORT`` for it), or None
+    for a plain ``python`` launch, which has no JVM yet."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
+
+
 def get_spark(
     app_name: str = "emulating-hadoop-with-mpi-spark",
     master: str | None = None,
@@ -69,12 +85,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; under
-    spark-submit on a cluster, leave it None and let submit decide.
+    ``master=None`` keeps the master spark-submit was given and is
+    ``local[$SPARK_GRAFT_CPUS]`` (``*`` when unset) for a plain ``python``
+    launch.  The worker settings follow the master that results.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = _launch_master() or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
@@ -98,49 +114,3 @@ def get_spark(
     for k, v in {**worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def cluster_conf(
-    executors: int = 1000,
-    cores_per_executor: int = 4,
-    target_partition_mb: int = 256,
-    input_tb: float = 100.0,
-) -> dict[str, str]:
-    """Documented conf preset for the target deployment (≈1000 executors /
-    100 TB inputs) — the knobs that change between local[32] and a real
-    cluster.  Local mode ignores most of these; spark-submit applies them.
-
-    Sizing logic:
-    - shuffle partitions ≈ 2-3× total cores, floored so each partition of
-      a full-input shuffle stays ≤ ~target_partition_mb (spill threshold).
-    - maxPartitionBytes fixes scan-task granularity: 100 TB / 256 MB ≈
-      400k scan tasks — coarse enough for the scheduler, fine enough for
-      even distribution.
-    - AQE then coalesces/splits at runtime, so these are CEILINGS, not
-      exact tuning.
-    """
-    total_cores = executors * cores_per_executor
-    by_cores = 3 * total_cores
-    by_size = int(input_tb * 1024 * 1024 / target_partition_mb)
-    shuffle_partitions = max(by_cores, min(by_size, 64 * total_cores))
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores_per_executor),
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.files.maxPartitionBytes": str(target_partition_mb * 1024 * 1024),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
-            target_partition_mb * 1024 * 1024
-        ),
-        # broadcast only true dimensions; at 100 TB "small" is still 256 MB
-        "spark.sql.autoBroadcastJoinThreshold": str(256 * 1024 * 1024),
-        "spark.sql.parquet.filterPushdown": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # shuffle robustness at scale
-        "spark.shuffle.service.enabled": "true",
-        "spark.sql.adaptive.localShuffleReader.enabled": "true",
-    }

@@ -35,10 +35,6 @@ from pyspark.sql import functions as F
 
 from emulating_hadoop_with_mpi_spark.sources.tables import TABLES, load_table
 
-# tables tiled by the factor; region/nation stay fixed like TPC-H dims
-SCALING = ("customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-
 def _key_span(df: DataFrame, col: str) -> int:
     """Offset stride for a key column: next power of ten above max(key),
     so per-copy keyspaces never collide and stay human-readable."""

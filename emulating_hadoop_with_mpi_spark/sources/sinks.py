@@ -7,8 +7,8 @@ matrix render (``program.c:447-477``).  Spark's equivalents: per-task
 part-files with a commit protocol (no shared-pointer contention), and a
 pivot for the dense render.
 
-Also provides the standard columnar sinks (parquet/csv) used by any
-downstream pipeline stage.
+Also provides ``write_table``, the format-parameterized sink (parquet,
+csv, a lakehouse format) used by any downstream pipeline stage.
 """
 
 from __future__ import annotations
@@ -46,17 +46,6 @@ def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
         F.regexp_extract("value", pat, 2).cast("int").alias("k"),
         F.regexp_extract("value", pat, 3).cast("long").alias("v"),
     )
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
 
 
 def write_table(

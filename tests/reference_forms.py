@@ -1,19 +1,22 @@
-"""Bit-exact reference forms of the package's Arrow text kernels and of
-the ppjoin rank window.
+"""Bit-exact reference forms of shipped operators.
 
-Each function here is the all-Catalyst (or groupBy + join) formulation a
-shipped operator replaced; the tests compare the shipped operator against
-it row for row:
+Each function here is a formulation a shipped operator replaced, or an
+independent second implementation of the same contract; the tests
+compare the shipped operator against it row for row:
 
 - ``_quality_scores_jvm``      — text.quality_scores
 - ``_doc_bucket_counts_jvm``   — dsir.doc_bucket_counts
 - ``_doc_bigram_profile_jvm``  — lm.doc_bigram_profile
 - ``_corpus_postings_jvm``     — search.corpus_postings
 - ``_ppjoin_ranked_join``      — dedup.ppjoin_ranked
+- ``simhash_df``               — dedup.simhash64_from_120
+- ``asof_join_cogroup``        — advanced.q23_asof_join
+- ``range_join_naive``         — rangejoin.range_join
+- ``mixture_rates`` + ``mixture_keep`` — sampling.mixture_keep_case
 
-They tokenize with ``text.tokens_col`` (Spark ``lower`` + a Java ``\\s+``
-split, empties dropped), so they run entirely in the JVM and fold case
-with the JVM's own locale rules.
+The four text-kernel forms tokenize with ``text.tokens_col`` (Spark
+``lower`` + a Java ``\\s+`` split, empties dropped), so they run entirely
+in the JVM and fold case with the JVM's own locale rules.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from pyspark.sql import functions as F
 from emulating_hadoop_with_mpi_spark.functions.dedup import shingles_df
 from emulating_hadoop_with_mpi_spark.functions.dsir import DSIR_BUCKETS, doc_bucket_counts
 from emulating_hadoop_with_mpi_spark.functions.lm import doc_bigram_profile
+from emulating_hadoop_with_mpi_spark.functions.sampling import mixture_rate_values, split_bucket
 from emulating_hadoop_with_mpi_spark.functions.search import corpus_postings
 from emulating_hadoop_with_mpi_spark.functions.text import (
     ALL_STOPWORDS,
@@ -32,6 +36,7 @@ from emulating_hadoop_with_mpi_spark.functions.text import (
     tokens_col,
 )
 from emulating_hadoop_with_mpi_spark.plans.inspect import partitioned
+from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
 
 # Longest run of equal adjacent elements in a SORTED bigint array — i.e.
@@ -230,3 +235,122 @@ def kernel_pairs() -> dict:
         "lm": (doc_bigram_profile, _doc_bigram_profile_jvm),
         "postings": (corpus_postings, _corpus_postings_jvm),
     }
+
+
+def simhash_df(docs: DataFrame) -> DataFrame:
+    """(doc_id, sim_lo, sim_hi) — the 64-bit SimHash from its own token
+    pass: 32 per-bit sign sums over each md5 half (bits 0-31 of the
+    sketch draw from hex chars 1-15, bits 32-63 from chars 16-30).  The
+    package projects this sketch from the 120-bit words instead
+    (``dedup.simhash64_from_120``); the two are pinned equal."""
+    md5 = F.md5(F.col("tok"))
+    toks = docs.select("doc_id", F.explode(tokens_col()).alias("tok")).select(
+        "doc_id",
+        F.conv(F.substring(md5, 1, 15), 16, 10).cast("long").alias("h1"),
+        F.conv(F.substring(md5, 16, 15), 16, 10).cast("long").alias("h2"),
+    )
+    # Per-bit sign sum Σ±1 == 2·Σbit - n_tok, so aggregate the raw bit
+    # sums plus one count; the sign test "Σ±1 > 0" becomes "2·Σbit > n_tok".
+    bit_sums = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tok"),
+        *[
+            F.sum(F.shiftright(F.col(h), i).bitwiseAND(F.lit(1))).alias(f"{name}{i}")
+            for name, h in (("lo", "h1"), ("hi", "h2"))
+            for i in range(32)
+        ],
+    )
+    halves = []
+    for name in ("lo", "hi"):
+        acc = None
+        for i in range(32):
+            bit = (
+                F.when(F.col(f"{name}{i}") * 2 > F.col("n_tok"), F.lit(1).cast("long"))
+                .otherwise(F.lit(0).cast("long"))
+            )
+            term = F.shiftleft(bit, i)
+            acc = term if acc is None else acc.bitwiseOR(term)
+        halves.append(acc.alias(f"sim_{name}"))
+    return bit_sums.select("doc_id", *halves)
+
+
+def asof_join_cogroup(spark, sf_dir: str) -> DataFrame:
+    """q23's as-of join via cogroup + pd.merge_asof: purchases and clicks
+    are cogrouped per user, each group pair merged as-of in pandas — an
+    independent implementation of q23's union-window form."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("event_id").alias("purchase_id"), F.unix_micros("ts").alias("t_us")
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("event_id").alias("click_id"), F.unix_micros("ts").alias("t_us")
+    )
+
+    def merge(left, right):
+        import pandas as pd
+
+        left = left.sort_values(["t_us", "purchase_id"])
+        right = right.sort_values(["t_us", "click_id"])
+        if right.empty:
+            out = left.assign(click_id=pd.array([None] * len(left), dtype="Int64"),
+                              click_ts_us=pd.array([None] * len(left), dtype="Int64"))
+        else:
+            # merge_asof keeps the LAST right row with t_us <= left.t_us;
+            # ties on t_us resolve to the later (max click_id) row because
+            # right is sorted by (t_us, click_id)
+            out = pd.merge_asof(
+                left,
+                right.rename(columns={"t_us": "click_ts_us"}),
+                left_on="t_us",
+                right_on="click_ts_us",
+                by="user_id",
+                direction="backward",
+            )
+        out = out.rename(columns={"t_us": "purchase_ts_us"})
+        out["gap_s"] = (out["purchase_ts_us"] - out["click_ts_us"]) // 1_000_000
+        return out[["purchase_id", "user_id", "purchase_ts_us", "click_id", "click_ts_us", "gap_s"]]
+
+    return (
+        purchases.groupBy("user_id")
+        .cogroup(clicks.groupBy("user_id"))
+        .applyInPandas(
+            merge,
+            schema=(
+                "purchase_id long, user_id long, purchase_ts_us long, "
+                "click_id long, click_ts_us long, gap_s long"
+            ),
+        )
+        .orderBy("purchase_id")
+    )
+
+
+def range_join_naive(
+    points: DataFrame, intervals: DataFrame, point_col: str, start_col: str, end_col: str
+) -> DataFrame:
+    """The semantics baseline of ``range_join``: a theta join on half-open
+    containment ``start <= p < end``, planned as a nested loop or a
+    cartesian product."""
+    return points.join(
+        intervals,
+        (F.col(point_col) >= F.col(start_col)) & (F.col(point_col) < F.col(end_col)),
+    )
+
+
+def mixture_rates(
+    df: DataFrame, strata_col: str, weight_col: str, weights: dict[str, int]
+) -> DataFrame:
+    """(strata_col, mix_rate_bp) rows of ``mixture_rate_values(strict=False)``,
+    for the broadcast join-back form of the mixture keep decision."""
+    rates = mixture_rate_values(df, strata_col, weight_col, weights, strict=False)
+    return df.sparkSession.createDataFrame(
+        [(k, int(v)) for k, v in rates.items()],
+        f"{strata_col} string, mix_rate_bp long",
+    )
+
+
+def mixture_keep(key_col: str, rate_bp_col: str, salt: str = "") -> Column:
+    """The keep decision over :func:`mixture_rates` after the join-back:
+    a row survives iff its md5 bucket falls under its stratum's rate;
+    strata with no rate row are dropped (COALESCE to 0)."""
+    return (split_bucket(key_col, salt=salt) < F.coalesce(F.col(rate_bp_col), F.lit(0))).alias(
+        "mix_keep"
+    )

@@ -14,13 +14,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from reference_forms import mixture_keep, mixture_rates
+
 from emulating_hadoop_with_mpi_spark.functions.sampling import (
     SPLIT_DENOM,
     global_order_index,
-    mixture_keep,
     mixture_keep_case,
     mixture_rate_values,
-    mixture_rates,
     order_key,
     ranged_running_total,
     split_bucket,

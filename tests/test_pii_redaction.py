@@ -1,12 +1,12 @@
 """PII redaction (functions/pipeline.redact_pii, round 9): planted
 identifiers are masked with their type tags, ordinary prose and plain
-numbers survive untouched, and pii_counts agrees with the redaction.
+numbers survive untouched, and pii_count_cols agrees with the redaction.
 """
 
 from __future__ import annotations
 
 from emulating_hadoop_with_mpi_spark.functions.pipeline import (
-    pii_counts,
+    pii_count_cols,
     redact_pii,
 )
 
@@ -48,7 +48,7 @@ def test_redaction_leaves_prose_alone(spark):
 
 def test_pii_counts_agree_with_redaction(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    got = {r.doc_id: r for r in pii_counts(df).collect()}
+    got = {r.doc_id: r for r in df.select("doc_id", *pii_count_cols()).collect()}
     assert got[1].n_email == 2 and got[1].n_ip == 0
     assert got[2].n_ip == 2
     assert got[3].n_card == 2

@@ -63,13 +63,15 @@ def test_simhash_finds_planted_neardups(spark, sf_dir):
 
 def test_simhash64_is_projection_of_120(spark, sf_dir):
     """The q74 union's shared-pass design rests on this identity: the
-    64-bit sketch computed directly (simhash_df) equals the projection of
-    the 120-bit words (simhash64_from_120) row for row — bit i of each
-    32-bit half shares its md5-half sign-sum with word bit i."""
+    64-bit sketch computed directly (simhash_df, tests/reference_forms.py)
+    equals the projection of the 120-bit words (simhash64_from_120) row
+    for row — bit i of each 32-bit half shares its md5-half sign-sum with
+    word bit i."""
+    from reference_forms import simhash_df
+
     from emulating_hadoop_with_mpi_spark.functions.dedup import (
         simhash64_from_120,
         simhash120_df,
-        simhash_df,
     )
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
@@ -90,9 +92,10 @@ def test_simhash120_complete_vs_brute(spark, sf_dir):
 
     from emulating_hadoop_with_mpi_spark.functions.dedup import (
         HAMMING_MAX,
+        SIMHASH120_LAYOUT,
         simhash120_df,
-        simhash120_hamming,
         simhash120_neardup_pairs,
+        simhash_hamming,
     )
     from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
@@ -109,7 +112,7 @@ def test_simhash120_complete_vs_brute(spark, sf_dir):
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            simhash120_hamming().alias("hamming"),
+            simhash_hamming(SIMHASH120_LAYOUT).alias("hamming"),
         )
         .filter(F.col("hamming") <= HAMMING_MAX)
         .collect()
@@ -210,10 +213,9 @@ def test_ann_lsh_recall_on_planted_near_duplicates(spark, sf_dir):
 def test_cogroup_asof_equals_window_asof(spark, sf_dir):
     """The cogroup+merge_asof formulation returns exactly q23's rows —
     two independent implementations of the as-of join agree."""
-    from emulating_hadoop_with_mpi_spark.operators.advanced import (
-        asof_join_cogroup,
-        q23_asof_join,
-    )
+    from reference_forms import asof_join_cogroup
+
+    from emulating_hadoop_with_mpi_spark.operators.advanced import q23_asof_join
 
     window_rows = {tuple(r) for r in q23_asof_join(spark, sf_dir).collect()}
     cogroup_rows = {tuple(r) for r in asof_join_cogroup(spark, sf_dir).collect()}

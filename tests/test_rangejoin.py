@@ -5,10 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from emulating_hadoop_with_mpi_spark.operators.rangejoin import (
-    range_join,
-    range_join_naive,
-)
+from reference_forms import range_join_naive
+
+from emulating_hadoop_with_mpi_spark.operators.rangejoin import range_join
 from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
 

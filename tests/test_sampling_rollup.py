@@ -6,10 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from emulating_hadoop_with_mpi_spark.functions.sampling import (
-    hash_split,
-    stratified_sample,
-)
+from emulating_hadoop_with_mpi_spark.functions.sampling import split_column
 from emulating_hadoop_with_mpi_spark.operators.events import (
     coarsen_buckets,
     time_bucket_agg,
@@ -17,10 +14,14 @@ from emulating_hadoop_with_mpi_spark.operators.events import (
 from emulating_hadoop_with_mpi_spark.sources.tables import load_table
 
 
+def _hash_split(df, splits, salt=""):
+    return df.withColumn("split", split_column("doc_id", splits, salt=salt))
+
+
 def test_hash_split_partitions_and_determinism(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     splits = {"train": 0.8, "val": 0.1, "test": 0.1}
-    tagged = hash_split(docs, "doc_id", splits)
+    tagged = _hash_split(docs, splits)
     n = docs.count()
     by = {r["split"]: r["n"] for r in tagged.groupBy("split").agg(F.count("*").alias("n")).collect()}
     # exhaustive and disjoint: every row gets exactly one label
@@ -32,7 +33,7 @@ def test_hash_split_partitions_and_determinism(spark, sf_dir):
     a = {(r.doc_id, r.split) for r in tagged.select("doc_id", "split").collect()}
     b = {
         (r.doc_id, r.split)
-        for r in hash_split(docs.repartition(13, "lang"), "doc_id", splits)
+        for r in _hash_split(docs.repartition(13, "lang"), splits)
         .select("doc_id", "split")
         .collect()
     }
@@ -40,34 +41,16 @@ def test_hash_split_partitions_and_determinism(spark, sf_dir):
     # a different salt draws a genuinely different split
     c = {
         (r.doc_id, r.split)
-        for r in hash_split(docs, "doc_id", splits, salt="fold2")
+        for r in _hash_split(docs, splits, salt="fold2")
         .select("doc_id", "split")
         .collect()
     }
     assert a != c
 
 
-def test_hash_split_rejects_bad_fractions(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
+def test_hash_split_rejects_bad_fractions():
     with pytest.raises(ValueError):
-        hash_split(docs, "doc_id", {"train": 0.5, "test": 0.4})
-
-
-def test_stratified_sample_seeded_and_bounded(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    fractions = {"en": 0.5, "es": 1.0, "de": 1.0, "fr": 1.0}
-    s1 = {r.doc_id for r in stratified_sample(docs, "lang", fractions, seed=7).collect()}
-    s2 = {r.doc_id for r in stratified_sample(docs, "lang", fractions, seed=7).collect()}
-    assert s1 == s2, "same seed must reproduce the sample"
-    kept = stratified_sample(docs, "lang", fractions, seed=7)
-    en_total = docs.filter(F.col("lang") == "en").count()
-    en_kept = kept.filter(F.col("lang") == "en").count()
-    assert en_kept / en_total == pytest.approx(0.5, abs=0.15)
-    # fraction-1.0 strata are kept in full
-    for lang in ("es", "de", "fr"):
-        assert kept.filter(F.col("lang") == lang).count() == docs.filter(
-            F.col("lang") == lang
-        ).count()
+        split_column("doc_id", {"train": 0.5, "test": 0.4})
 
 
 def _rows(df):
@@ -96,11 +79,7 @@ def test_rollup_cascade_rejects_bad_resolution(spark, sf_dir):
 
 
 def test_split_column_empty_splits_raises():
-    import pytest as _pytest
-
-    from emulating_hadoop_with_mpi_spark.functions.sampling import split_column
-
-    with _pytest.raises(ValueError, match="non-empty"):
+    with pytest.raises(ValueError, match="non-empty"):
         split_column("doc_id", {})
 
 

@@ -9,9 +9,8 @@ from emulating_hadoop_with_mpi_spark.sources.datagen import generate_matrix_nump
 from emulating_hadoop_with_mpi_spark.sources.matrix import coo_to_numpy, matrix_coo_from_numpy
 from emulating_hadoop_with_mpi_spark.sources.sinks import (
     read_kv_text,
-    write_csv,
     write_kv_text,
-    write_parquet,
+    write_table,
 )
 
 
@@ -29,7 +28,7 @@ def test_kv_text_roundtrip_reference_pipeline(spark, tmp_path):
 
 def test_parquet_partitioned_roundtrip_and_pruning(spark, tables, tmp_path):
     out = str(tmp_path / "li_parquet")
-    write_parquet(tables["lineitem"], out, partition_by=["l_returnflag"])
+    write_table(tables["lineitem"], out, partition_by=["l_returnflag"])
     back = spark.read.parquet(out)
     assert back.count() == tables["lineitem"].count()
     # partition pruning: a filter on the partition column becomes a
@@ -42,8 +41,8 @@ def test_parquet_partitioned_roundtrip_and_pruning(spark, tables, tmp_path):
 
 def test_csv_roundtrip(spark, tables, tmp_path):
     out = str(tmp_path / "nation_csv")
-    write_csv(tables["nation"], out)
-    back = spark.read.option("header", "true").option("inferSchema", "true").csv(out)
+    write_table(tables["nation"], out, fmt="csv")
+    back = spark.read.schema(tables["nation"].schema).csv(out)
     assert sorted(r.n_nationkey for r in back.collect()) == sorted(
         r.n_nationkey for r in tables["nation"].collect()
     )
@@ -83,8 +82,6 @@ def test_write_table_parquet_roundtrip(spark, tmp_path):
     """The format-parameterized sink's always-available path: partitioned
     parquet round-trip (the delta/iceberg branches are probed with
     jar-resolution + offline skip in test_lakehouse_connector.py)."""
-    from emulating_hadoop_with_mpi_spark.sources.sinks import write_table
-
     df = spark.range(50).selectExpr("id", "id % 5 AS grp")
     out = str(tmp_path / "t")
     write_table(df, out, fmt="parquet", partition_by=["grp"])

@@ -1,10 +1,12 @@
-"""Skew utilities: salting preserves join semantics on a hot key."""
+"""Skew utilities: salting preserves join semantics on a hot key, and a
+plain aggregate needs no salting."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from emulating_hadoop_with_mpi_spark.operators.skew import salted_join
+from emulating_hadoop_with_mpi_spark.plans.inspect import executed_plan
 
 
 def _skewed(spark, n=20000):
@@ -29,24 +31,41 @@ def test_salted_join_equals_plain_join(spark):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_salted_agg_equals_plain_groupby(spark):
-    from emulating_hadoop_with_mpi_spark.operators.skew import salted_agg
+def _shuffle_records_written(spark, df) -> int:
+    """Shuffle records written by the jobs that collecting ``df`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("test_skew.partials", "hot-key partial aggregate")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    return sum(
+        store.lastStageAttempt(sid).shuffleWriteRecords()
+        for jid in tracker.getJobIdsForGroup("test_skew.partials")
+        for sid in tracker.getJobInfo(jid).stageIds
+    )
 
-    big = _skewed(spark).withColumn("n_rows", F.lit(1))
-    plain = big.groupBy("k").agg(
-        F.sum("payload").alias("payload"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("payload").alias("min_p"),
-        F.max("payload").alias("max_p"),
+
+def test_plain_groupby_partial_aggregates_hot_key(spark):
+    """Why there is no salted aggregate: the plain groupBy plans a partial
+    HashAggregate below its Exchange, so a hot key of a decomposable
+    aggregate (sum/count/min/max) reaches its final task as at most one
+    row per map partition.  Salting the key would add a shuffle and buy
+    nothing."""
+    big = _skewed(spark)
+    aggs = (F.sum("payload"), F.count(F.lit(1)), F.min("payload"), F.max("payload"))
+    final, below_exchange = executed_plan(big.groupBy("k").agg(*aggs)).split(
+        "Exchange hashpartitioning(k", 1
     )
-    salted = salted_agg(
-        big.withColumn("min_p", F.col("payload")).withColumn("max_p", F.col("payload")),
-        "k",
-        {"payload": "sum", "n_rows": "count", "min_p": "min", "max_p": "max"},
-    )
-    assert sorted(map(tuple, plain.select("k", "payload", "n_rows", "min_p", "max_p").collect())) == sorted(
-        map(tuple, salted.select("k", "payload", "n_rows", "min_p", "max_p").collect())
-    )
+    assert "partial_" not in final
+    for fn in ("partial_sum", "partial_count", "partial_min", "partial_max"):
+        assert fn in below_exchange
+    hot = big.filter(F.col("k") == 7)
+    map_partitions = hot.rdd.getNumPartitions()
+    written = _shuffle_records_written(spark, hot.groupBy("k").agg(*aggs))
+    assert 1 <= written <= map_partitions < hot.count()
 
 
 def test_salted_join_left_keeps_unmatched(spark):

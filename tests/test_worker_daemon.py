@@ -134,3 +134,46 @@ def test_extra_conf_overrides_worker_conf(monkeypatch):
     )
     assert conf["spark.python.daemon.module"] == "pyspark.daemon"
     assert conf["spark.executorEnv.PYTHONPATH"] == "/x"
+
+
+def test_master_none_keeps_the_launch_master(monkeypatch):
+    """A plain ``python`` launch gets ``local[$SPARK_GRAFT_CPUS]`` and
+    ``worker_daemon``; a launch master (spark-submit's) is kept, and the
+    worker settings follow it."""
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    conf = _built_conf(monkeypatch)
+    assert conf["spark.master"] == "local[3]"
+    assert conf["spark.python.daemon.module"] == "emulating_hadoop_with_mpi_spark.worker_daemon"
+    monkeypatch.setattr(session, "_launch_master", lambda: "spark://host:7077")
+    conf = _built_conf(monkeypatch)
+    assert conf["spark.master"] == "spark://host:7077"
+    assert "spark.python.daemon.module" not in conf
+    assert _built_conf(monkeypatch, master="local[2]")["spark.master"] == "local[2]"
+
+
+def test_spark_submit_master_is_honoured(tmp_path):
+    """``spark-submit --master local[1]`` on a script that calls
+    ``get_spark()`` runs on ``local[1]``, whatever ``SPARK_GRAFT_CPUS``
+    says, and its Python workers still start from ``worker_daemon``."""
+    script = tmp_path / "submitted.py"
+    script.write_text(
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from emulating_hadoop_with_mpi_spark import get_spark\n"
+        "spark = get_spark(app_name='submitted')\n"
+        "print('MASTER=' + spark.sparkContext.master)\n"
+        "print('DAEMON=' + spark.conf.get('spark.python.daemon.module', ''))\n"
+        "spark.stop()\n"
+    )
+    import pyspark
+
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    submit = os.path.join(spark_home, "bin", "spark-submit")
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "PYSPARK_PYTHON": sys.executable,
+           "PYSPARK_DRIVER_PYTHON": sys.executable}
+    out = subprocess.run(
+        [submit, "--master", "local[1]", str(script)],
+        capture_output=True, text=True, env=env, timeout=300, check=True,
+    ).stdout.splitlines()
+    assert "MASTER=local[1]" in out, out
+    assert "DAEMON=emulating_hadoop_with_mpi_spark.worker_daemon" in out, out
